@@ -93,8 +93,8 @@ def test_prom_inf_nan_values(spark):
 
 
 def test_prom_poison_lines_do_not_kill_batch(spark):
-    # unterminated quote, garbage value, missing value, empty name —
-    # each is dropped; the two valid lines land
+    # unterminated quote, garbage value, missing value, empty name,
+    # null line — each is dropped; the two valid lines land
     _, out = _prom(
         spark,
         [
@@ -104,6 +104,7 @@ def test_prom_poison_lines_do_not_kill_batch(spark):
             'ok{a="b"} 2',
             "{} 5 5",
             'novalue{a="b"}',
+            None,
         ],
     )
     got = sorted((r["name"], r["value"]) for r in out)

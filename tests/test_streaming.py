@@ -642,11 +642,19 @@ _STATEFUL_CFG_KW = dict(
 )
 
 
-@pytest.mark.slow
-def test_streamaggr_microbatch_replay_equals_batch(spark, tmp_path):
+@pytest.mark.parametrize(
+    "extra_kw",
+    [
+        {},
+        {"dedup_interval_ms": 50_000, "ignore_first_sample_interval_ms": 100_000},
+    ],
+    ids=["plain", "dedup_warmup"],
+)
+def test_streamaggr_microbatch_replay_equals_batch(spark, tmp_path, extra_kw):
     """The foreachBatch stateful engine replayed in 3 micro-batches must
     reproduce aggregate_batch exactly — counter resets, staleness reset
-    and cross-window running totals included."""
+    and cross-window running totals included, with and without dedup
+    and the first-sample warmup."""
     from victoriametrics_spark.streaming.streamaggr import (
         MicroBatchCounterAggregator,
         StreamAggrConfig,
@@ -655,7 +663,7 @@ def test_streamaggr_microbatch_replay_equals_batch(spark, tmp_path):
 
     rows = _stateful_fixture_rows()
     df = spark.createDataFrame(rows, SAMPLE_SCHEMA)
-    cfg = StreamAggrConfig(**_STATEFUL_CFG_KW)
+    cfg = StreamAggrConfig(**_STATEFUL_CFG_KW, **extra_kw)
     want = _by_name(aggregate_batch(df, cfg))
 
     agg = MicroBatchCounterAggregator(spark, cfg, str(tmp_path / "sa_state"))
@@ -666,68 +674,6 @@ def test_streamaggr_microbatch_replay_equals_batch(spark, tmp_path):
         b = df.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
         got.update(_by_name(agg.process(b)))
     got.update(_by_name(agg.flush_all()))
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-12), k
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs the google.protobuf runtime "
-    "(absent in this container; the microbatch engine above covers the "
-    "semantics)",
-)
-def test_streamaggr_stateful_streaming_replay_equals_batch(spark, tmp_path):
-    """transformWithStateInPandas counters replayed over a file source
-    must reproduce aggregate_batch exactly."""
-    from victoriametrics_spark.streaming.streamaggr import (
-        StreamAggrConfig,
-        aggregate_batch,
-        aggregate_stream_stateful,
-    )
-
-    rows = _stateful_fixture_rows()
-    # watermark pusher: unrelated name far in the future so every real
-    # window's event-time timer fires during the availableNow replay
-    rows.append(("__wm__", {}, 10_000_000, 0.0, False))
-
-    df = spark.createDataFrame(rows, SAMPLE_SCHEMA)
-    cfg = StreamAggrConfig(**_STATEFUL_CFG_KW)
-    want = {
-        k: v
-        for k, v in _by_name(aggregate_batch(df, cfg)).items()
-        if not k[0].startswith("__wm__")
-    }
-
-    src = str(tmp_path / "sa_stateful_src")
-    df.write.parquet(src)
-    sdf = spark.readStream.schema(SAMPLE_SCHEMA).parquet(src)
-    out = aggregate_stream_stateful(sdf, cfg)
-    chk = str(tmp_path / "sa_stateful_chk")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sa_stateful")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got_df = spark.sql("select * from sa_stateful")
-    got = {
-        k: v
-        for k, v in _by_name(got_df).items()
-        if not k[0].startswith("__wm__")
-    }
     assert set(got) == set(want)
     for k in want:
         assert got[k] == pytest.approx(want[k], rel=1e-12), k
@@ -945,79 +891,6 @@ def test_relabel_label_references_in_replacement(spark, sample_df):
     ).collect()
     got = sorted(r["labels"]["combo"] for r in out)
     assert got == ["api@h1:9090", "db@h2:9090"]
-
-
-@pytest.mark.slow
-def test_streamaggr_pandas_state_replay_equals_batch(spark, tmp_path):
-    """applyInPandasWithState counters (aggregate_stream_pandas_state —
-    the stateful-streaming engine that runs WITHOUT the protobuf
-    runtime TWS needs) replayed over a file source in 3 micro-batches
-    must reproduce aggregate_batch exactly: counter resets, staleness
-    reset, cross-window running totals. Watermark-pusher sentinels go
-    to EVERY group (flushing happens on the group's next invocation);
-    their own windows never flush, so they don't contaminate outputs."""
-    import os
-    import time as _time
-
-    from victoriametrics_spark.streaming.streamaggr import (
-        StreamAggrConfig,
-        aggregate_batch,
-        aggregate_stream_pandas_state,
-    )
-
-    rows = _stateful_fixture_rows()
-    df = spark.createDataFrame(rows, SAMPLE_SCHEMA)
-    cfg = StreamAggrConfig(**_STATEFUL_CFG_KW)
-    want = _by_name(aggregate_batch(df, cfg))
-
-    src = str(tmp_path / "sa_pds_src")
-    os.makedirs(src)
-
-    def write_batch(batch_rows, mtime_bump):
-        b = spark.createDataFrame(batch_rows, SAMPLE_SCHEMA)
-        b.coalesce(1).write.mode("append").parquet(src)
-        # space out mtimes so the file source replays in write order
-        now = _time.time() + mtime_bump
-        for f in os.listdir(src):
-            if f.endswith(".parquet"):
-                p = os.path.join(src, f)
-                if os.path.getmtime(p) > now - 0.5:
-                    os.utime(p, (now, now))
-
-    sent1 = [
-        ("m", {"job": "a"}, 10_000_000, 0.0, False),
-        ("m", {"job": "b"}, 10_000_000, 0.0, False),
-    ]
-    sent2 = [
-        ("m", {"job": "a"}, 10_350_000, 0.0, False),
-        ("m", {"job": "b"}, 10_350_000, 0.0, False),
-    ]
-    write_batch(rows, 0)
-    _time.sleep(1.1)
-    write_batch(sent1, 2)
-    _time.sleep(1.1)
-    write_batch(sent2, 4)
-
-    sdf = (
-        spark.readStream.schema(SAMPLE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = aggregate_stream_pandas_state(sdf, cfg)
-    chk = str(tmp_path / "sa_pds_chk")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sa_pds")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = _by_name(spark.sql("select * from sa_pds"))
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-12), k
 
 
 def test_sessionize_window_streaming(spark, tmp_path):

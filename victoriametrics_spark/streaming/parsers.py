@@ -590,17 +590,14 @@ def parse_influx(
     return _finish(both, extra=extra)
 
 
-# ---- single-pass prometheus-text decode (r14) -----------------------
-# The Catalyst cascade below evaluates the quote-aware brace regex 4x
-# per line (rlike + 3 regexp_extract groups) plus the pair/validation/
-# unescape passes; this batched decode runs every regex ONCE per line
-# in compiled Python (patterns compiled at import, once per worker —
-# guide §4.5), emitting the raw (name, keys, vals, val, ts) pieces.
-# Value/timestamp parsing and the labels map stay in Catalyst so
-# try_cast semantics are bit-identical. Measured on 400k adversarial
-# escape-bearing lines: 4.9s -> 1.4s min-of-3, identical rows incl.
-# poison/quoted-name/comment cases (exceptAll 0/0); the upstream
-# 232-case parser corpus and the escape suite pin equivalence.
+# ---- single-pass prometheus-text decode -----------------------------
+# Every regex runs ONCE per line in compiled Python (patterns compiled
+# once per worker), emitting the raw (name, keys, vals, val, ts) pieces;
+# value/timestamp parsing and the labels map stay in Catalyst so
+# try_cast semantics match the other dialects. A pure-Catalyst decode
+# evaluates the quote-aware brace regex 4x per line and measured slower
+# on both escape-heavy and escape-free input. The upstream 232-case
+# parser corpus and the escape suite pin this decode's behaviour.
 # re.A pins \s/\S to ASCII like Java's regex.
 _PROM_BODY = r'((?:[^"}]|"(?:[^"\\]|\\.)*")*)'
 _PROM_BRACED: dict | None = None  # compiled-pattern table, built lazily
@@ -635,16 +632,16 @@ def _prom_patterns():
 
 
 def _prom_unescape(s: str) -> str:
-    """unescapeValue (parser.go:419-453) — identical to _unescape_prom's
-    split-on-double-backslash algorithm, in Python."""
+    """unescapeValue (parser.go:419-453): split on double backslash,
+    unescape quote and newline per piece, rejoin; other escapes stay."""
     pieces = s.split("\\\\")
     return "\\".join(
         p.replace('\\"', '"').replace("\\n", "\n") for p in pieces
     )
 
 
-def _prom_decode_line(raw: str, P: dict):
-    l = P["ws"].sub("", raw)
+def _prom_decode_line(raw: str | None, P: dict):
+    l = P["ws"].sub("", raw or "")  # a null line drops like a blank one
     if l == "" or l.startswith("#"):
         return None
     m = P["braced"].match(l)
@@ -701,14 +698,11 @@ def _prom_decode_batches(it):
 
 
 def parse_prometheus_text(lines: DataFrame, default_ts_ms: int) -> DataFrame:
-    """Single-pass batched decode (see _prom_decode_batches) + Catalyst
-    value/timestamp/labels finishing. Set ``SPARK_GRAFT_PROM_CATALYST=1``
-    to force the pure-Catalyst cascade (kept verbatim below as the
-    equivalence reference and operational fallback)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PROM_CATALYST"):
-        return _parse_prometheus_text_catalyst(lines, default_ts_ms)
+    """Prometheus exposition text ``metric{a="b",...} value [ts]``, incl.
+    the UTF-8 ``{"any name", "l"="v"}`` form; comments, blank and null
+    lines are skipped and a malformed line is dropped, never fatal.
+    Each line is decoded once (``_prom_decode_batches``, Arrow
+    ``mapInPandas``); value, timestamp and labels finish in Catalyst."""
     l = _wstrip(F.col("value"))
     data = lines.select(l.alias("value"))
     decoded = data.mapInPandas(
@@ -739,150 +733,6 @@ def parse_prometheus_text(lines: DataFrame, default_ts_ms: int) -> DataFrame:
             _try_double(F.col("val")).alias("value"),
         )
     )
-
-
-def _parse_prometheus_text_catalyst(
-    lines: DataFrame, default_ts_ms: int
-) -> DataFrame:
-    """Prometheus exposition text: ``metric{a="b",...} value [ts_ms]``
-    (federate/scrape format; comments and blank lines skipped), plus the
-    UTF-8 names syntax ``{"any name", "any label"="v"} value [ts_ms]``
-    (Prometheus 3.x / VM: quoted metric and label names inside the
-    braces).
-
-    Label tokenization is quoted-string-aware (parser.go:286-306
-    unmarshalQuotedString): a ``}`` or ``,`` inside a quoted label
-    value — routine in HTTP paths and error messages — does not
-    truncate the label block, and ``\\\"``/``\\\\``/``\\n`` escapes
-    unescape per parser.go:419-453 (an invalid escape like the
-    real-world ``domain\\somelogin`` stays literal). All in Catalyst:
-    the label block is matched with a quote-aware regex, pairs are
-    pulled with regexp_extract_all, and unescaping is a
-    split-on-``\\\\`` / replace / rejoin over array columns."""
-    l = _wstrip(F.col("value"))
-    data = lines.select(l.alias("value")).filter((l != "") & ~l.startswith("#"))
-    v = F.col("value")
-
-    # quote-aware label block: "..." spans may contain } , and \" pairs
-    body_re = r'((?:[^"}]|"(?:[^"\\]|\\.)*")*)'
-    braced_pat = r"^([^{\s]*)\s*\{" + body_re + r"\}\s*(.*)$"
-    braced = v.rlike(r'^[^{\s]*\s*\{(?:[^"}]|"(?:[^"\\]|\\.)*")*\}')
-    name_classic = F.regexp_extract(v, braced_pat, 1)
-    body = F.regexp_extract(v, braced_pat, 2)
-    rest_braced = F.regexp_extract(v, braced_pat, 3)
-
-    # pairs: key="value" | "key"="value" (whitespace-tolerant)
-    pair_pat = r'("(?:[^"\\]|\\.)*"|[^=,\s"]+)\s*=\s*"((?:[^"\\]|\\.)*)"'
-    keys = F.regexp_extract_all(body, F.lit(pair_pat), F.lit(1))
-    vals = F.regexp_extract_all(body, F.lit(pair_pat), F.lit(2))
-    # UTF-8 form: a bare quoted element (not followed by =) is the name
-    qname_pat = r'(?:^|,)\s*"((?:[^"\\]|\\.)*)"\s*(?=,|$)'
-    name_quoted = _unescape_prom(F.regexp_extract(body, qname_pat, 1))
-    # STRICT body validation (unmarshalTags, parser.go:309-392): the
-    # label block must be a comma-separated sequence of
-    # key="value" / "key"="value" / "metric name" elements — a bare
-    # word, an unquoted value, a colon separator, or a missing comma
-    # errors the line; a trailing comma is fine. At most ONE quoted
-    # metric name, and none when the classic name is set ("metric name
-    # already set" errors).
-    qs = r'"(?:[^"\\]|\\.)*"'
-    elem = rf'(?:{qs}\s*=\s*{qs}|[^=,"]*=\s*{qs}|{qs})'
-    body_ok = body.rlike(
-        rf"^\s*(?:{elem}\s*(?:,\s*{elem}\s*)*(?:,\s*)?)?$"
-    )
-    n_qnames = F.size(
-        F.regexp_extract_all(body, F.lit(qname_pat), F.lit(1))
-    )
-    name_ok = body_ok & (
-        (n_qnames == 0)
-        | ((n_qnames == 1) & (name_classic == ""))
-    )
-
-    labels = F.map_from_arrays(
-        F.transform(
-            keys,
-            lambda k: _unescape_prom(F.regexp_replace(k, r'^"|"$', "")),
-        ),
-        F.transform(vals, _unescape_prom),
-    )
-    name_b = F.when(name_classic != "", name_classic).otherwise(name_quoted)
-    # value/timestamp tail: everything after the first '#' is a
-    # trailing comment — OpenMetrics exemplars are tolerated this way
-    # (parser.go:117-123,191 skipTrailingComment)
-    rest_b = F.trim(F.regexp_replace(rest_braced, r"#.*$", ""))
-    rest_nb = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(v, r"^\S+\s*", ""), r"#.*$", ""
-        )
-    )
-    toks_b = F.split(rest_b, r"\s+")
-    toks_p = F.split(rest_nb, r"\s+")
-    # a line containing { that does NOT match the quote-aware brace
-    # pattern is malformed (unterminated label block) — reference
-    # errors it (parser.go unmarshalTags "missing value for tag"),
-    # it must not fall back to the bare-metric form
-    name = (
-        F.when(braced & name_ok, name_b)
-        .when(braced, F.lit(None).cast("string"))
-        .when(~v.contains("{"), F.regexp_extract(v, r"^(\S+)", 1))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    val = F.coalesce(
-        F.when(braced, F.try_element_at(toks_b, F.lit(1))).otherwise(
-            F.try_element_at(toks_p, F.lit(1))
-        ),
-        F.lit(""),
-    )
-    ts_str = F.coalesce(
-        F.when(braced, F.try_element_at(toks_b, F.lit(2))).otherwise(
-            F.try_element_at(toks_p, F.lit(2))
-        ),
-        F.lit(""),
-    )
-    # junk after the timestamp errors the line: the reference parses the
-    # ENTIRE tail after the value as one timestamp token, so
-    # `m{a="b"} 1 2 3` fails fastfloat.Parse("2 3")
-    # (parser.go:206-229); same rule as the influx fast path's
-    # max-token check
-    n_tail = F.when(braced, F.size(toks_b)).otherwise(F.size(toks_p))
-    ts_str = F.when(n_tail > 2, F.lit("junk")).otherwise(ts_str)
-    # timestamps parse as floats; values in [-2^31, 2^31) look like
-    # OpenMetrics Unix SECONDS and scale to ms (parser.go:218-229)
-    tsd = _try_double(ts_str)
-    ts = (
-        F.when(ts_str == "", F.lit(default_ts_ms).cast("long"))
-        .when(tsd.isNull(), F.lit(None).cast("long"))
-        .when(
-            (tsd >= -2147483648.0) & (tsd < 2147483648.0),
-            (tsd * 1000).try_cast("long"),
-        )
-        .otherwise(tsd.try_cast("long"))
-    )
-    return _finish(
-        data.select(
-            name.alias("name"),
-            F.when(braced, labels)
-            .otherwise(F.create_map().cast("map<string,string>"))
-            .alias("labels"),
-            ts.alias("ts"),
-            _try_double(val).alias("value"),
-        )
-    )
-
-
-def _unescape_prom(c: Column) -> Column:
-    """unescapeValue (prometheus/parser.go:419-453): ``\\\\``→``\\``,
-    ``\\\"``→``\"``, ``\\n``→newline, any other ``\\x`` stays literal.
-    Implemented as split-on-double-backslash → per-piece replace →
-    rejoin, which gets the 3-backslash edge cases right without a UDF."""
-    pieces = F.split(c, r"\\\\", -1)
-    pieces = F.transform(
-        pieces,
-        lambda p: F.regexp_replace(
-            F.regexp_replace(p, r'\\"', '"'), r"\\n", "\n"
-        ),
-    )
-    return F.array_join(pieces, "\\")
 
 
 def parse_vm_jsonl(lines: DataFrame) -> DataFrame:

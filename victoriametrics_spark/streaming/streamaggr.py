@@ -3,7 +3,7 @@ lib/streamaggr: tumbling-interval aggregation of the sample stream with
 VM's output set, last-wins deduplication, and counter state with a
 staleness TTL.
 
-Two execution modes share one config and one semantics definition:
+Three execution modes share one config and one semantics definition:
 
 - ``aggregate_batch(df, cfg)`` — the batch formulation (micro-batch
   backfill / oracle-checkable): tumbling windows are ``floor(ts/interval)``
@@ -14,6 +14,10 @@ Two execution modes share one config and one semantics definition:
   aggregates over ``window(ts, interval)`` with a watermark for late
   data (VM drops samples older than the current flush window,
   streamaggr.go flush logic; the watermark is the compat knob).
+  Stateless outputs only.
+- ``MicroBatchCounterAggregator(spark, cfg, state_dir)`` — the counter
+  outputs (total/increase/rate_*) over a stream via foreachBatch, with
+  per-series state kept as parquet tables between micro-batches.
 
 Output series naming follows the reference exactly
 (streamaggr.go:627-635):
@@ -348,9 +352,8 @@ def aggregate_stream(
     values trade latency for late-data tolerance.
 
     Counter outputs (total/increase/rate_*) need per-series state with a
-    staleness TTL → transformWithStateInPandas; the batch formulation in
-    ``aggregate_batch`` defines their semantics and serves micro-batch
-    (foreachBatch) deployments.
+    staleness TTL: ``aggregate_batch`` defines their semantics and
+    ``MicroBatchCounterAggregator`` runs them over a stream (foreachBatch).
     """
     stateless = [o for o in cfg.outputs if o in STATELESS_OUTPUTS]
     if not stateless:
@@ -382,470 +385,10 @@ def aggregate_stream(
     return out
 
 
-# ------------------------------------------------------------------ round 6:
-# TRUE-streaming stateful counters via transformWithStateInPandas.
-# aggregate_batch above DEFINES the semantics; this is the same math with
-# per-series state held by the Spark state store instead of a lag window:
-# lastValue/lastTs per series (total.go:34-51 lastValue map), staleness
-# reset (streamaggr.go:175-182), warmup deadline
-# (ignoreFirstSampleDeadline), per-interval flush driven by EVENT-TIME
-# timers, and cumulative totals carried across flushes in a ValueState.
-
-_TWS_OUTPUT_SCHEMA = (
-    "name string, labels_json string, ts long, value double"
-)
-
-
-def _make_counter_processor(cfg: StreamAggrConfig, outputs: list[str]):
-    """Build the StatefulProcessor class for the configured outputs.
-
-    State layout (all per (name, group-labels) grouping key):
-    - ``series``  MapState  sk -> (last_ts, last_value)
-    - ``win``     MapState  w  -> (inc, n_inc, inc_keep, n_keep, ss,
-                                   rate_sum, nser)
-    - ``wser``    MapState  "w|sk" -> 1  (distinct-series markers)
-    - ``totals``  ValueState (total, total_prom, ss_total)
-    - ``meta``    ValueState (t0, labels_json)
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    iv = cfg.interval_ms
-    staleness = cfg.staleness_interval_ms or 0
-    warmup = cfg.ignore_first_sample_interval_ms or 0
-    out_names = {o: None for o in outputs}  # order-preserving
-    sfx = cfg.suffix()
-    keep_names = cfg.keep_metric_names
-
-    class CounterProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._series = handle.getMapState(
-                "series", "sk string", "last_ts long, last_value double"
-            )
-            self._win = handle.getMapState(
-                "win",
-                "w long",
-                "inc double, n_inc long, inc_keep double, n_keep long, "
-                "ss double, rate_sum double, nser long",
-            )
-            self._wser = handle.getMapState("wser", "k string", "one int")
-            self._totals = handle.getValueState(
-                "totals", "total double, total_prom double, ss_total double"
-            )
-            self._meta = handle.getValueState(
-                "meta", "t0 long, labels_json string"
-            )
-            self._handle = handle
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            batch = pd.concat(list(rows), ignore_index=True)
-            batch = batch.sort_values("ts", kind="mergesort")
-            meta = self._meta.get() if self._meta.exists() else None
-            t0 = meta[0] if meta else None
-            labels_json = meta[1] if meta else None
-            for sk, ts, v, lj in zip(
-                batch["__sk"], batch["ts"], batch["value"], batch["labels_json"]
-            ):
-                ts, v = int(ts), float(v)
-                if t0 is None:
-                    t0 = ts
-                if labels_json is None:
-                    labels_json = lj
-                w = ts - ts % iv
-                prev = (
-                    self._series.getValue(sk)
-                    if self._series.containsKey(sk)
-                    else None
-                )
-                pos_dv = None
-                dt_ms = None
-                if prev is not None:
-                    lts, lv = int(prev[0]), float(prev[1])
-                    if staleness and ts - lts > staleness:
-                        prev = None  # staleness reset → first sample again
-                    else:
-                        pos_dv = v - lv if v >= lv else v
-                        dt_ms = ts - lts
-                if prev is None:
-                    contrib_keep = v if (warmup == 0 or ts >= t0 + warmup) else None
-                else:
-                    contrib_keep = pos_dv
-                self._series.updateValue(sk, (ts, v))
-
-                cur = (
-                    self._win.getValue(w)
-                    if self._win.containsKey(w)
-                    else (0.0, 0, 0.0, 0, 0.0, 0.0, 0)
-                )
-                inc, n_inc, inc_keep, n_keep, ss, rate_sum, nser = cur
-                if pos_dv is not None:
-                    inc += pos_dv
-                    n_inc += 1
-                    if dt_ms and dt_ms > 0:
-                        rate_sum += pos_dv / (dt_ms / 1000.0)
-                    marker = f"{w}|{sk}"
-                    if not self._wser.containsKey(marker):
-                        self._wser.updateValue(marker, (1,))
-                        nser += 1
-                if contrib_keep is not None:
-                    inc_keep += contrib_keep
-                    n_keep += 1
-                ss += v
-                self._win.updateValue(
-                    w, (inc, n_inc, inc_keep, n_keep, ss, rate_sum, nser)
-                )
-                self._handle.registerTimer(w + iv)
-            self._meta.update((t0, labels_json))
-            return iter(())
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            import pandas as pd
-
-            expiry = expired_timer_info.getExpiryTimeInMs()
-            ready = sorted(
-                w for w in (k[0] for k in self._win.keys()) if w + iv <= expiry
-            )
-            if not ready:
-                return iter(())
-            tot = (
-                self._totals.get()
-                if self._totals.exists()
-                else (0.0, 0.0, 0.0)
-            )
-            total, total_prom, ss_total = tot
-            meta = self._meta.get()
-            labels_json = meta[1] if meta else "{}"
-            name = key[0]
-            out = []
-
-            def emit(output, w_end, value):
-                if value is None:
-                    return
-                out.append((self._out_name(name, output), labels_json, w_end, float(value)))
-
-            for w in ready:
-                inc, n_inc, inc_keep, n_keep, ss, rate_sum, nser = (
-                    self._win.getValue(w)
-                )
-                total += inc_keep
-                total_prom += inc
-                ss_total += ss
-                w_end = w + iv
-                for o in out_names:
-                    if o == "total":
-                        emit(o, w_end, total)
-                    elif o == "total_prometheus":
-                        emit(o, w_end, total_prom)
-                    elif o == "increase":
-                        emit(o, w_end, inc_keep if n_keep else None)
-                    elif o == "increase_prometheus":
-                        emit(o, w_end, inc if n_inc else None)
-                    elif o == "sum_samples_total":
-                        emit(o, w_end, ss_total)
-                    elif o == "rate_sum":
-                        emit(o, w_end, rate_sum if n_inc else None)
-                    elif o == "rate_avg":
-                        emit(o, w_end, rate_sum / nser if nser else None)
-                self._win.removeKey(w)
-                for (mk,) in list(self._wser.keys()):
-                    if mk.startswith(f"{w}|"):
-                        self._wser.removeKey(mk)
-            self._totals.update((total, total_prom, ss_total))
-            yield pd.DataFrame(
-                out, columns=["name", "labels_json", "ts", "value"]
-            )
-
-        @staticmethod
-        def _out_name(name: str, output: str) -> str:
-            return name if keep_names else f"{name}{sfx}{output}"
-
-        def close(self) -> None:
-            pass
-
-    return CounterProcessor
-
-
-def aggregate_stream_stateful(
-    sdf: DataFrame,
-    cfg: StreamAggrConfig,
-    ts_col: str = "ts",
-    allowed_lateness_ms: int = 0,
-) -> DataFrame:
-    """Structured-Streaming counters (total / increase / rate_* family)
-    with REAL per-series state: transformWithStateInPandas keyed by
-    (name, group-labels), event-time timers flush each tumbling interval
-    once the watermark passes its end, cumulative totals survive across
-    flushes in the state store. Semantics match ``aggregate_batch`` row
-    for row on in-order replay (the pytest asserts byte-equality), with
-    one documented divergence: the warmup deadline (ignore_first_sample)
-    is anchored per aggregation group, not at the global batch minimum —
-    a stream has no global minimum."""
-    stateful = [o for o in cfg.outputs if o in STATEFUL_OUTPUTS]
-    if not stateful:
-        raise ValueError("aggregate_stream_stateful: no stateful outputs in cfg")
-    if cfg.dedup_interval_ms:
-        sdf = dedup_samples_stream(sdf, cfg.dedup_interval_ms)
-
-    d = (
-        sdf.withColumn("__event_time", F.timestamp_millis(F.col(ts_col)))
-        .withWatermark(
-            "__event_time", f"{max(allowed_lateness_ms, 0)} milliseconds"
-        )
-        .withColumn("__sk", series_key(F.col("name"), F.col("labels")))
-        .withColumn("__glabels", _group_labels(cfg))
-        .withColumn("__gkey", canonical_labels_str(F.col("__glabels")))
-        .withColumn("__labels_json", F.to_json(F.col("__glabels")))
-        .select(
-            "name",
-            "__gkey",
-            F.col("__sk"),
-            F.col("ts"),
-            F.col("value"),
-            F.col("__labels_json").alias("labels_json"),
-            "__event_time",
-        )
-    )
-    proc = _make_counter_processor(cfg, stateful)
-    out = d.groupBy("name", "__gkey").transformWithStateInPandas(
-        statefulProcessor=proc(),
-        outputStructType=_TWS_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-    return out.select(
-        F.col("name"),
-        F.from_json(F.col("labels_json"), "map<string,string>").alias("labels"),
-        F.col("ts"),
-        F.col("value"),
-    )
-
-
-def aggregate_stream_pandas_state(
-    sdf: DataFrame,
-    cfg: StreamAggrConfig,
-    ts_col: str = "ts",
-    allowed_lateness_ms: int = 0,
-) -> DataFrame:
-    """Structured-Streaming counters over ``applyInPandasWithState`` —
-    the stateful-streaming engine that RUNS in this environment (the
-    transformWithStateInPandas variant above needs the protobuf runtime
-    in Spark's Python state workers, absent here; this API's state
-    channel is protobuf-free and verified working, so the stateful
-    streaming path is no longer environment-blocked).
-
-    Identical per-group computation to the TWS processor
-    (_make_counter_processor): per-series (last_ts, last_value) carries
-    positive-delta counter semantics across micro-batches with the
-    staleness reset, tumbling ``interval_ms`` windows accumulate
-    (inc, inc_keep, ss, rate_sum, nser), and a window flushes on the
-    first batch whose event-time watermark passed its end — emitting
-    the configured total/increase/rate outputs with cumulative totals
-    surviving in the state store. State is one GroupState per
-    (name, group-labels) key; the series/window maps ride as JSON
-    strings inside it (GroupState schemas are flat rows; the maps are
-    group-local and presentation-sized — VM itself keeps exactly this
-    per-output in-memory map, streamaggr.go:175-209).
-
-    Divergence from the batch engine, documented like the TWS one: the
-    warmup deadline (ignore_first_sample) anchors per aggregation
-    group, not at the global batch minimum."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    stateful = [o for o in cfg.outputs if o in STATEFUL_OUTPUTS]
-    if not stateful:
-        raise ValueError(
-            "aggregate_stream_pandas_state: no stateful outputs in cfg"
-        )
-    if cfg.dedup_interval_ms:
-        sdf = dedup_samples_stream(sdf, cfg.dedup_interval_ms)
-
-    d = (
-        sdf.withColumn("__event_time", F.timestamp_millis(F.col(ts_col)))
-        .withWatermark(
-            "__event_time", f"{max(allowed_lateness_ms, 0)} milliseconds"
-        )
-        .withColumn("__sk", series_key(F.col("name"), F.col("labels")))
-        .withColumn("__glabels", _group_labels(cfg))
-        .withColumn("__gkey", canonical_labels_str(F.col("__glabels")))
-        .withColumn("__labels_json", F.to_json(F.col("__glabels")))
-        .select(
-            "name", "__gkey", "__sk", F.col(ts_col).alias("ts"),
-            "value", F.col("__labels_json").alias("labels_json"),
-            "__event_time",
-        )
-    )
-
-    iv = cfg.interval_ms
-    staleness = cfg.staleness_interval_ms or 0
-    warmup = cfg.ignore_first_sample_interval_ms or 0
-    out_names = list(stateful)
-    sfx = cfg.suffix()
-    keep_names = cfg.keep_metric_names
-    state_schema = (
-        "t0 long, labels_json string, total double, total_prom double, "
-        "ss_total double, series_json string, wins_json string"
-    )
-
-    def fn(key, pdfs, state):
-        import json as _json
-
-        import pandas as pd
-
-        if state.exists:
-            t0, labels_json, total, total_prom, ss_total, sj, wj = state.get
-            series = {k: tuple(v) for k, v in _json.loads(sj).items()}
-            wins = {int(k): v for k, v in _json.loads(wj).items()}
-        else:
-            t0, labels_json, total, total_prom, ss_total = (
-                None, None, 0.0, 0.0, 0.0,
-            )
-            series, wins = {}, {}
-
-        for pdf in pdfs:
-            pdf = pdf.sort_values("ts", kind="mergesort")
-            for sk, ts, v, lj in zip(
-                pdf["__sk"], pdf["ts"], pdf["value"], pdf["labels_json"]
-            ):
-                ts, v = int(ts), float(v)
-                if t0 is None:
-                    t0 = ts
-                if labels_json is None:
-                    labels_json = lj
-                w = ts - ts % iv
-                prev = series.get(sk)
-                pos_dv = None
-                dt_ms = None
-                if prev is not None:
-                    lts, lv = int(prev[0]), float(prev[1])
-                    if staleness and ts - lts > staleness:
-                        prev = None
-                    else:
-                        pos_dv = v - lv if v >= lv else v
-                        dt_ms = ts - lts
-                if prev is None:
-                    contrib_keep = (
-                        v if (warmup == 0 or ts >= t0 + warmup) else None
-                    )
-                else:
-                    contrib_keep = pos_dv
-                series[sk] = (ts, v)
-                cur = wins.get(w) or [0.0, 0, 0.0, 0, 0.0, 0.0, []]
-                inc, n_inc, inc_keep, n_keep, ss, rate_sum, sks = cur
-                if pos_dv is not None:
-                    inc += pos_dv
-                    n_inc += 1
-                    if dt_ms and dt_ms > 0:
-                        rate_sum += pos_dv / (dt_ms / 1000.0)
-                    if sk not in sks:
-                        sks.append(sk)
-                if contrib_keep is not None:
-                    inc_keep += contrib_keep
-                    n_keep += 1
-                ss += v
-                wins[w] = [inc, n_inc, inc_keep, n_keep, ss, rate_sum, sks]
-
-        # flush windows the event-time watermark has passed
-        wm = state.getCurrentWatermarkMs()
-        out = []
-        name = key[0]
-
-        def oname(output):
-            return name if keep_names else f"{name}{sfx}{output}"
-
-        for w in sorted(k for k in wins if k + iv <= wm):
-            inc, n_inc, inc_keep, n_keep, ss, rate_sum, sks = wins.pop(w)
-            total += inc_keep
-            total_prom += inc
-            ss_total += ss
-            w_end = w + iv
-            nser = len(sks)
-            for o in out_names:
-                if o == "total":
-                    val = total
-                elif o == "total_prometheus":
-                    val = total_prom
-                elif o == "increase":
-                    val = inc_keep if n_keep else None
-                elif o == "increase_prometheus":
-                    val = inc if n_inc else None
-                elif o == "sum_samples_total":
-                    val = ss_total
-                elif o == "rate_sum":
-                    val = rate_sum if n_inc else None
-                else:  # rate_avg
-                    val = rate_sum / nser if nser else None
-                if val is not None:
-                    out.append(
-                        (oname(o), labels_json or "{}", w_end, float(val))
-                    )
-
-        state.update(
-            (
-                t0,
-                labels_json,
-                float(total),
-                float(total_prom),
-                float(ss_total),
-                _json.dumps(series),
-                _json.dumps({str(k): v for k, v in wins.items()}),
-            )
-        )
-        yield pd.DataFrame(
-            out, columns=["name", "labels_json", "ts", "value"]
-        )
-
-    out = d.groupBy("name", "__gkey").applyInPandasWithState(
-        fn,
-        _TWS_OUTPUT_SCHEMA,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-    return out.select(
-        F.col("name"),
-        F.from_json(F.col("labels_json"), "map<string,string>").alias("labels"),
-        F.col("ts"),
-        F.col("value"),
-    )
-
-
-def dedup_samples_stream(sdf: DataFrame, dedup_interval_ms: int) -> DataFrame:
-    """Streaming last-wins dedup: max (ts, value) struct per series per
-    aligned dedup bucket — the streaming analog of dedup_samples (same
-    tie rule: later ts wins, equal ts → higher value)."""
-    win = F.window(
-        F.timestamp_millis(F.col("ts")), f"{dedup_interval_ms} milliseconds"
-    )
-    picked = (
-        sdf.withColumn("__sk", series_key(F.col("name"), F.col("labels")))
-        .withWatermark("__event_time", "0 milliseconds")
-        if "__event_time" in sdf.columns
-        else sdf.withColumn("__sk", series_key(F.col("name"), F.col("labels")))
-    )
-    return (
-        picked.groupBy("name", "labels", "__sk", win.alias("__w"))
-        .agg(F.max(F.struct("ts", "value")).alias("__best"))
-        .select(
-            "name",
-            "labels",
-            F.col("__best.ts").alias("ts"),
-            F.col("__best.value").alias("value"),
-            F.lit(False).alias("is_stale"),
-        )
-    )
-
-
-# ------------------------------------------------------------------ round 6:
-# micro-batch stateful counters (foreachBatch). transformWithState needs
-# the google.protobuf runtime inside Spark's TWS driver worker; where
-# that is unavailable, aggregate_stream_pandas_state above (GroupState,
-# protobuf-free, verified running here) or this engine provide the same
-# semantics — this one with state as parquet tables, which is ALSO the
-# shape VM itself has
+# ------------------------------------------------------------------
+# Streaming counters (foreachBatch). aggregate_batch above defines the
+# semantics; this engine computes the same math incrementally with its
+# state as parquet tables, which is the shape VM itself has
 # (pushSample into per-series state, flush on interval ticks,
 # streamaggr.go:175-209). Every step is a DataFrame op: state merge is a
 # per-series max-struct aggregation, window partials merge additively,
