@@ -16,8 +16,9 @@ Three execution modes share one config and one semantics definition:
   streamaggr.go flush logic; the watermark is the compat knob).
   Stateless outputs only.
 - ``MicroBatchCounterAggregator(spark, cfg, state_dir)`` — the counter
-  outputs (total/increase/rate_*) over a stream via foreachBatch, with
-  per-series state kept as parquet tables between micro-batches.
+  outputs (total/increase/rate_*) over a stream via foreachBatch: each
+  micro-batch is one Spark pass that reads one immutable parquet state
+  version and commits the next one atomically (a JSON commit file).
 
 Output series naming follows the reference exactly
 (streamaggr.go:627-635):
@@ -30,13 +31,19 @@ bucket per series, ties broken by the maximum value
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from victoriametrics_spark.schema import canonical_labels_str, series_key
+from victoriametrics_spark.engine.cache import (
+    _drop_stale_generation,
+    _read_meta,
+    _write_meta_atomic,
+)
+from victoriametrics_spark.schema import SAMPLE_SCHEMA, canonical_labels_str, series_key
 
 STATELESS_OUTPUTS = {
     "sum_samples",
@@ -119,21 +126,24 @@ def dedup_samples(df: DataFrame, dedup_interval_ms: int) -> DataFrame:
     maximum value (issue #3333), stale markers lose to real samples."""
     if dedup_interval_ms <= 0:
         return df
-    bucket = (F.col("ts") - F.col("ts") % F.lit(dedup_interval_ms)).alias("__bk")
     sk = series_key(F.col("name"), F.col("labels"))
+    rank = _dedup_rank(df, dedup_interval_ms, [sk])
+    return df.withColumn("__rn", rank).filter(F.col("__rn") == 1).drop("__rn")
+
+
+def _dedup_rank(df: DataFrame, dedup_interval_ms: int, keys: list) -> Column:
+    """Rank of each sample within its (``keys``, dedup bucket); rank 1
+    is the sample ``dedup_samples`` keeps."""
+    bucket = F.col("ts") - F.col("ts") % F.lit(dedup_interval_ms)
     not_stale = (
         ~F.coalesce(F.col("is_stale"), F.lit(False))
         if "is_stale" in df.columns
         else F.lit(True)
     )
-    w = Window.partitionBy(sk, bucket).orderBy(
+    w = Window.partitionBy(*keys, bucket).orderBy(
         F.col("ts").desc(), not_stale.desc(), F.col("value").desc()
     )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return F.row_number().over(w)
 
 
 def _stateless_agg(output: str, streaming: bool = False) -> Column:
@@ -387,14 +397,22 @@ def aggregate_stream(
 
 # ------------------------------------------------------------------
 # Streaming counters (foreachBatch). aggregate_batch above defines the
-# semantics; this engine computes the same math incrementally with its
-# state as parquet tables, which is the shape VM itself has
-# (pushSample into per-series state, flush on interval ticks,
-# streamaggr.go:175-209). Every step is a DataFrame op: state merge is a
-# per-series max-struct aggregation, window partials merge additively,
-# flush order is a window function — nothing driver-side scales with
-# series count, so the state tables can be bucketed by series hash at
-# 100 TB exactly like the sample data.
+# semantics; this engine computes the same math incrementally, the shape
+# VM itself has (pushSample into per-series state, flush on interval
+# ticks, streamaggr.go:175-209). State is versioned the way Structured
+# Streaming's state store is (SIGMOD 2018): each micro-batch reads one
+# immutable committed version and commits the next one atomically.
+#
+# One process() is one pass. The batch rows and the per-series state
+# rows are unioned and exchanged once, on the series key; the dedup
+# window, the lag window and the series-state merge are all keyed by the
+# series key, so that one partitioning serves them. Only per-(group,
+# window) partials cross a second exchange, where they merge with the
+# stored window partials and the running totals (a null-``w`` row per
+# group); a hot group's samples stay spread. Per-series data never
+# leaves the executors.
+
+_TOTAL_OUTPUTS = {"total", "total_prometheus", "sum_samples_total"}
 
 
 class MicroBatchCounterAggregator:
@@ -407,328 +425,309 @@ class MicroBatchCounterAggregator:
             lambda df, _id: agg.process(df)).start()
 
     ``process`` returns the rows flushed by this batch (windows whose
-    end the watermark has passed); ``flush_all()`` force-flushes the
-    rest (end of replay)."""
+    end the watermark, the largest timestamp seen, has passed);
+    ``flush_all()`` force-flushes the rest (end of replay). Both run
+    every Spark job and commit the new state before they return: the
+    returned DataFrame is already materialized on the executors and
+    stays valid however many batches follow. A batch that fails before
+    its commit leaves the committed state untouched, so replaying it
+    (also from a new aggregator on the same ``state_dir``) gives the
+    same result as an uninterrupted run.
+
+    State layout under ``state_dir``: one parquet table per version,
+    ``v{n}``, whose ``kind`` column holds per-series last samples
+    (``s``), open window partials (``w``), running totals per group
+    (``t``, only for ``total``, ``total_prometheus`` and
+    ``sum_samples_total``), contributing series per open window (``x``,
+    only for ``rate_avg``) and the batch's flushed rows (``o``); plus
+    ``commit.json``, replaced atomically, naming the committed version
+    with the watermark and the stream start ``t0``. The version before
+    the committed one is kept, older ones are deleted. State directories
+    written before this layout (one parquet table per state kind) are
+    not read."""
+
+    _STATE = (
+        "kind string, name string, gkey string, labels_json string, "
+        "sk string, w long, ts long, value double, inc double, n_inc long, "
+        "inc_keep double, n_keep long, ss double, rate_sum double"
+    )
 
     def __init__(self, spark, cfg: StreamAggrConfig, state_dir: str):
-        import os
-
         self.spark = spark
         self.cfg = cfg
         self.state_dir = state_dir
         self.outputs = [o for o in cfg.outputs if o in STATEFUL_OUTPUTS]
         if not self.outputs:
             raise ValueError("no stateful outputs configured")
+        self._totals = any(o in _TOTAL_OUTPUTS for o in self.outputs)
+        self._wser = "rate_avg" in self.outputs
+        self._types = dict(f.split() for f in self._STATE.split(", "))
         os.makedirs(state_dir, exist_ok=True)
-        self._emitted = []
+
+    def process(self, batch_df: DataFrame) -> DataFrame:
+        return self._step(batch_df)
+
+    def flush_all(self) -> DataFrame:
+        """End-of-replay: flush every pending window."""
+        return self._step(None)
 
     # ---------------------------------------------------------- state io
-    def _path(self, name: str) -> str:
-        return f"{self.state_dir}/{name}.parquet"
+    def _version_path(self, version: int) -> str:
+        return os.path.join(self.state_dir, f"v{version}")
 
-    def _read(self, name: str, schema: str):
-        import os
-
-        p = self._path(name)
-        if os.path.exists(p):
-            self.spark.catalog.refreshByPath(p)
-            # detach from the files so this batch's overwrite of the same
-            # state table can't invalidate a still-lazy plan (production
-            # deployments would version the state dir per batch instead)
-            return self.spark.read.schema(schema).parquet(p).localCheckpoint()
-        return self.spark.createDataFrame([], schema)
-
-    def _write(self, df, name: str) -> None:
-        p = self._path(name)
-        df.write.mode("overwrite").parquet(p)
-        self.spark.catalog.refreshByPath(p)
-
-    _SERIES = "sk string, name string, gkey string, labels_json string, last_ts long, last_value double"
-    _WIN = (
-        "name string, gkey string, labels_json string, w long, inc double, "
-        "n_inc long, inc_keep double, n_keep long, ss double, rate_sum double"
-    )
-    _WSER = "name string, gkey string, w long, sk string"
-    _TOTALS = (
-        "name string, gkey string, total double, total_prom double, ss_total double"
-    )
-    _META = "watermark long, t0 long"
-
-    # ---------------------------------------------------------- process
-    def process(self, batch_df: DataFrame):
-        cfg = self.cfg
-        iv = cfg.interval_ms
-        if cfg.dedup_interval_ms:
-            batch_df = dedup_samples(batch_df, cfg.dedup_interval_ms)
-        d = (
-            batch_df.withColumn("__sk", series_key(F.col("name"), F.col("labels")))
-            .withColumn("__glabels", _group_labels(cfg))
-            .withColumn("__gkey", canonical_labels_str(F.col("__glabels")))
-            .withColumn("__labels_json", F.to_json(F.col("__glabels")))
-            .withColumn("__w", F.col("ts") - F.col("ts") % F.lit(iv))
+    # The expressions below are SQL text: the plan is built again for
+    # every micro-batch, and one py4j call per expression is cheaper than
+    # one per Column operator.
+    def _row(self, kind: str, **cols: str) -> str:
+        """A state row of ``kind`` as a SQL struct: ``cols`` maps state
+        columns to expressions; the rest is null."""
+        cols["kind"] = f"'{kind}'"
+        return "named_struct({})".format(
+            ", ".join(
+                f"'{c}', CAST({cols.get(c, 'NULL')} AS {t})"
+                for c, t in self._types.items()
+            )
         )
 
-        series = self._read("series", self._SERIES)
-        # virtual predecessor rows from state, then the batch's own rows
-        state_rows = series.select(
-            F.col("sk").alias("__sk"),
-            F.col("name"),
-            F.col("gkey").alias("__gkey"),
-            F.col("labels_json").alias("__labels_json"),
-            F.col("last_ts").alias("ts"),
-            F.col("last_value").alias("value"),
-            F.lit(None).cast("long").alias("__w"),
-            F.lit(True).alias("__from_state"),
+    @staticmethod
+    def _rows(df: DataFrame, *rows: str) -> DataFrame:
+        """Each input row of ``df`` as the non-null rows of ``rows``."""
+        return df.selectExpr(
+            f"inline(filter(array({', '.join(rows)}), r -> r IS NOT NULL))"
         )
-        cur_rows = d.select(
-            "__sk",
+
+    # ---------------------------------------------------------- one step
+    def _step(self, batch_df: DataFrame | None) -> DataFrame:
+        """Read the committed version, run this batch (``None``: flush
+        every window) as one Spark pass that writes the next version,
+        materialize the flushed rows, then commit."""
+        cfg, iv, spark = self.cfg, self.cfg.interval_ms, self.spark
+        commit_path = os.path.join(self.state_dir, "commit.json")
+        commit = _read_meta(commit_path) or {}
+        version = commit.get("version", 0)
+        wm, t0 = commit.get("watermark"), commit.get("t0")
+        if version:
+            state = spark.read.schema(self._STATE).parquet(self._version_path(version))
+        else:
+            state = spark.createDataFrame([], self._STATE)
+        flush = batch_df is None
+        if flush:
+            batch_df = spark.createDataFrame([], SAMPLE_SCHEMA)
+
+        # the one exchange of the samples: batch rows plus the carried
+        # per-series rows (last sample; open windows' contributing
+        # series), hashed on the series key
+        glabels = _group_labels(cfg)
+        stale = F.col("is_stale") if "is_stale" in batch_df.columns else F.lit(None)
+        sample_cols = ["kind", "name", "gkey", "labels_json", "sk", "w", "ts", "value"]
+        batch = batch_df.select(
+            F.lit("b").alias("kind"),
             "name",
-            "__gkey",
-            "__labels_json",
+            canonical_labels_str(glabels).alias("gkey"),
+            F.to_json(glabels).alias("labels_json"),
+            series_key(F.col("name"), F.col("labels")).alias("sk"),
+            (F.col("ts") - F.col("ts") % F.lit(iv)).alias("w"),
             "ts",
-            "value",
-            "__w",
-            F.lit(False).alias("__from_state"),
+            F.col("value").cast("double").alias("value"),
+            stale.cast("boolean").alias("is_stale"),
         )
-        u = state_rows.unionByName(cur_rows)
-        wser_w = Window.partitionBy("__sk").orderBy(
-            "ts", F.col("__from_state").desc()
+        carried = state.filter("kind IN ('s', 'x')").selectExpr(
+            *sample_cols, "CAST(NULL AS BOOLEAN) AS is_stale"
         )
-        dd = (
-            u.withColumn("__pv", F.lag("value").over(wser_w))
-            .withColumn("__pts", F.lag("ts").over(wser_w))
-            .filter(~F.col("__from_state"))
-            .withColumn(
-                "__pos_dv",
-                F.when(F.col("__pv").isNull(), F.lit(None).cast("double"))
-                .when(F.col("value") >= F.col("__pv"), F.col("value") - F.col("__pv"))
-                .otherwise(F.col("value")),
-            )
-        )
-        is_first = F.col("__pv").isNull()
-        if cfg.staleness_interval_ms:
-            stale_gap = (
-                F.col("ts") - F.col("__pts") > F.lit(cfg.staleness_interval_ms)
-            )
-            dd = dd.withColumn(
-                "__pos_dv",
-                F.when(stale_gap, F.lit(None).cast("double")).otherwise(
-                    F.col("__pos_dv")
-                ),
-            )
-            is_first = is_first | stale_gap
-
-        meta = self._read("meta", self._META).collect()
-        wm_prev = meta[0]["watermark"] if meta else None
-        t0_prev = meta[0]["t0"] if meta else None
-        batch_minmax = d.agg(
-            F.min("ts").alias("mn"), F.max("ts").alias("mx")
-        ).collect()[0]
-        t0 = (
-            t0_prev
-            if t0_prev is not None
-            else (int(batch_minmax["mn"]) if batch_minmax["mn"] is not None else None)
-        )
-        if cfg.ignore_first_sample_interval_ms > 0 and t0 is not None:
-            eligible = F.col("ts") >= F.lit(t0 + cfg.ignore_first_sample_interval_ms)
-        else:
-            eligible = F.lit(True)
-        dd = dd.withColumn(
-            "__contrib_keep",
-            F.when(is_first, F.when(eligible, F.col("value"))).otherwise(
-                F.col("__pos_dv")
-            ),
-        )
-
-        # merge window partials (additive)
-        new_partials = dd.groupBy("name", "__gkey", "__w").agg(
-            F.first("__labels_json").alias("labels_json"),
-            F.sum("__pos_dv").alias("inc"),
-            F.count("__pos_dv").alias("n_inc"),
-            F.sum("__contrib_keep").alias("inc_keep"),
-            F.count("__contrib_keep").alias("n_keep"),
-            F.sum("value").alias("ss"),
-            F.sum(
-                F.try_divide(
-                    F.col("__pos_dv"), (F.col("ts") - F.col("__pts")) / 1000.0
-                )
-            ).alias("rate_sum"),
-        ).select(
-            "name",
-            F.col("__gkey").alias("gkey"),
-            "labels_json",
-            F.col("__w").alias("w"),
-            F.coalesce("inc", F.lit(0.0)).alias("inc"),
-            "n_inc",
-            F.coalesce("inc_keep", F.lit(0.0)).alias("inc_keep"),
-            "n_keep",
-            "ss",
-            F.coalesce("rate_sum", F.lit(0.0)).alias("rate_sum"),
-        )
-        win = self._read("win", self._WIN).unionByName(new_partials)
-        win = win.groupBy("name", "gkey", "w").agg(
-            F.first("labels_json").alias("labels_json"),
-            F.sum("inc").alias("inc"),
-            F.sum("n_inc").alias("n_inc"),
-            F.sum("inc_keep").alias("inc_keep"),
-            F.sum("n_keep").alias("n_keep"),
-            F.sum("ss").alias("ss"),
-            F.sum("rate_sum").alias("rate_sum"),
-        ).select(
-            "name", "gkey", "labels_json", "w", "inc", "n_inc", "inc_keep",
-            "n_keep", "ss", "rate_sum",
-        )
-
-        # distinct contributing series per window (exact across batches)
-        new_wser = (
-            dd.filter(F.col("__pos_dv").isNotNull())
-            .select(
-                "name",
-                F.col("__gkey").alias("gkey"),
-                F.col("__w").alias("w"),
-                F.col("__sk").alias("sk"),
-            )
-            .distinct()
-        )
-        wser = self._read("wser", self._WSER).unionByName(new_wser).distinct()
-
-        # update per-series last (ts, value): max struct of old + new
-        merged_series = (
-            series.select(
-                F.col("sk"), "name", "gkey", "labels_json",
-                F.struct(F.col("last_ts").alias("ts"), F.col("last_value").alias("value")).alias("__s"),
-            )
-            .unionByName(
-                d.select(
-                    F.col("__sk").alias("sk"),
-                    "name",
-                    F.col("__gkey").alias("gkey"),
-                    F.col("__labels_json").alias("labels_json"),
-                    F.struct(F.col("ts"), F.col("value")).alias("__s"),
-                )
-            )
-            .groupBy("sk")
-            .agg(
-                F.first("name").alias("name"),
-                F.first("gkey").alias("gkey"),
-                F.first("labels_json").alias("labels_json"),
-                F.max("__s").alias("__s"),
-            )
-            .select(
-                "sk", "name", "gkey", "labels_json",
-                F.col("__s.ts").alias("last_ts"),
-                F.col("__s.value").alias("last_value"),
-            )
-        )
-        self._write(merged_series, "series")
-
-        wm = int(batch_minmax["mx"]) if batch_minmax["mx"] is not None else wm_prev
-        if wm_prev is not None and wm is not None:
-            wm = max(wm, wm_prev)
-        self._write(
-            self.spark.createDataFrame([(wm, t0)], self._META), "meta"
-        )
-        return self._flush(win, wser, watermark=wm)
-
-    def flush_all(self):
-        """End-of-replay: flush every pending window."""
-        win = self._read("win", self._WIN)
-        wser = self._read("wser", self._WSER)
-        return self._flush(win, wser, watermark=None)
-
-    def _flush(self, win, wser, watermark):
-        cfg = self.cfg
-        iv = cfg.interval_ms
-        if watermark is None:
-            ready = win
-            rest = win.filter(F.lit(False))
-        else:
-            ready = win.filter(F.col("w") + iv <= F.lit(watermark))
-            rest = win.filter(F.col("w") + iv > F.lit(watermark))
-        nser = wser.groupBy("name", "gkey", "w").agg(
-            F.count_distinct("sk").alias("nser")
-        )
-        ready = ready.join(nser, ["name", "gkey", "w"], "left").withColumn(
-            "nser", F.coalesce("nser", F.lit(0))
-        )
-
-        totals = self._read("totals", self._TOTALS)
-        ready = ready.join(totals, ["name", "gkey"], "left").fillna(
-            {"total": 0.0, "total_prom": 0.0, "ss_total": 0.0}
-        )
-        wrun = (
-            Window.partitionBy("name", "gkey")
-            .orderBy("w")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        ready = (
-            ready.withColumn(
-                "__total", F.col("total") + F.sum("inc_keep").over(wrun)
-            )
-            .withColumn(
-                "__total_prom", F.col("total_prom") + F.sum("inc").over(wrun)
-            )
-            .withColumn("__ss_total", F.col("ss_total") + F.sum("ss").over(wrun))
+        u = batch.unionByName(carried).repartition("sk")
+        if cfg.dedup_interval_ms:
+            # dedup within this batch only, as aggregate_batch would on it
+            rank = _dedup_rank(u, cfg.dedup_interval_ms, ["sk", "kind"])
+            u = u.withColumn("__rn", rank).filter("kind != 'b' OR __rn = 1")
+        # a series' state row sorts before batch samples at its timestamp
+        sw = "OVER (PARTITION BY sk, kind = 'x' ORDER BY ts, kind = 's' DESC, value)"
+        lagged = u.selectExpr(
+            *sample_cols,
+            f"lag(value) {sw} AS __pv",
+            f"lag(ts) {sw} AS __pts",
+            f"lead(1) {sw} IS NULL AS __last",
         ).cache()
-
-        outs = []
-        flush_ts = (F.col("w") + F.lit(iv)).alias("ts")
-        labels = F.from_json(F.col("labels_json"), "map<string,string>").alias(
-            "labels"
-        )
-        for o in self.outputs:
-            if o == "total":
-                val, cond = F.col("__total"), F.lit(True)
-            elif o == "total_prometheus":
-                val, cond = F.col("__total_prom"), F.lit(True)
-            elif o == "increase":
-                val, cond = F.col("inc_keep"), F.col("n_keep") > 0
-            elif o == "increase_prometheus":
-                val, cond = F.col("inc"), F.col("n_inc") > 0
-            elif o == "sum_samples_total":
-                val, cond = F.col("__ss_total"), F.lit(True)
-            elif o == "rate_sum":
-                val, cond = F.col("rate_sum"), F.col("n_inc") > 0
-            else:  # rate_avg
-                val, cond = (
-                    F.try_divide(F.col("rate_sum"), F.col("nser")),
-                    F.col("nser") > 0,
+        try:
+            if not flush:
+                # one task over the cached partitions: no shuffle stage
+                mm = (
+                    lagged.filter("kind = 'b'")
+                    .coalesce(1)
+                    .agg(F.min("ts").alias("mn"), F.max("ts").alias("mx"))
+                    .first()
                 )
-            outs.append(
-                ready.filter(cond).select(
-                    _out_name(cfg, o).alias("name"), labels, flush_ts,
-                    val.cast("double").alias("value"),
-                ).filter(F.col("value").isNotNull() & ~F.isnan("value"))
+                if t0 is None and mm["mn"] is not None:
+                    t0 = int(mm["mn"])
+                if mm["mx"] is not None:
+                    wm = int(mm["mx"]) if wm is None else max(wm, int(mm["mx"]))
+            nxt = self._next_version(state, lagged, flush, wm, t0)
+            path = self._version_path(version + 1)
+            nxt.write.mode("overwrite").parquet(path)
+        finally:
+            lagged.unpersist()
+        out = (
+            spark.read.schema(self._STATE)
+            .parquet(path)
+            .filter("kind = 'o'")
+            .selectExpr(
+                "name",
+                "from_json(labels_json, 'map<string,string>') AS labels",
+                "ts",
+                "value",
             )
-        emitted = outs[0]
-        for o in outs[1:]:
-            emitted = emitted.unionByName(o)
-        # materialize executor-side BEFORE the state `_write`s below
-        # overwrite the backing tables this plan reads: localCheckpoint
-        # keeps the flushed rows as cached partitions on the executors
-        # (constant driver memory) instead of a driver round-trip via
-        # collect()+createDataFrame
-        emitted = emitted.localCheckpoint(eager=True)
+            .localCheckpoint()
+        )
+        _write_meta_atomic(
+            commit_path, {"version": version + 1, "watermark": wm, "t0": t0}
+        )
+        _drop_stale_generation(lambda _, n: self._version_path(n), None, version + 1)
+        return out
 
-        # persist advanced totals + surviving windows, drop flushed wser
-        new_totals = (
-            ready.groupBy("name", "gkey")
-            .agg(
-                F.max_by(F.col("__total"), F.col("w")).alias("total"),
-                F.max_by(F.col("__total_prom"), F.col("w")).alias("total_prom"),
-                F.max_by(F.col("__ss_total"), F.col("w")).alias("ss_total"),
-            )
+    def _next_version(self, state, lagged, flush: bool, wm, t0) -> DataFrame:
+        """The rows of the next state version (and the flushed rows),
+        from the committed ``state`` and the exchanged samples."""
+        cfg, iv = self.cfg, self.cfg.interval_ms
+
+        def ready(w: str) -> str:
+            if flush:
+                return f"{w} IS NOT NULL"
+            if wm is None:
+                return "false"
+            return f"({w} IS NOT NULL AND {w} + {iv} <= {wm})"
+
+        pos_dv = (
+            "CASE WHEN __pv IS NULL THEN NULL"
+            " WHEN value >= __pv THEN value - __pv ELSE value END"
         )
-        kept_totals = totals.join(
-            new_totals.select("name", "gkey"), ["name", "gkey"], "left_anti"
+        is_first = "__pv IS NULL"
+        if cfg.staleness_interval_ms:
+            # state TTL, as in aggregate_batch
+            gap = f"ts - __pts > {cfg.staleness_interval_ms}"
+            pos_dv = f"CASE WHEN {gap} THEN NULL ELSE {pos_dv} END"
+            is_first = f"({is_first} OR {gap})"
+        eligible = "true"
+        if cfg.ignore_first_sample_interval_ms > 0 and t0 is not None:
+            eligible = f"ts >= {t0 + cfg.ignore_first_sample_interval_ms}"
+        keep = (
+            f"CASE WHEN {is_first} THEN IF({eligible}, value, NULL)"
+            f" ELSE {pos_dv} END"
         )
-        self._write(kept_totals.unionByName(new_totals), "totals")
-        self._write(rest, "win")
-        if watermark is None:
-            self._write(wser.filter(F.lit(False)), "wser")
-        else:
-            self._write(
-                wser.filter(F.col("w") + iv > F.lit(watermark)), "wser"
+
+        # per-(group, window) partials: this batch's samples, the stored
+        # open windows and the running totals (w null), merged in one
+        # aggregation
+        sums = ["inc", "n_inc", "inc_keep", "n_keep", "ss", "rate_sum"]
+        key = ["name", "gkey", "labels_json", "w"]
+        parts = lagged.filter("kind = 'b'").selectExpr(
+            *key,
+            f"{pos_dv} AS inc",
+            f"CAST({pos_dv} IS NOT NULL AS LONG) AS n_inc",
+            f"{keep} AS inc_keep",
+            f"CAST({keep} IS NOT NULL AS LONG) AS n_keep",
+            "value AS ss",
+            f"try_divide({pos_dv}, (ts - __pts) / 1000D) AS rate_sum",
+            "0 AS nser",
+        ).unionByName(
+            state.filter("kind IN ('w', 't')").selectExpr(*key, *sums, "0 AS nser")
+        )
+        wser = None
+        if self._wser:
+            # distinct contributing series per window (exact across
+            # batches); keyed by series, so no exchange
+            wser = (
+                lagged.filter(f"kind = 'x' OR (kind = 'b' AND {pos_dv} IS NOT NULL)")
+                .select("sk", "name", "gkey", "w")
+                .distinct()
             )
-        ready.unpersist()
-        return emitted
+            parts = parts.unionByName(
+                wser.selectExpr(
+                    "name",
+                    "gkey",
+                    "CAST(NULL AS STRING) AS labels_json",
+                    "w",
+                    *[f"CAST(NULL AS {self._types[c]}) AS {c}" for c in sums],
+                    "1 AS nser",
+                )
+            )
+        agg = parts.groupBy("name", "gkey", "w").agg(
+            F.expr("first(labels_json, true) AS labels_json"),
+            *[
+                F.expr(f"coalesce(sum({c}), 0D) AS {c}")
+                if c in ("inc", "inc_keep", "rate_sum")
+                else F.expr(f"sum({c}) AS {c}")
+                for c in sums
+            ],
+            F.expr("sum(nser) AS nser"),
+        )
+
+        vals = {
+            "total": ("__total", "true"),
+            "total_prometheus": ("__total_prom", "true"),
+            "sum_samples_total": ("__ss_total", "true"),
+            "increase": ("inc_keep", "n_keep > 0"),
+            "increase_prometheus": ("inc", "n_inc > 0"),
+            "rate_sum": ("rate_sum", "n_inc > 0"),
+            "rate_avg": ("try_divide(rate_sum, nser)", "nser > 0"),
+        }
+        cols = [
+            F.col("*"),
+            F.expr(f"{ready('w')} AS __ready"),
+            *[
+                _out_name(cfg, o).alias(f"__name{i}")
+                for i, o in enumerate(self.outputs)
+            ],
+        ]
+        if self._totals:
+            # ready windows sort right after the group's totals row, so a
+            # running sum from it is the total at each flushed window
+            gw = "OVER (PARTITION BY name, gkey ORDER BY w ASC NULLS FIRST"
+            run = f"{gw} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+            cols += [
+                F.expr(f"sum(inc_keep) {run} AS __total"),
+                F.expr(f"sum(inc) {run} AS __total_prom"),
+                F.expr(f"sum(ss) {run} AS __ss_total"),
+                F.expr(f"lead(w) {gw}) AS __next_w"),
+            ]
+        agg = agg.select(*cols)
+
+        # every row derived from the aggregate comes from one projection,
+        # so the aggregation (and the totals window) runs once
+        agg_rows = [
+            f"IF(w IS NOT NULL AND NOT __ready, "
+            f"{self._row('w', **{c: c for c in key + sums})}, NULL)"
+        ]
+        if self._totals:
+            t_row = self._row(
+                "t",
+                name="name",
+                gkey="gkey",
+                labels_json="labels_json",
+                inc="__total_prom",
+                inc_keep="__total",
+                ss="__ss_total",
+            )
+            agg_rows.append(
+                f"IF((w IS NULL OR __ready) AND NOT {ready('__next_w')}, {t_row}, NULL)"
+            )
+        for i, o in enumerate(self.outputs):
+            val, cond = f"CAST({vals[o][0]} AS DOUBLE)", vals[o][1]
+            o_row = self._row(
+                "o",
+                name=f"__name{i}",
+                labels_json="labels_json",
+                ts=f"w + {iv}",
+                value=val,
+            )
+            agg_rows.append(
+                f"IF(__ready AND {cond} AND NOT isnan({val}), {o_row}, NULL)"
+            )
+        s_row = self._row(
+            "s", **{c: c for c in ("name", "gkey", "labels_json", "sk", "ts", "value")}
+        )
+        out = self._rows(lagged.filter("kind != 'x' AND __last"), s_row).unionByName(
+            self._rows(agg, *agg_rows)
+        )
+        if wser is not None:
+            x_row = self._row("x", **{c: c for c in ("name", "gkey", "sk", "w")})
+            out = out.unionByName(self._rows(wser.filter(f"NOT {ready('w')}"), x_row))
+        return out
