@@ -1,129 +1,56 @@
 #!/usr/bin/env python
-"""Count Spark jobs/stages per query execution via the event log.
+"""Count Spark jobs/stages/tasks per query execution.
 
-Usage: python scripts/job_count.py <query> [<query>...]
-Runs each query twice (cold, warm) with collect(); prints per-run job
-and stage counts parsed from the event log (the UI is disabled in this
-environment, so the log is the only job-count source — same method as
-r13's stage attribution).
+Usage: SPARK_GRAFT_SF_DIR=<sf dir> python scripts/job_count.py <query> [<query>...]
+Runs each ``__spark_entry__`` query twice (cold, warm) with collect()
+and prints per-run job, stage and task counts. Each run is tagged with
+``SparkContext.setJobGroup`` and its counts are read from the status
+tracker, which works with the Spark UI disabled.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    names = sys.argv[1:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    evdir = tempfile.mkdtemp(prefix="vmspark_ev_")
-    os.environ["SPARK_GRAFT_EVENTLOG"] = evdir
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir or len(sys.argv) < 2:
+        sys.exit(__doc__)
+    from victoriametrics_spark.session import get_spark
 
-    from pyspark.sql import SparkSession
-
-    from victoriametrics_spark.session import default_parallelism
-
-    n = default_parallelism()
-    spark = (
-        SparkSession.builder.appName("job-count")
-        .master(f"local[{n}]")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.default.parallelism", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "true")
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.shuffle.compress", "false")
-        .config("spark.locality.wait", "0s")
-        .getOrCreate()
-    )
+    spark = get_spark("job-count")
     spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
 
     import __spark_entry__ as entry
 
     qs = entry.queries()
-    marks: list[tuple[str, int, float]] = []  # (label, job_floor, wall)
-    jobs_seen = 0
-
-    def run(label: str, fn) -> None:
-        nonlocal jobs_seen
-        spark.sparkContext.setJobDescription(label)
-        t0 = time.time()
-        fn()
-        marks.append((label, jobs_seen, time.time() - t0))
-
-    for name in names:
-        fn = qs[name]
-        run(f"{name}#cold", lambda: fn(spark, sf_dir).collect())
-        run(f"{name}#warm", lambda: fn(spark, sf_dir).collect())
-
-    # flush + parse the event log
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    for name in sys.argv[1:]:
+        for run in ("cold", "warm"):
+            label = f"{name}#{run}"
+            sc.setJobGroup(label, label, False)
+            t0 = time.time()
+            qs[name](spark, sf_dir).collect()
+            wall = time.time() - t0
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = tracker.getJobIdsForGroup(label)
+            stages = [
+                tracker.getStageInfo(sid)
+                for job in jobs
+                for sid in tracker.getJobInfo(job).stageIds
+            ]
+            ran = [st for st in stages if st is not None and st.numCompletedTasks]
+            print(
+                f"{label:40s} jobs={len(jobs):3d} stages_done={len(ran):3d} "
+                f"tasks={sum(st.numTasks for st in ran):4d} wall={wall:.2f}s"
+            )
     spark.stop()
-    # rolling (v2) logs are a DIRECTORY of events_* part files
-    entry_path = [os.path.join(evdir, f) for f in os.listdir(evdir)
-                  if not f.startswith(".")][0]
-    if os.path.isdir(entry_path):
-        logfs = sorted(
-            os.path.join(entry_path, f)
-            for f in os.listdir(entry_path)
-            if f.startswith("events_") or f.startswith("eventLog")
-        ) or [os.path.join(entry_path, f) for f in os.listdir(entry_path)
-              if not f.startswith("appstatus")]
-    else:
-        logfs = [entry_path]
-    by_desc: dict[str, list[int]] = {}
-    stages_by_desc: dict[str, int] = {}
-    tasks_by_desc: dict[str, int] = {}
-    job_desc: dict[int, str] = {}
-    stage_jobs: dict[int, int] = {}
-    import itertools
-
-    lines = itertools.chain.from_iterable(open(p) for p in logfs)
-    if True:
-        for line in lines:
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                desc = ev.get("Properties", {}).get(
-                    "spark.job.description", "?"
-                )
-                jid = ev["Job ID"]
-                job_desc[jid] = desc
-                by_desc.setdefault(desc, []).append(jid)
-                for s in ev.get("Stage Infos", []):
-                    stage_jobs[s["Stage ID"]] = jid
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                jid = stage_jobs.get(si["Stage ID"])
-                if jid is not None:
-                    desc = job_desc.get(jid, "?")
-                    stages_by_desc[desc] = stages_by_desc.get(desc, 0) + 1
-                    tasks_by_desc[desc] = tasks_by_desc.get(desc, 0) + si.get(
-                        "Number of Tasks", 0
-                    )
-    for label, _floor, wall in marks:
-        jobs = by_desc.get(label, [])
-        print(
-            f"{label:40s} jobs={len(jobs):3d} stages_done="
-            f"{stages_by_desc.get(label, 0):3d} tasks="
-            f"{tasks_by_desc.get(label, 0):4d} wall={wall:.2f}s"
-        )
 
 
 if __name__ == "__main__":

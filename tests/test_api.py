@@ -342,6 +342,41 @@ def test_rules_and_alerts_endpoints(spark):
 
 
 # ------------------------------------------------------------ IngestAPI
+def test_prometheus_import_counts_rows_once(spark):
+    """A 2000-line Prometheus-text import into a table counts the parsed
+    frame once: the invalid-line check's count is also the written-row
+    count when no step drops rows in between. The import that counted
+    the frame again before the append ran 7 jobs for this batch; this
+    one runs 5."""
+    from victoriametrics_spark.api.http import IngestAPI
+    from victoriametrics_spark.storage.layout import drop_samples_table
+
+    def body(t0):
+        return "\n".join(
+            f'm_import{{s="{i % 200}",k="{i // 200}"}} {float(i)} {t0 + i}'
+            for i in range(2000)
+        )
+
+    drop_samples_table(spark, "t_import_jobs")
+    ing = IngestAPI(spark, samples_table="t_import_jobs")
+    try:
+        assert ing.import_lines(body(1_704_067_200_000), "prometheus") == 2000
+        sc = spark.sparkContext
+        group = "prometheus-import-job-count"
+        sc.setJobGroup(group, "warm 2000-line Prometheus import", False)
+        try:
+            n = ing.import_lines(body(1_704_067_300_000), "prometheus")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n == 2000
+        assert ing.rows_invalid_total.get("prometheus", 0) == 0
+        assert 0 < jobs <= 7 - 2, jobs
+        assert spark.table("t_import_jobs").count() == 4000
+    finally:
+        drop_samples_table(spark, "t_import_jobs")
+
+
 @pytest.mark.slow
 def test_ingest_endpoints(spark, api):
     from victoriametrics_spark.api.http import IngestAPI

@@ -124,19 +124,12 @@ def test_unigram_longkey_join_matches_string_join(spark):
     _same_rows(got, ref)
 
 
-def test_bigram_indexkey_count_join_matches_string_joins(spark):
-    """The vocab-index-pair bigram-count key (ip*V+ic, a bijection
-    with the token pair) plus the xxhash64 vocabulary value-joins must
-    score identically to the definitional all-string-join formulation
-    (r13 shape, verbatim)."""
-    from victoriametrics_spark.operators.text import (
-        bigram_logprob_score,
-        tokens,
-    )
+def _bigram_reference(docs, vocab_size):
+    """bigram_logprob_score(docs, vocab_size, lam=0.9) in its
+    definitional all-string-join formulation (r13 shape)."""
+    from victoriametrics_spark.operators.text import tokens
 
-    docs = load_table(spark, SF_DIR, "documents")
-    got = bigram_logprob_score(docs, vocab_size=1000, lam=0.9)
-
+    spark = docs.sparkSession
     toks = tokens(F.col("text"))
     d = docs.select(F.col("doc_id"), toks.alias("__w")).filter(
         F.size("__w") >= 2
@@ -158,7 +151,7 @@ def test_bigram_indexkey_count_join_matches_string_joins(spark):
     counts = tok.groupBy("__t").agg(F.count("*").alias("__c"))
     vocab_rows = (
         counts.orderBy(F.col("__c").desc(), F.col("__t").asc())
-        .limit(1000)
+        .limit(vocab_size)
         .collect()
     )
     n_total = sum(r["__c"] for r in vocab_rows)
@@ -200,22 +193,93 @@ def test_bigram_indexkey_count_join_matches_string_joins(spark):
         F.count("*").alias("n_bigrams"),
         F.round(F.avg(term), 6).alias("bigram_score"),
     )
-    _same_rows(got, ref)
+    return ref
+
+
+def test_bigram_indexkey_count_join_matches_string_joins(spark):
+    """The vocab-index-pair bigram-count key (ip*V+ic, a bijection
+    with the token pair) plus the xxhash64 vocabulary value-joins must
+    score identically to the definitional all-string-join formulation
+    (r13 shape, verbatim)."""
+    from victoriametrics_spark.operators.text import bigram_logprob_score
+
+    docs = load_table(spark, SF_DIR, "documents")
+    got = bigram_logprob_score(docs, vocab_size=1000, lam=0.9)
+    _same_rows(got, _bigram_reference(docs, 1000))
 
 
 def test_bigram_sql_in_list_matches_isin_semantics(spark):
     """The single-string SQL IN list (one py4j call) must select the
     same rows as Column.isin over the same values, including quote- and
-    backslash-bearing tokens."""
+    backslash-bearing tokens, under either string-literal dialect."""
     from victoriametrics_spark.operators.text import _sql_in_list
 
     rows = [("a",), ("o'x",), ("b\\c",), ("plain",), ("miss",), (None,)]
     df = spark.createDataFrame(rows, "t string")
     vals = ["o'x", "b\\c", "plain", "zz"]
-    got = df.filter(F.expr(f"t IN ({_sql_in_list(vals)})"))
     ref = df.filter(F.col("t").isin(vals))
-    _same_rows(got, ref)
-    assert got.count() == 3
+    key = "spark.sql.parser.escapedStringLiterals"
+    for escaped in ("false", "true"):
+        spark.conf.set(key, escaped)
+        try:
+            got = df.filter(F.expr(f"t IN ({_sql_in_list(vals)})"))
+        finally:
+            spark.conf.unset(key)
+        _same_rows(got, ref)
+        assert got.count() == 3
+
+
+def _uses_in_set(df) -> bool:
+    """Whether the in-vocab prefilter compiled to an InSet (not the
+    broadcast semi-joins)."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "INSET" in plan.upper() and "LeftSemi" not in plan
+
+
+# 14 distinct tokens: a vocabulary above OptimizeIn's 10-element
+# threshold, so the IN list becomes an InSet
+_BIGRAM_DOCS = [
+    (1, "a b a b c d a k l m"),
+    (2, "b a b a c c n o p"),
+    (3, "d c b a a b q r"),
+    (4, "e f a b k n"),
+]
+
+
+def test_bigram_in_list_under_escaped_string_literals(spark):
+    """Under spark.sql.parser.escapedStringLiterals=true the in-vocab
+    IN list still compiles to an InSet and scores as the join
+    formulation does."""
+    from victoriametrics_spark.operators.text import bigram_logprob_score
+
+    docs = spark.createDataFrame(
+        [(i, t.replace("a", "o'x").replace("b", "b\\c")) for i, t in _BIGRAM_DOCS],
+        "doc_id long, text string",
+    )
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, "true")
+    try:
+        got = bigram_logprob_score(docs, vocab_size=14, lam=0.9)
+        assert _uses_in_set(got)
+        _same_rows(got, _bigram_reference(docs, 14))
+    finally:
+        spark.conf.unset(key)
+    assert got.count() == 4
+
+
+def test_bigram_in_list_on_quote_or_backslash_token(spark):
+    """A vocabulary token holding a quote or a backslash keeps the
+    InSet prefilter and scores as the join formulation does."""
+    from victoriametrics_spark.operators.text import bigram_logprob_score
+
+    docs = spark.createDataFrame(
+        [(i, t.replace("a", "o'x").replace("b", "b\\c")) for i, t in _BIGRAM_DOCS],
+        "doc_id long, text string",
+    )
+    got = bigram_logprob_score(docs, vocab_size=14, lam=0.9)
+    assert _uses_in_set(got)
+    _same_rows(got, _bigram_reference(docs, 14))
+    assert got.count() == 4
 
 
 def test_boilerplate_xxhash_key_matches_md5_key(spark):

@@ -382,10 +382,12 @@ def test_delete_series_tombstones(spark):
 def _file_snapshot(spark, table):
     """{file_path: mtime_ns} for every data file of the table."""
     import os
+    from urllib.parse import unquote
 
     out = {}
     for uri in spark.table(table).inputFiles():
-        p = uri[7:] if uri.startswith("file://") else uri
+        # the URI re-escapes the partition dir: tenant=1%3A0 → 1%253A0
+        p = unquote(uri[7:] if uri.startswith("file://") else uri)
         out[p] = os.stat(p).st_mtime_ns
     return out
 
@@ -1217,3 +1219,258 @@ def test_downsample_selector_scoped_rules(spark):
         by_s2.setdefault(r["labels"]["s"], []).append(r)
     assert len(by_s2["a"]) == 3   # excluded
     assert len(by_s2["b"]) == 1 and len(by_s2["c"]) == 1
+
+
+# ------------------------------------------------------------ write shape
+# Every bucketed write exchanges its rows so that one task writes each
+# bucket: the write stage runs min(n_buckets, default parallelism)
+# tasks (4 tasks for 32 buckets on local[4]),
+# and each write adds exactly one file per (partition, bucket) it
+# touches.
+def _run_shape(spark, fn):
+    """(result, job ids, tasks of each stage that ran) of ``fn()``; the
+    last stage is the write."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"storage-write-shape-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "storage write shape", False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    tasks = []
+    for j in jobs:
+        for sid in sorted(tracker.getJobInfo(j).stageIds):
+            st = tracker.getStageInfo(sid)
+            if st is not None and st.numCompletedTasks:
+                tasks.append(st.numTasks)
+    return out, jobs, tasks
+
+
+def _write_tasks(spark, n_buckets):
+    return min(n_buckets, spark.sparkContext.defaultParallelism)
+
+
+def _new_files_per_bucket(before, after):
+    """Counter of (partition dir, bucket id) over the files in ``after``
+    and not in ``before``."""
+    import re
+    from collections import Counter
+
+    return Counter(
+        (p.rsplit("/", 1)[0], re.search(r"_(\d{5})\.", p).group(1))
+        for p in after
+        if p not in before
+    )
+
+
+def _touched(df, n_buckets, key="__series_key", part_cols=("tenant", "date")):
+    """Number of distinct (partition, bucket) pairs the rows of ``df``
+    fall in."""
+    bucket = F.pmod(F.hash(F.col(key)), F.lit(n_buckets))
+    return df.select(*part_cols, bucket).distinct().count()
+
+
+def _shape_samples(spark, seed=0):
+    """2000 rows of 300 series over two days, tenant 1:0."""
+    from victoriametrics_spark.api.http import with_tenant
+
+    rows = [
+        (f"s{(i + seed) % 300}", T0 + (i % 2) * DAY + i * 1000 + seed, float(i))
+        for i in range(2000)
+    ]
+    return with_tenant(_mk_samples(spark, rows), "1:0")
+
+
+def _table_rows(spark, table):
+    """The table's rows as a multiset (labels maps made hashable)."""
+    from collections import Counter
+
+    return Counter(
+        tuple(
+            tuple(sorted(v.items())) if isinstance(v, dict) else v
+            for v in r
+        )
+        for r in spark.table(table).collect()
+    )
+
+
+def test_bucketed_writes_one_task_per_core(spark):
+    """write_samples_table and append_samples at n_buckets=32: the write
+    stage runs one task per core (at most), and each write adds one file
+    per touched (partition, bucket)."""
+    from victoriametrics_spark.storage import drop_samples_table
+
+    tasks32 = _write_tasks(spark, 32)
+    drop_samples_table(spark, "t_shape")
+    try:
+        _, _, tasks = _run_shape(
+            spark,
+            lambda: write_samples_table(_shape_samples(spark), "t_shape", n_buckets=32),
+        )
+        assert tasks[-1] == tasks32 <= spark.sparkContext.defaultParallelism
+        files = _file_snapshot(spark, "t_shape")
+        per_bucket = _new_files_per_bucket({}, files)
+        assert set(per_bucket.values()) == {1}
+        assert len(per_bucket) == _touched(spark.table("t_shape"), 32)
+
+        fresh = _shape_samples(spark, seed=7)
+        _, _, tasks = _run_shape(spark, lambda: append_samples(fresh, "t_shape"))
+        assert tasks[-1] == tasks32
+        per_bucket = _new_files_per_bucket(files, _file_snapshot(spark, "t_shape"))
+        assert set(per_bucket.values()) == {1}
+        appended = spark.table("t_shape").filter(F.col("ts") % 1000 == 7)
+        assert len(per_bucket) == _touched(appended, 32)
+    finally:
+        drop_samples_table(spark, "t_shape")
+
+
+def test_bucketed_write_two_buckets_two_tasks(spark):
+    """With n_buckets=2 the write stage runs 2 tasks, one per bucket: the
+    plan of a host with at least as many cores as buckets."""
+    from victoriametrics_spark.storage import drop_samples_table
+
+    drop_samples_table(spark, "t_shape2")
+    try:
+        _, _, tasks = _run_shape(
+            spark,
+            lambda: write_samples_table(_shape_samples(spark), "t_shape2", n_buckets=2),
+        )
+        assert tasks[-1] == 2
+        per_bucket = _new_files_per_bucket({}, _file_snapshot(spark, "t_shape2"))
+        assert set(per_bucket.values()) == {1} and len(per_bucket) == 4
+    finally:
+        drop_samples_table(spark, "t_shape2")
+
+
+def test_merge_small_parts_write_shape(spark):
+    """merge_small_parts at n_buckets=32 on a 1:0-tenant table over two
+    dates: the same row multiset after the merge, in at most 2 jobs (the
+    scan and the write; no job listing the small files), one task per
+    core in the write stage, and one merged file per (partition,
+    bucket)."""
+    from victoriametrics_spark.storage import drop_samples_table, merge_small_parts
+
+    drop_samples_table(spark, "t_shape_merge")
+    try:
+        write_samples_table(_shape_samples(spark), "t_shape_merge", n_buckets=32)
+        for seed in (3, 5):
+            append_samples(_shape_samples(spark, seed=seed), "t_shape_merge")
+        before_rows = _table_rows(spark, "t_shape_merge")
+        # every file is small: each (partition, bucket) holding more than
+        # one file is merged into one
+        n, jobs, tasks = _run_shape(
+            spark,
+            lambda: merge_small_parts(
+                spark, "t_shape_merge", max_small_bytes=1 << 30
+            ),
+        )
+        assert n > 64
+        assert len(jobs) <= 2, jobs
+        # a parallel file listing runs one task per listed file
+        assert max(tasks) < n, tasks
+        assert tasks[-1] == _write_tasks(spark, 32)
+        after = _file_snapshot(spark, "t_shape_merge")
+        per_bucket = _new_files_per_bucket({}, after)
+        assert set(per_bucket.values()) == {1}
+        assert len(per_bucket) == _touched(spark.table("t_shape_merge"), 32)
+        assert _table_rows(spark, "t_shape_merge") == before_rows
+    finally:
+        drop_samples_table(spark, "t_shape_merge")
+
+
+def test_partition_scoped_compact_write_shape(spark):
+    """A partition-scoped compact_samples_table at n_buckets=32 writes
+    the rewritten partition with one task per core and one file per
+    bucket, and leaves the other partition's files as they were."""
+    from victoriametrics_spark.storage import drop_samples_table
+
+    drop_samples_table(spark, "t_shape_compact")
+    try:
+        write_samples_table(_shape_samples(spark), "t_shape_compact", n_buckets=32)
+        append_samples(_shape_samples(spark, seed=3), "t_shape_compact")
+        before = _file_snapshot(spark, "t_shape_compact")
+        _, _, tasks = _run_shape(
+            spark,
+            lambda: compact_samples_table(
+                spark, "t_shape_compact", n_buckets=32, dates=["2024-01-01"]
+            ),
+        )
+        assert tasks[-1] == _write_tasks(spark, 32)
+        after = _file_snapshot(spark, "t_shape_compact")
+        day2 = {p: m for p, m in before.items() if "date=2024-01-02" in p}
+        assert {p: m for p, m in after.items() if "date=2024-01-02" in p} == day2
+        per_bucket = _new_files_per_bucket(before, after)
+        assert set(per_bucket.values()) == {1}
+        assert len(per_bucket) == _touched(
+            spark.table("t_shape_compact").filter(F.col("date") == "2024-01-01"),
+            32,
+        )
+        assert {p for p in after if "date=2024-01-01" in p} == {
+            p for p in after if p not in before
+        }
+    finally:
+        drop_samples_table(spark, "t_shape_compact")
+
+
+def test_full_compact_write_shape(spark):
+    """A full compact_samples_table at n_buckets=32 over a table of many
+    small files rewrites it with one task per core in the write stage
+    and exactly one file per (partition, bucket), keeping every row."""
+    from victoriametrics_spark.storage import drop_samples_table
+
+    drop_samples_table(spark, "t_shape_full")
+    try:
+        write_samples_table(_shape_samples(spark), "t_shape_full", n_buckets=32)
+        for seed in (3, 5, 7):
+            append_samples(_shape_samples(spark, seed=seed), "t_shape_full")
+        before_rows = _table_rows(spark, "t_shape_full")
+        _, _, tasks = _run_shape(
+            spark,
+            lambda: compact_samples_table(
+                spark, "t_shape_full", n_buckets=32, full=True
+            ),
+        )
+        assert tasks[-1] == _write_tasks(spark, 32)
+        per_bucket = _new_files_per_bucket({}, _file_snapshot(spark, "t_shape_full"))
+        assert set(per_bucket.values()) == {1}
+        assert len(per_bucket) == _touched(spark.table("t_shape_full"), 32)
+        assert _table_rows(spark, "t_shape_full") == before_rows
+    finally:
+        drop_samples_table(spark, "t_shape_full")
+
+
+def test_write_logs_table_write_shape(spark):
+    """write_logs_table at n_buckets=32: one task per core in the write
+    stage, one file per (date, stream bucket)."""
+    from datetime import datetime
+
+    from victoriametrics_spark.storage.layout import (
+        drop_samples_table,
+        write_logs_table,
+    )
+
+    rows = [
+        (datetime(2024, 1, 1 + i % 2, i % 24), f"msg {i}", f"app{i % 50}")
+        for i in range(2000)
+    ]
+    logs = spark.createDataFrame(rows, ["_time", "_msg", "app"])
+    drop_samples_table(spark, "t_shape_logs")
+    try:
+        _, _, tasks = _run_shape(
+            spark,
+            lambda: write_logs_table(
+                logs, "t_shape_logs", stream_fields=["app"], n_buckets=32
+            ),
+        )
+        assert tasks[-1] == _write_tasks(spark, 32)
+        per_bucket = _new_files_per_bucket({}, _file_snapshot(spark, "t_shape_logs"))
+        assert set(per_bucket.values()) == {1}
+        assert len(per_bucket) == _touched(
+            spark.table("t_shape_logs"), 32, key="_stream", part_cols=("date",)
+        )
+    finally:
+        drop_samples_table(spark, "t_shape_logs")

@@ -3640,7 +3640,12 @@ class IngestAPI:
             )
         )
 
-    def _write_samples(self, df: DataFrame, extra_labels=None) -> int:
+    def _write_samples(
+        self, df: DataFrame, extra_labels=None, n_rows: "int | None" = None
+    ) -> int:
+        """Append ``df`` and return the number of rows written.
+        ``n_rows``, when the caller has already counted ``df``, is that
+        number unless a step below drops rows, and saves a recount."""
         if extra_labels:
             # write-side extra_label params (vminsert: applied to every
             # ingested row across all import APIs)
@@ -3660,6 +3665,7 @@ class IngestAPI:
             # rows relabeled to an empty metric name are skipped, like
             # the reference's empty-labels check after relabeling
             df = df.filter(F.coalesce(F.col("name"), F.lit("")) != "")
+            n_rows = None
         backfill = self.max_backfill_age_ms
         if self.retention_ms > 0 and (
             backfill <= 0 or backfill > self.retention_ms
@@ -3673,17 +3679,18 @@ class IngestAPI:
                 if self.future_retention_ms > 0
                 else None
             )
-            total = df.count()
+            total = df.count() if n_rows is None else n_rows
             cond = F.lit(True)
             if lo is not None:
                 cond = cond & (F.col("ts") >= lo)
             if hi is not None:
                 cond = cond & (F.col("ts") <= hi)
             df = df.filter(cond)
-            kept = df.count()
-            self.rows_ignored_total += total - kept
+            n_rows = df.count()
+            self.rows_ignored_total += total - n_rows
         if self.hourly_series_limiter or self.daily_series_limiter:
             df = self._apply_series_limiters(df)
+            n_rows = None
         if self.names_tracker is not None:
             try:
                 self.names_tracker.register_ingest(
@@ -3723,7 +3730,7 @@ class IngestAPI:
             )
         elif self.tenant is not None:
             df = with_tenant(df, self.tenant)
-        n = df.count()
+        n = df.count() if n_rows is None else n_rows
         if self.sink is not None:
             self.sink(df, "samples")
         elif self.samples_table:
@@ -3862,8 +3869,8 @@ class IngestAPI:
             df = P.parse_zabbix(lines)
         else:
             raise ValueError(f"unknown import format {fmt!r}")
-        df = self._count_invalid_lines(df, fmt, body)
-        return self._write_samples(df, extra_labels=extra_labels)
+        df, n_rows = self._count_invalid_lines(df, fmt, body)
+        return self._write_samples(df, extra_labels=extra_labels, n_rows=n_rows)
 
     # candidate-line predicates per text dialect: which body lines the
     # parser is EXPECTED to turn into rows — the shortfall is the
@@ -3879,14 +3886,17 @@ class IngestAPI:
 
     def _count_invalid_lines(
         self, df: DataFrame, fmt: str, body: str, counter_key: str | None = None
-    ) -> DataFrame:
+    ) -> "tuple[DataFrame, int | None]":
         """Checkpoint the parsed frame once (so the count and the write
         share the same evaluation), count parsed lines against the
         body's candidate lines (the body is already a driver string),
-        and record the difference into ``rows_invalid_total``."""
+        and record the difference into ``rows_invalid_total``. Returns
+        the frame and its row count, or None where no rows were counted
+        (influx counts lines; a dialect without candidate lines is not
+        checked)."""
         pred = self._LINE_CANDIDATES.get(fmt)
         if pred is None:
-            return df
+            return df, None
         total = sum(
             1
             for ln in body.splitlines()
@@ -3899,15 +3909,16 @@ class IngestAPI:
                 F.count_distinct(F.col("__line_id"))
             ).first()[0]
             df = df.drop("__line_id")
+            n_rows = None
         else:
-            valid = df.count()
+            valid = n_rows = df.count()
         bad = max(0, total - int(valid or 0))
         if bad:
             key = counter_key or fmt
             self.rows_invalid_total[key] = (
                 self.rows_invalid_total.get(key, 0) + bad
             )
-        return df
+        return df, n_rows
 
     def ingest_scrape(
         self,
@@ -3946,13 +3957,12 @@ class IngestAPI:
         df = P.parse_prometheus_text(self._lines_df(body), ts_ms)
         # a malformed exposition line in a scrape body drops that line
         # only — never the whole scrape (scrapework.go keeps the rest)
-        df = self._count_invalid_lines(
+        df, n_rows = self._count_invalid_lines(
             df, "prometheus", body, counter_key="promscrape"
         )
         if counts is not None:
-            # parsed-row count for scrape_samples_scraped — the frame
-            # is checkpointed above, so this count is a cheap re-read
-            counts["parsed"] = df.count()
+            # parsed-row count for scrape_samples_scraped
+            counts["parsed"] = n_rows
         # honor_timestamps is FALSE by default, contrary to Prometheus
         # (config.go:299-302): body timestamps are replaced with the
         # scrape timestamp; when honored, a literal 0 timestamp still
@@ -3974,8 +3984,9 @@ class IngestAPI:
 
             df = relabel(df, metric_relabel_configs)
             df = df.filter(F.coalesce(F.col("name"), F.lit("")) != "")
+            n_rows = None
             if counts is not None:
-                counts["post_relabel"] = df.count()
+                counts["post_relabel"] = n_rows = df.count()
         if external_labels:
             df = df.withColumn(
                 "labels",
@@ -3998,16 +4009,16 @@ class IngestAPI:
             # the same executor-cached rows instead of running the
             # parse+relabel pipeline twice per scrape
             df = df.localCheckpoint(eager=True)
-            n = df.count()
-            if n > sample_limit:
+            n_rows = df.count()
+            if n_rows > sample_limit:
                 raise SampleLimitError(
                     f"the response from {scrape_url!r} exceeds "
                     f"sample_limit={sample_limit}; either reduce the "
                     "sample count for the target or increase "
                     "sample_limit",
-                    samples=n,
+                    samples=n_rows,
                 )
-        return self._write_samples(df)
+        return self._write_samples(df, n_rows=n_rows)
 
     def import_csv(  # noqa: C901
         self, body: str, format_spec: str, extra_labels=None

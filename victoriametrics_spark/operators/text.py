@@ -556,8 +556,11 @@ def gopher_quality_filter(
 
 
 def _sql_str(s: str) -> str:
-    """SQL single-quoted string literal (backslash-escape dialect)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """SQL string literal for ``s`` that reads back exactly under either
+    setting of ``spark.sql.parser.escapedStringLiterals``: a hex binary
+    literal cast to string, which constant-folds to a plain string
+    literal."""
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
 
 
 def _sql_in_list(values: list[str]) -> str:
@@ -567,8 +570,8 @@ def _sql_in_list(values: list[str]) -> str:
     round trip — measured ~1 ms/element of DRIVER time per plan build,
     i.e. tens of seconds for a 20k-hash membership set, dwarfing the
     query itself. One parsed SQL string carries the whole list across
-    the gateway in a single call; OptimizeIn still compiles it to the
-    same InSet."""
+    the gateway in a single call; the casts fold to literals and
+    OptimizeIn still compiles the list to the same InSet."""
     return ",".join(_sql_str(v) for v in values)
 
 

@@ -35,7 +35,6 @@ def get_spark(app_name: str = "victoriametrics-spark") -> SparkSession:
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.default.parallelism", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -74,9 +73,13 @@ def get_spark(app_name: str = "victoriametrics-spark") -> SparkSession:
         # pure CPU cost, and locality waits are meaningless with one
         # executor. A real cluster (spark-submit master) must NOT get
         # these — compressed shuffles and locality waits are the right
-        # defaults when blocks move between hosts.
+        # defaults when blocks move between hosts. The default
+        # parallelism is set here only: on a cluster it is the executors'
+        # core total, which bucketed writes size their tasks by
+        # (storage/layout.py _by_bucket).
         builder = (
-            builder.config("spark.shuffle.compress", "false")
+            builder.config("spark.default.parallelism", str(n))
+            .config("spark.shuffle.compress", "false")
             .config("spark.shuffle.spill.compress", "false")
             .config("spark.locality.wait", "0s")
         )

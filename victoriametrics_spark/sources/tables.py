@@ -109,7 +109,7 @@ def _spread_small_scan(spark, df: DataFrame, path: str):
 
     if _os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
         return df
-    n_par = int(spark.conf.get("spark.default.parallelism", "8"))
+    n_par = spark.sparkContext.defaultParallelism
     if n_par <= 1:
         return df
     try:

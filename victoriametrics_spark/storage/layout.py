@@ -18,12 +18,19 @@ layout itself replaces both structures:
   window sort is a cheap local merge, mirroring VM streaming each
   series' blocks in ts order (lib/storage/partition_search.go).
 
+Each bucket is written by exactly one task, with at most one task per
+core (:func:`_by_bucket`), so a write adds one file per (partition,
+bucket).
+
 Compaction (the LSM merge analog, lib/storage/merge.go) rewrites a table
 back to one file per (date, bucket), optionally applying last-wins
 dedup exactly like VM dedups during part merges (lib/storage/dedup.go).
 """
 
 from __future__ import annotations
+
+import re
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,9 +97,8 @@ def write_samples_table(
     """Write canonical samples as a date-partitioned, series-bucketed,
     ts-sorted parquet table.
 
-    ``repartition(n_buckets, __series_key)`` uses the same Murmur3 hash
-    as the bucket spec, so each task owns exactly one bucket id and each
-    (date, bucket) pair lands in one file — the compacted invariant.
+    Each bucket is written by exactly one task, so each (date, bucket)
+    pair lands in one file — the compacted invariant.
     ``dedup_interval_ms`` applies last-wins dedup during the write, the
     VM merge-time dedup analog (lib/storage/dedup.go:29-60).
 
@@ -115,13 +121,35 @@ def write_samples_table(
     part_cols = (
         ["tenant", "date"] if "tenant" in df.columns else ["date"]
     )
-    df = df.repartition(n_buckets, F.col("__series_key"))
+    _save_bucketed(df, table, part_cols, "__series_key", "ts", n_buckets, mode)
+
+
+def _by_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
+    """``df`` exchanged so that one task holds each bucket of
+    ``bucketBy(n_buckets, key)``: the partition id is the bucket id taken
+    modulo ``tasks = min(n_buckets, default parallelism)``, so bucket
+    ``b`` lands in task ``b mod tasks`` (32 buckets on 4 cores: 4 tasks
+    of 8; with 32 or more cores, task ``b``). Unlike a hash repartition
+    on the key, this exchange is never dropped as redundant with a
+    bucketed scan's partitioning."""
+    tasks = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartitionById(tasks, F.pmod(F.hash(F.col(key)), F.lit(n_buckets)))
+
+
+def _save_bucketed(
+    df: DataFrame, table: str, part_cols: list[str], key: str, sort_col: str,
+    n_buckets: int, mode: str,
+) -> None:
+    """``saveAsTable`` partitioned by ``part_cols``, bucketed by ``key``
+    and sorted by (``key``, ``sort_col``), each bucket written by one
+    task: one file per (partition, bucket)."""
     (
-        df.write.mode(mode)
+        _by_bucket(df, key, n_buckets)
+        .write.mode(mode)
         .format("parquet")
         .partitionBy(*part_cols)
-        .bucketBy(n_buckets, "__series_key")
-        .sortBy("__series_key", "ts")
+        .bucketBy(n_buckets, key)
+        .sortBy(key, sort_col)
         .saveAsTable(table)
     )
 
@@ -324,25 +352,24 @@ def _table_num_buckets(spark: SparkSession, table: str) -> int | None:
     return None
 
 
-_BUCKET_FILE_RE = None  # compiled lazily (keeps `re` out of module scope)
+_BUCKET_FILE_RE = re.compile(r"_(\d{5})\.")
+
+# inputFiles() writes a URI with an empty authority as "file:///x", the
+# _metadata.file_path column as "file:/x" (both percent-escaped alike):
+# _file_key and _FILE_KEY_SQL bring either form to "file:/x".
+_EMPTY_AUTHORITY = "^([A-Za-z][A-Za-z0-9+.-]*):///"
+_FILE_KEY_SQL = f"regexp_replace(_metadata.file_path, '{_EMPTY_AUTHORITY}', '$1:/')"
 
 
-def _part_value(seg: str) -> str:
-    """Partition VALUE from a URI path segment. Two decode layers:
-    ``inputFiles()``/``_metadata.file_path`` percent-encode the URI on
-    top of Spark's partition-dir escaping — value ``1:0`` is the disk
-    dir ``tenant=1%3A0`` and the URI segment ``tenant=1%253A0``."""
-    from urllib.parse import unquote
-
-    return unquote(unquote(seg))
+def _file_key(uri: str) -> str:
+    """The matching form of a data-file URI (see ``_EMPTY_AUTHORITY``)."""
+    return re.sub(_EMPTY_AUTHORITY, r"\1:/", uri)
 
 
 def _plain_uri(uri: str) -> str:
     """URI → the literal filesystem path form (one decode layer):
     Hadoop ``Path``/``os.stat`` want the on-disk name (``1%3A0``), not
     the re-encoded URI (``1%253A0``)."""
-    from urllib.parse import unquote
-
     return unquote(uri)
 
 
@@ -353,18 +380,14 @@ def _decode_part_uri(uri: str, part_cols: list[str]) -> tuple:
     Hive partition-dir escapes — regression-tested on "1:0"-style
     tenants) so every file-listing consumer agrees on partition
     identity."""
-    import re as _re
-
-    global _BUCKET_FILE_RE
-    if _BUCKET_FILE_RE is None:
-        _BUCKET_FILE_RE = _re.compile(r"_(\d{5})\.")
     segs = uri.split("/")
     vals = {}
     for seg in segs[:-1]:
         if "=" in seg:
             k, v = seg.split("=", 1)
             if k in part_cols:
-                vals[k] = _part_value(v)
+                # value 1:0 → dir tenant=1%3A0 → URI tenant=1%253A0
+                vals[k] = unquote(unquote(v))
     key = tuple(vals.get(c, "") for c in part_cols)
     m = _BUCKET_FILE_RE.search(segs[-1])
     return key, (int(m.group(1)) if m else -1)
@@ -397,15 +420,23 @@ def _partitions_predicate(part_cols: list[str], parts) -> Column:
     return pred
 
 
+def _drop_partition(
+    spark: SparkSession, table: str, part_cols: list[str], part: tuple
+) -> None:
+    spec = ", ".join(f"{c}='{v}'" for c, v in zip(part_cols, part))
+    spark.sql(f"ALTER TABLE {table} DROP PARTITION ({spec})")
+
+
 def _insert_overwrite_bucketed(
     spark: SparkSession, table: str, sub: DataFrame, n_buckets: int
 ) -> None:
     """Dynamic-partition-overwrite ``insertInto`` preserving the table's
-    bucket/sort spec. The repartition keys on the BUCKET-ID expression,
-    not the key: a repartition on ``__series_key`` is semantically
-    redundant with the bucketed scan's partitioning and gets elided,
-    after which each scan split writes its own per-bucket file —
-    breaking the one-file-per-(partition, bucket) invariant."""
+    bucket/sort spec, each bucket written by exactly one task. The
+    exchange keys on the BUCKET ID (:func:`_by_bucket`): a repartition
+    on ``__series_key`` is redundant with the bucketed scan's
+    partitioning and gets elided, after which each scan split writes its
+    own per-bucket file — breaking the one-file-per-(partition, bucket)
+    invariant."""
     cols = spark.table(table).columns
     mode_key = "spark.sql.sources.partitionOverwriteMode"
     try:
@@ -414,19 +445,31 @@ def _insert_overwrite_bucketed(
         old_mode = None
     spark.conf.set(mode_key, "dynamic")
     try:
-        (
-            sub.select(*cols)
-            .repartition(
-                n_buckets, F.expr(f"pmod(hash(__series_key), {n_buckets})")
-            )
-            .write.mode("overwrite")
-            .insertInto(table)
-        )
+        out = _by_bucket(sub.select(*cols), "__series_key", n_buckets)
+        out.write.mode("overwrite").insertInto(table)
     finally:
         if old_mode is None:
             spark.conf.unset(mode_key)
         else:
             spark.conf.set(mode_key, old_mode)
+
+
+def _rewrite_partitions(
+    spark: SparkSession, table: str, part_cols: list[str], sub: DataFrame,
+    targets, n_buckets: int,
+) -> set:
+    """Overwrite the ``targets`` partitions with the rows of ``sub`` and
+    return the ones written. Dynamic overwrite only touches partitions
+    present in the output, so a target left with no rows is dropped."""
+    written = {
+        tuple(str(r[c]) for c in part_cols)
+        for r in sub.select(*part_cols).distinct().collect()
+    }
+    if written:
+        _insert_overwrite_bucketed(spark, table, sub, n_buckets)
+    for p in sorted(set(targets) - written):
+        _drop_partition(spark, table, part_cols, p)
+    return written
 
 
 def _compact_full(
@@ -550,7 +593,6 @@ def compact_samples_table(
         if date_set is None
         else {p for p in affected if p[-1] in date_set}
     )
-    written: set = set()
     if target:
         pred = _partitions_predicate(part_cols, target)
         sub = _apply_tombstones(spark, scan, table).filter(pred)
@@ -565,19 +607,7 @@ def compact_samples_table(
             from victoriametrics_spark.storage.downsample import downsample
 
             sub = downsample(sub, downsample_rules, int(now_ms))
-        # dynamic overwrite only touches partitions present in the
-        # output — detect fully-dead ones first to DROP them instead
-        written = {
-            tuple(str(r[c]) for c in part_cols)
-            for r in sub.select(*part_cols).distinct().collect()
-        }
-        if written:
-            _insert_overwrite_bucketed(spark, table, sub, cur)
-        for p in sorted(target - written):
-            spec = ", ".join(
-                f"{c}='{v}'" for c, v in zip(part_cols, p)
-            )
-            spark.sql(f"ALTER TABLE {table} DROP PARTITION ({spec})")
+        _rewrite_partitions(spark, table, part_cols, sub, target, cur)
         spark.catalog.refreshTable(table)
 
     # (3) clear only the tombstones whose dead rows were all rewritten
@@ -605,10 +635,11 @@ def compact_samples_table(
 def _partition_files_with_size(
     spark: SparkSession, table: str, part_cols: list[str]
 ) -> dict:
-    """{partition tuple (decoded VALUES): {bucket_id: [(plain_path,
+    """{partition tuple (decoded VALUES): {bucket_id: [(uri,
     size_bytes, mtime_ms)]}} — metadata only (the part-header inspection
-    VM's merge picker does). Paths are returned in literal filesystem
-    form (``_plain_uri``), ready for Hadoop/os operations."""
+    VM's merge picker does). URIs are returned as ``inputFiles()`` lists
+    them; ``_plain_uri`` turns one into the path Hadoop/os operations
+    want."""
     import os as _os
 
     jsc = spark.sparkContext._jsc
@@ -629,7 +660,7 @@ def _partition_files_with_size(
             st = fs.getFileStatus(hpath)
             size, mtime_ms = st.getLen(), st.getModificationTime()
         out.setdefault(key, {}).setdefault(b, []).append(
-            (plain, size, mtime_ms)
+            (uri, size, mtime_ms)
         )
     return out
 
@@ -653,6 +684,10 @@ def merge_small_parts(
     :func:`compact_samples_table` full-partition rewrites (which restore
     the one-file-per-bucket sorted-scan invariant).
 
+    The small files are read through the table's own file index, pruned
+    by ``_metadata.file_path``, and their rows are appended to the table
+    in one job for all affected partitions.
+
     Tombstoned rows are dropped while merging (the merged file's fresh
     mtime would otherwise resurrect them past the tombstone watermark);
     the tombstone side-table itself is left for compaction to clear,
@@ -663,7 +698,6 @@ def merge_small_parts(
     part_cols = [c for c in ("tenant", "date") if c in scan.columns]
     if cur is None or not part_cols:
         raise ValueError(f"{table!r} is not a bucketed, partitioned table")
-    data_cols = [c for c in scan.columns if c not in part_cols]
     date_set = {str(d) for d in dates} if dates is not None else None
     idx = _partition_files_with_size(spark, table, part_cols)
     smalls: list[str] = []
@@ -671,30 +705,19 @@ def merge_small_parts(
         if date_set is not None and part[-1] not in date_set:
             continue
         for files in buckets.values():
-            small_b = [p for p, size, _ in files if size <= max_small_bytes]
+            small_b = [u for u, size, _ in files if size <= max_small_bytes]
             if len(small_b) >= 2:
                 smalls.extend(small_b)
     if not smalls:
         return 0
-    # ONE job for every affected partition: read all small files at
-    # once, recover the partition values from each row's file path, and
-    # write a single partitioned+bucketed temp table whose files are
-    # then moved into place — a thousand-partition backfill merge is one
-    # Spark job, not a thousand
-    df = spark.read.parquet(*smalls)
-    path_col = F.col("_metadata.file_path")
-    for c in part_cols:
-        # two decode layers: the URI percent-encoding on top of Spark's
-        # partition-dir escaping (value "1:0" → dir "tenant=1%3A0" →
-        # URI "tenant=1%253A0")
-        df = df.withColumn(
-            c,
-            F.url_decode(
-                F.url_decode(
-                    F.regexp_extract(path_col, f"/{c}=([^/]+)/", 1)
-                )
-            ),
-        )
+    # the file list goes in as hex literals: they need no escaping in
+    # either string-literal dialect, and one SQL string crosses py4j
+    # once, where Column.isin makes a round trip per element. The
+    # filter prunes files before any is opened; a partition predicate
+    # on top would add only driver cost (an OR-chain of one term per
+    # partition, which overflows the JVM stack at 500 partitions)
+    keys = ",".join(f"'{_file_key(u).encode().hex().upper()}'" for u in smalls)
+    df = scan.filter(F.expr(f"hex({_FILE_KEY_SQL}) IN ({keys})"))
     df = _apply_tombstones(spark, df, table)
     if downsample_rules and now_ms is not None:
         # thin the merged small parts like VM downsampling a partial
@@ -703,36 +726,18 @@ def merge_small_parts(
         from victoriametrics_spark.storage.downsample import downsample
 
         df = downsample(df, downsample_rules, int(now_ms))
-    df = df.select(*data_cols, *part_cols)
-    tmp = f"{table}__merge_tmp"
-    drop_samples_table(spark, tmp)
-    (
-        df.repartition(cur, F.expr(f"pmod(hash(__series_key), {cur})"))
-        .write.format("parquet")
-        .partitionBy(*part_cols)
-        .bucketBy(cur, "__series_key")
-        .sortBy("__series_key", "ts")
-        .saveAsTable(tmp)
+    # appended in one job, each bucket by one task, before the small
+    # files go: a reader in between sees rows twice, never loses one
+    out = _by_bucket(df.select(*scan.columns), "__series_key", cur)
+    out.write.mode("append").insertInto(table)
+    # one lookup of the class: each step of the package path is a py4j
+    # round trip, per file deleted otherwise
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs = Path(_plain_uri(smalls[0])).getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration()
     )
-    jsc = spark.sparkContext._jsc
-    jvm = spark.sparkContext._jvm
-    table_root = "/".join(
-        smalls[0].split("/")[: -(1 + len(part_cols))]
-    )
-    fs = jvm.org.apache.hadoop.fs.Path(table_root).getFileSystem(
-        jsc.hadoopConfiguration()
-    )
-    for new_uri in spark.table(tmp).inputFiles():
-        plain = _plain_uri(new_uri)
-        segs = plain.split("/")
-        rel = "/".join(segs[-(1 + len(part_cols)):])  # part dirs + file
-        src = jvm.org.apache.hadoop.fs.Path(plain)
-        dst = jvm.org.apache.hadoop.fs.Path(f"{table_root}/{rel}")
-        if not fs.rename(src, dst):
-            raise IOError(f"rename {plain} -> {dst} failed")
     for old in smalls:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(old), False)
-    drop_samples_table(spark, tmp)
+        fs.delete(Path(_plain_uri(old)), False)
     spark.catalog.refreshTable(table)
     return len(smalls)
 
@@ -889,10 +894,7 @@ def apply_retention(
         expired = retention_ms > 0 and end <= now_ms - int(retention_ms)
         too_future = start > now_ms + int(future_retention_ms)
         if expired or too_future:
-            spec = ", ".join(
-                f"{c}='{v}'" for c, v in zip(part_cols, part)
-            )
-            spark.sql(f"ALTER TABLE {table} DROP PARTITION ({spec})")
+            _drop_partition(spark, table, part_cols, part)
             dropped.append(part)
             if state.pop("|".join(part), None) is not None:
                 state_dirty = True
@@ -935,17 +937,10 @@ def apply_retention(
                 scan.filter(_partitions_predicate(part_cols, targets)),
                 table,
             ).filter(keep)
-            written = {
-                tuple(str(r[c]) for c in part_cols)
-                for r in sub.select(*part_cols).distinct().collect()
-            }
-            if written:
-                _insert_overwrite_bucketed(spark, table, sub, cur)
-            for p in sorted(set(targets) - written):
-                spec = ", ".join(
-                    f"{c}='{v}'" for c, v in zip(part_cols, p)
-                )
-                spark.sql(f"ALTER TABLE {table} DROP PARTITION ({spec})")
+            written = _rewrite_partitions(
+                spark, table, part_cols, sub, targets, cur
+            )
+            for p in set(targets) - written:
                 state.pop("|".join(p), None)
             rewritten = sorted(targets)
             spark.catalog.refreshTable(table)
@@ -1252,15 +1247,7 @@ def write_logs_table(
         df = df.withColumn("_stream", F.lit("{}"))
     df = df.withColumn("date", F.to_date(F.col("_time").cast("timestamp")))
     log_parts = ["tenant", "date"] if "tenant" in df.columns else ["date"]
-    (
-        df.repartition(n_buckets, F.col("_stream"))
-        .write.mode(mode)
-        .format("parquet")
-        .partitionBy(*log_parts)
-        .bucketBy(n_buckets, "_stream")
-        .sortBy("_stream", "_time")
-        .saveAsTable(table)
-    )
+    _save_bucketed(df, table, log_parts, "_stream", "_time", n_buckets, mode)
 
 
 def apply_logs_retention(
@@ -1284,10 +1271,7 @@ def apply_logs_retention(
     for part in sorted(_partition_file_index(spark, table, part_cols)):
         _, end = _date_bounds_ms(part[-1])
         if end <= now_ms - int(retention_ms):
-            spec = ", ".join(
-                f"{c}='{v}'" for c, v in zip(part_cols, part)
-            )
-            spark.sql(f"ALTER TABLE {table} DROP PARTITION ({spec})")
+            _drop_partition(spark, table, part_cols, part)
             dropped.append(part)
     if dropped:
         spark.catalog.refreshTable(table)
