@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import math
+import random
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -770,6 +774,199 @@ def test_semantic_dedup_real_corpus(embs):
     loose = semantic_dedup(embs, 0.3, k_cells=8).count()
     tight = semantic_dedup(embs, 0.9, k_cells=8).count()
     assert 0 < loose <= tight <= total
+
+
+def _fold_normed(v):
+    """The vector divided by its norm as Spark computes it: a sequential
+    Σx² and try_divide. None where Spark's cosine is null."""
+    if v is None or any(x is None for x in v):
+        return None
+    s = 0.0
+    for x in v:
+        s += x * x
+    n = math.sqrt(s)
+    return None if n == 0 else [x / n for x in v]
+
+
+def _ref_pairs(rows, tau):
+    """{(group, id_a, id_b): cosine} for (group, id, vector) rows, by a
+    plain ``dot += x * y``; a NaN cosine counts as >= tau."""
+    normed = [(g, i, _fold_normed(v)) for g, i, v in rows]
+    out = {}
+    for g, i, a in normed:
+        for h, j, b in normed:
+            if g is None or g != h or not i < j or a is None or b is None:
+                continue
+            if len(a) != len(b):
+                continue
+            dot = 0.0
+            for x, y in zip(a, b):
+                dot += x * y
+            if not dot < tau:
+                out[(g, i, j)] = dot
+    return out
+
+
+def _round6(c):
+    """Spark's round(c, 6): HALF_UP on the decimal form; 'nan' for NaN
+    so results compare as values."""
+    if math.isnan(c):
+        return "nan"
+    return float(Decimal(repr(c)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _pair_at(rng, target, dim=64):
+    """Two vectors whose sequential-fold cosine is exactly ``target``:
+    a pair near it, nudged by relative 2^-50 steps until it lands."""
+    u = _fold_normed([rng.gauss(0, 1) for _ in range(dim)])
+    w = [rng.gauss(0, 1) for _ in range(dim)]
+    p = sum(x * y for x, y in zip(u, w))
+    w = _fold_normed([y - p * x for x, y in zip(u, w)])
+    s = math.sqrt(1 - target * target)
+    v = [target * x + s * y for x, y in zip(u, w)]
+    while True:
+        vv = [x * (1 + rng.uniform(-1, 1) * 2.0**-50) for x in v]
+        if _ref_pairs([(0, 0, u), (0, 1, vv)], -2.0)[(0, 0, 1)] == target:
+            return u, vv
+
+
+def test_within_group_pairs_exact_at_tau(spark):
+    """Pairs whose sequential-fold cosine is exactly tau are kept and
+    pairs one ulp below are dropped, whatever order BLAS sums in; the
+    kernel's cosines equal the plain left-to-right fold bit for bit.
+    Null, null-element, zero, ragged and NaN vectors pair as Spark's
+    null / NaN cosine does."""
+    import pyarrow as pa
+
+    from victoriametrics_spark.operators.knn import (
+        _group_pairs,
+        semantic_dedup_pairs,
+    )
+
+    rng = random.Random(20240)
+    tau = 0.9
+    rows = []  # (label, vec_id, embedding)
+    below, above = math.nextafter(tau, -math.inf), math.nextafter(tau, math.inf)
+    for k, target in enumerate([tau, below, above] * 6):
+        u, v = _pair_at(rng, target)
+        rows += [(k, 2 * k, u), (k, 2 * k + 1, v)]
+    u0 = rows[0][2]
+    rows += [
+        (0, 100, [0.0] * 64),                # zero norm
+        (0, 101, [None] + u0[1:]),           # null element
+        (0, 102, None),                      # null vector
+        (1, 103, [float("nan")] + u0[1:]),   # NaN: pairs with all of label 1
+        (2, 104, [1.0, 0.0]),                # ragged: pairs only with 105
+        (2, 105, [1.0, 1e-9]),
+        (None, 106, [1.0, 0.0]),             # a null label pairs nothing
+        (None, 107, [1.0, 0.0]),
+    ]
+    want = _ref_pairs(rows, tau)
+    assert {(0, 0, 1), (3, 6, 7), (2, 4, 5)} <= set(want)
+    assert (1, 2, 3) not in want and (1, 2, 103) in want
+    assert (2, 104, 105) in want and not any(106 in k for k in want)
+
+    # the kernel itself, unrounded: the fold decides and gives the value
+    a, b, cos = _group_pairs(
+        pa.array([i for _, i, _ in rows], pa.int64()),
+        pa.array([v for _, _, v in rows], pa.list_(pa.float64())),
+        tau,
+        1024,
+    )
+    got = {(rows[x][1], rows[y][1]): repr(c) for x, y, c in zip(a, b, cos)}
+    # one group here, so the pairs of all labels meet
+    one_group = _ref_pairs([(0, i, v) for _, i, v in rows], tau)
+    assert got == {(i, j): repr(c) for (_, i, j), c in one_group.items()}
+
+    df = spark.createDataFrame(
+        rows, "label int, vec_id long, embedding array<double>"
+    )
+    got = {
+        (r["label"], r["id_a"], r["id_b"]): _round6(r["cosine"])
+        for r in pairwise_cosine_within(df, "label", tau).collect()
+    }
+    assert got == {k: _round6(c) for k, c in want.items()}
+
+    # SemDeDup with one centroid: every vector lands in cell 0
+    got = {
+        (r["cell"], r["id_a"], r["id_b"]): _round6(r["cosine"])
+        for r in semantic_dedup_pairs(
+            df, tau, centroids=[(0, [0.0] * 64)]
+        ).collect()
+    }
+    assert got == {k: _round6(c) for k, c in one_group.items()}
+
+
+def test_semantic_dedup_tiled_gram_matches_reference(spark):
+    """One cell of 60 vectors in planted duplicate clusters, with the
+    Gram cut into 7-row tiles: pair set and keep-list equal the untiled
+    pass and the plain-Python reference, and semantic_dedup hands back
+    the kept rows unchanged on every column."""
+    from array import array
+
+    from victoriametrics_spark.operators.knn import _within_group, semantic_dedup
+
+    rng = random.Random(5)
+    centers = [[rng.gauss(0, 1) for _ in range(16)] for _ in range(15)]
+    rows = []
+    for i in range(60):
+        noise = 0.02 if i % 4 else 0.5
+        v = [x + rng.gauss(0, noise) for x in centers[rng.randrange(15)]]
+        rows.append(
+            (
+                1000 - 7 * i,
+                array("f", v).tolist(),
+                i % 3,
+                float("nan") if i % 11 == 0 else i / 4,
+                None if i % 13 == 0 else f"t{i}",
+                None if i % 17 == 0 else 2**60 + i,
+            )
+        )
+    rows.append((5, [None] + rows[0][1][1:], 0, 1.0, "n", None))
+    df = spark.createDataFrame(
+        rows,
+        "vec_id long, embedding array<float>, label int, score double, "
+        "tag string, big long",
+    )
+    tau = 0.95
+    want = _ref_pairs([(0, r[0], r[1]) for r in rows], tau)
+    assert len(want) > 20
+    parent = {r[0]: r[0] for r in rows}
+
+    def root(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for _, i, j in want:
+        ri, rj = root(i), root(j)
+        parent[max(ri, rj)] = min(ri, rj)
+    want_keep = {r[0] for r in rows if root(r[0]) == r[0]}
+    assert len(want_keep) < len(rows)
+
+    one_cell = df.withColumn("cell", F.lit(0))
+    for tile in (7, 1024):
+        pairs = _within_group(
+            one_cell.select("cell", "vec_id", "embedding"),
+            "cell", tau, "embedding", "vec_id", _tile_rows=tile,
+        )
+        got = {
+            (r["cell"], r["id_a"], r["id_b"]): _round6(r["cosine"])
+            for r in pairs.collect()
+        }
+        assert got == {k: _round6(c) for k, c in want.items()}
+        kept = _within_group(
+            one_cell, "cell", tau, "embedding", "vec_id",
+            keep_rows=True, _tile_rows=tile,
+        )
+        assert {r["vec_id"] for r in kept.collect()} == want_keep
+
+    kept = semantic_dedup(df, tau, k_cells=1)
+    assert kept.columns == df.columns
+    ids = spark.createDataFrame([(i,) for i in want_keep], "vec_id long")
+    assert sorted(map(repr, kept.collect())) == sorted(
+        map(repr, df.join(ids, "vec_id").select(df.columns).collect())
+    )
 
 
 def test_remove_boilerplate_lines(spark):

@@ -11,8 +11,9 @@ behavior it must preserve:
   min(md5(shingle ∥ '#' ∥ seed));
 - connected_components solves small graphs on the driver — the driver
   union-find and the distributed min-label loop must agree;
-- pairwise_cosine_within unrolls the per-pair dot with a ragged-row
-  fold fallback — both paths must agree, including for ragged vectors;
+- pairwise_cosine_within computes each group's pairs in one grouped-map
+  pass (numpy Gram, exact fold re-check) — pairs must match the
+  sequential fold, and a ragged vector must pair with nothing;
 - load_table spreads single-split payload-table scans only where scoped.
 """
 
@@ -104,10 +105,9 @@ def test_connected_components_driver_vs_distributed(spark):
 
 
 def test_pairwise_cosine_unrolled_matches_fold(spark):
-    """The unrolled per-pair dot must match the interpreted fold — on
-    uniform dims (unrolled path) and when a ragged vector forces the
-    guarded fold fallback (where the fold's zip_with null-padding
-    yields a null cosine and the pair drops)."""
+    """The grouped-map pass must match the sequential fold — on uniform
+    dims, and with a ragged vector, whose pairs have a null cosine under
+    the fold's zip_with null-padding and so drop."""
     from victoriametrics_spark.operators.knn import pairwise_cosine_within
 
     rows = [

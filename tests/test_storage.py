@@ -1474,3 +1474,38 @@ def test_write_logs_table_write_shape(spark):
         )
     finally:
         drop_samples_table(spark, "t_shape_logs")
+
+
+def test_500_partition_rewrites_keep_rows(spark):
+    """Retention and compaction over 500 date partitions at once: the
+    partition predicate is one expression, so it neither overflows the
+    JVM stack nor changes which rows survive."""
+    from victoriametrics_spark.storage import apply_retention, drop_samples_table
+
+    days = 500
+    rows = [(s, T0 + d * DAY, float(d)) for s in ("a", "b") for d in range(days)]
+    write_samples_table(_mk_samples(spark, rows), "t_p500", n_buckets=1)
+    try:
+        late = [("b", T0 + d * DAY + H, -1.0) for d in range(days)]
+        append_samples(_mk_samples(spark, late), "t_p500", n_buckets=1)
+        before = _table_rows(spark, "t_p500")
+        compact_samples_table(spark, "t_p500", n_buckets=1)
+        assert _table_rows(spark, "t_p500") == before
+        assert len(_file_snapshot(spark, "t_p500")) == days
+
+        out = apply_retention(
+            spark,
+            "t_p500",
+            now_ms=T0 + (days + 1) * DAY,
+            retention_ms=10 * days * DAY,
+            retention_filters=[('m{s="a"}', DAY)],
+        )
+        assert len(out["rewritten_partitions"]) == days
+        t = read_samples_table(spark, "t_p500")
+        got = sorted(
+            (r["labels"]["s"], r["ts"], r["value"])
+            for r in t.select("labels", "ts", "value").collect()
+        )
+        assert got == sorted((s, ts, v) for s, ts, v in rows + late if s == "b")
+    finally:
+        drop_samples_table(spark, "t_p500")

@@ -102,22 +102,6 @@ def match_key_col(group_modifier) -> Column:
     return canonical_labels_str(restricted)
 
 
-def result_labels_one_to_one(group_modifier) -> Column:
-    """One-to-one result labels: on() keeps only the on-labels; ignoring()
-    drops the ignored; default keeps all (name dropped separately)."""
-    labels = F.col("labels")
-    if group_modifier is None:
-        return labels
-    keys = [str(k) for k in group_modifier.args]
-    if group_modifier.op == "on":
-        if not keys:
-            return F.create_map().cast("map<string,string>")
-        return F.map_filter(labels, lambda k, v: k.isin(*keys))
-    if not keys:
-        return labels
-    return F.map_filter(labels, lambda k, v: ~k.isin(*keys))
-
-
 def plan_binop(planner: "Planner", be: BinaryOpExpr, cfg: EvalConfig) -> "Plan":
     from victoriametrics_spark.engine.planner import PlanError, Scalar
 

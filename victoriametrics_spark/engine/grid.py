@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -237,21 +237,3 @@ def grid_df(spark, cfg: EvalConfig) -> DataFrame:
     return spark.range(cfg.num_points).select(
         (F.lit(cfg.start) + F.col("id") * F.lit(cfg.step)).alias("ts")
     )
-
-
-def finalize_rollup(
-    grouped: DataFrame,
-    value_col: Column,
-    cfg: EvalConfig,
-    keep_name: bool,
-) -> DataFrame:
-    """Shared post-aggregation shaping: reconstruct grid ts, drop empty
-    values, erase metric name unless the function keeps it
-    (rollupFuncsKeepMetricName, rollup.go:267)."""
-    out = grouped.select(
-        (F.col("name") if keep_name else F.lit("")).alias("name"),
-        F.col("labels").alias("labels"),
-        (F.lit(cfg.start) + F.col("i") * F.lit(cfg.step)).alias("ts"),
-        value_col.alias("value"),
-    )
-    return out.filter(F.col("value").isNotNull())

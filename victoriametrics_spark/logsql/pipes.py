@@ -231,10 +231,6 @@ def regexp_filter(col: Column, pattern: str) -> Column:
     return col.rlike(pattern)
 
 
-def range_filter(col: Column, lo, hi) -> Column:
-    return (col >= lo) & (col <= hi)
-
-
 def in_filter(col: Column, values: list) -> Column:
     return col.isin(*values)
 

@@ -211,19 +211,6 @@ def _pairs_from_bands(banded: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(
-    sig: DataFrame, band_size: int = 3
-) -> DataFrame:
-    """Band the signature, bucket-join: docs sharing any band key become
-    candidate pairs (distinct)."""
-    banded = (
-        sig.withColumn("band", (F.col("seed") / F.lit(band_size)).cast("int"))
-        .groupBy("id", "band")
-        .agg(F.array_join(F.array_sort(F.collect_list("mh")), "|").alias("bkey"))
-    )
-    return _pairs_from_bands(banded)
-
-
 def _exact_jaccard_for_pairs(
     base: DataFrame, cands: DataFrame
 ) -> DataFrame:

@@ -6,6 +6,10 @@
   products with R fixed planes; candidate set = query's bucket (optionally
   multi-probe). At 100 TB the bucket column is computed once at ingest and
   used as a partition/bucketing key so a query touches one bucket's files.
+- Within-group pairs (pairwise_cosine_within, SemDeDup): one grouped-map
+  pass per group — a numpy Gram per label or IVF cell, with every entry
+  near tau re-checked by the exact left-to-right fold. One group must
+  fit one Python worker, so SemDeDup's ``k_cells`` grows with the corpus.
 """
 
 from __future__ import annotations
@@ -13,6 +17,9 @@ from __future__ import annotations
 import math
 import random
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -23,8 +30,7 @@ from pyspark.sql import functions as F
 # into whole-stage codegen. The chain performs the SAME additions and
 # multiplications in the SAME order, so results stay bit-identical to
 # the sequential fold the DuckDB oracle mirrors (measured ~4-8x on the
-# embedding gates, whose per-pair 64-term folds dominated). Folds remain
-# only as guarded fallbacks where array-length semantics could differ.
+# embedding gates, whose per-pair 64-term folds dominated).
 
 
 def _chain_sum(terms: list[Column]) -> Column:
@@ -44,8 +50,8 @@ def _dot_with_literal(vec_col: Column, q: list[float]) -> Column:
     an unrolled chain here bloats every literal-query plan (scored +
     filtered copies) and costs more in optimizer time than it saves —
     measured: knn_threshold 1.0→1.3s, lsh_knn 2.7→4.0s with unrolling.
-    The unrolled chain is reserved for the per-PAIR hot loops
-    (pairwise_cosine_within, _sub_sqdist) where runtime dominates."""
+    The unrolled chain is reserved for per-PAIR hot loops
+    (_sub_sqdist) where runtime dominates."""
     arr = F.transform(
         F.sequence(F.lit(1), F.lit(len(q))),
         lambda i: F.element_at(vec_col, i).cast("double")
@@ -54,31 +60,14 @@ def _dot_with_literal(vec_col: Column, q: list[float]) -> Column:
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _norm_fold(vec_col: Column) -> Column:
+def _norm(vec_col: Column) -> Column:
+    """√Σ vec[i]² as a sequential fold over the row's own array."""
     sq = F.aggregate(
         vec_col,
         F.lit(0.0),
         lambda acc, x: acc + x.cast("double") * x.cast("double"),
     )
     return F.sqrt(sq)
-
-
-def _norm(vec_col: Column, dim: int | None = None) -> Column:
-    """√Σ vec[i]² over the row's own array. With ``dim`` the sum is
-    unrolled for codegen, guarded by a size check so a ragged row falls
-    back to the fold (identical value either way)."""
-    if dim is None:
-        return _norm_fold(vec_col)
-    sq = _chain_sum(
-        [
-            F.element_at(vec_col, i + 1).cast("double")
-            * F.element_at(vec_col, i + 1).cast("double")
-            for i in range(dim)
-        ]
-    )
-    return F.when(F.size(vec_col) == dim, F.sqrt(sq)).otherwise(
-        _norm_fold(vec_col)
-    )
 
 
 def cosine_to_query(
@@ -315,78 +304,115 @@ def lsh_knn_threshold(
     )
 
 
+_GRAM_TILE_ROWS = 1024  # Gram block edge: memory O(n·dim + tile²)
+_GRAM_MARGIN = 1e-9  # ≫ |BLAS dot − fold dot| ≤ 2·dim·2^-53 on unit vectors
+
+
+def _group_pairs(ids: pa.Array, vecs: pa.Array, tau: float, tile_rows: int):
+    """Row indices ``a``, ``b`` and cosines of one group's pairs with
+    ``id_a < id_b`` and cosine ≥ tau, NaN counting as ≥ (Spark's and
+    DuckDB's order). A numpy Gram in row tiles finds candidates within
+    _GRAM_MARGIN of tau; the left-to-right fold the oracles define,
+    after :func:`_norm`'s Σx² and ``try_divide``, decides them. A null
+    id, vector or element, a zero norm or unequal lengths form no pair:
+    there the Spark fold's cosine is null."""
+    offsets = vecs.offsets.to_numpy()
+    starts, lens = offsets[:-1], np.diff(offsets)
+    nulls = np.concatenate(([0], np.cumsum(np.asarray(vecs.values.is_null()))))
+    ok = np.asarray(ids.is_valid()) & np.asarray(vecs.is_valid()) & (lens > 0)
+    ok &= nulls[offsets[1:]] == nulls[starts]  # no null element
+    vals = vecs.values.to_numpy(zero_copy_only=False).astype(np.float64)
+    rank = np.asarray(pc.rank(ids, tiebreaker="dense"))
+    rows = np.flatnonzero(ok)
+    rows = rows[np.argsort(rank[rows], kind="stable")]
+    found = [(np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))]
+    for d in np.unique(lens[rows]):
+        sub = rows[lens[rows] == d]
+        x = vals[starts[sub][:, None] + np.arange(d)]
+        sq = np.zeros(len(sub))
+        for j in range(d):
+            sq = sq + x[:, j] * x[:, j]
+        norm = np.sqrt(sq)
+        sub, nv = sub[norm != 0], x[norm != 0] / norm[norm != 0, None]
+        nvt, r = np.ascontiguousarray(nv.T), rank[sub]
+        for i0 in range(0, len(sub), tile_rows):
+            for j0 in range(i0, len(sub), tile_rows):
+                g = nv[i0 : i0 + tile_rows] @ nv[j0 : j0 + tile_rows].T
+                a, b = np.nonzero(~(g < tau - _GRAM_MARGIN))
+                a, b = a + i0, b + j0
+                upper = r[a] < r[b]  # rows are in id order: also b > a
+                a, b = a[upper], b[upper]
+                cos = np.zeros(len(a))
+                for j in range(d):
+                    cos = cos + nvt[j, a] * nvt[j, b]
+                hit = ~(cos < tau)
+                found.append((sub[a[hit]], sub[b[hit]], cos[hit]))
+    return tuple(np.concatenate(c) for c in zip(*found))
+
+
+def _kept_rows(ids: pa.Array, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Rows that survive dedup over the pair graph ``a``–``b``: each row
+    whose id is in no pair, and the minimum id of each component. Nodes
+    are ids (min-label propagation with pointer jumping), so rows
+    sharing an id stay or go together."""
+    node = np.asarray(pc.rank(ids, tiebreaker="dense")).astype(np.int64) - 1
+    ea, eb = node[a], node[b]
+    label = np.arange(node.max() + 1)
+    while True:
+        nxt = label.copy()
+        np.minimum.at(nxt, ea, label[eb])
+        np.minimum.at(nxt, eb, label[ea])
+        nxt = nxt[nxt]
+        if np.array_equal(nxt, label):
+            return np.flatnonzero(~np.asarray(ids.is_valid()) | (label[node] == node))
+        label = nxt
+
+
+def _within_group(
+    df: DataFrame, key_col: str, tau: float, vec_col: str, id_col: str,
+    keep_rows: bool = False, _tile_rows: int = _GRAM_TILE_ROWS,
+) -> DataFrame:
+    """One ``groupBy(key_col).applyInArrow`` pass of :func:`_group_pairs`:
+    ``(key_col, id_a, id_b, cosine)`` with the cosine rounded to 6
+    places, or with ``keep_rows`` the rows :func:`_kept_rows` keeps,
+    minus ``key_col`` and unchanged (Arrow, unlike pandas, keeps a NaN
+    element apart from null). ``_tile_rows`` rides in the closure, as a
+    module constant patched on the driver never reaches the workers."""
+
+    def per_group(key: tuple, t: pa.Table) -> pa.Table:
+        ids = t.column(id_col).combine_chunks()
+        # a null key pairs nothing, as a null join key would not
+        live = ids if key[0].is_valid else pa.nulls(len(ids), ids.type)
+        vecs = t.column(vec_col).combine_chunks()
+        a, b, cos = _group_pairs(live, vecs, tau, _tile_rows)
+        if keep_rows:
+            return t.drop_columns([key_col]).take(_kept_rows(ids, a, b))
+        return pa.Table.from_arrays(
+            [t.column(key_col).take(a), ids.take(a), ids.take(b), pa.array(cos)],
+            names=[key_col, "id_a", "id_b", "cosine"],
+        )
+
+    if keep_rows:
+        return df.groupBy(key_col).applyInArrow(per_group, df.drop(key_col).schema)
+    ids_ab = [F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b")]
+    schema = df.select(key_col, *ids_ab, F.lit(0.0).alias("cosine")).schema
+    out = df.groupBy(key_col).applyInArrow(per_group, schema)
+    return out.withColumn("cosine", F.round("cosine", 6))
+
+
 def pairwise_cosine_within(
     df: DataFrame,
     group_col: str,
     tau: float,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int | None = None,
 ) -> DataFrame:
     """All pairs with cosine ≥ tau *within a group* (e.g. an LSH bucket or
-    a label): the bucket-local verify step of embedding dedup.
-
-    ``dim`` (when the caller already knows it — e.g. from fitted
-    centroids) skips the one-row probe job; any value is safe because
-    the unrolled dot is size-guarded per pair and the fold fallback is
-    bit-identical."""
-    # hoist the norm into its own column first: referenced from inside
-    # the transform lambda it would be inlined as a full 64-term fold
-    # PER ELEMENT (a ~dim² expression tree that dominates plan
-    # compile time), instead of one fold per row
-    normed = df.select(
-        F.col(group_col).alias("g"),
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("__v"),
-        _norm(F.col(vec_col)).alias("__n"),
-    ).select(
-        "g",
-        "id",
-        F.transform(
-            F.col("__v"),
-            lambda x: F.try_divide(x.cast("double"), F.col("__n")),
-        ).alias("nv"),
-    )
-    a = normed.alias("a")
-    b = normed.alias("b")
-    # the per-PAIR dot is the hot loop (|cell|² pairs × dim terms): probe
-    # the dimension once and unroll it into a codegen chain, guarded so
-    # a ragged pair falls back to the fold — same order, same nulls,
-    # bit-identical cosine (the fold ran interpreted per element)
-    if dim is None:
-        dim_row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = (
-            int(dim_row["d"]) if dim_row and dim_row["d"] is not None else None
-        )
-    dot_fold = F.aggregate(
-        F.zip_with(F.col("a.nv"), F.col("b.nv"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    if dim:
-        unrolled = _chain_sum(
-            [
-                F.element_at(F.col("a.nv"), i + 1)
-                * F.element_at(F.col("b.nv"), i + 1)
-                for i in range(dim)
-            ]
-        )
-        dot = F.when(
-            (F.size(F.col("a.nv")) == dim) & (F.size(F.col("b.nv")) == dim),
-            unrolled,
-        ).otherwise(dot_fold)
-    else:
-        dot = dot_fold
-    return (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
-        .withColumn("cosine", dot)
-        .filter(F.col("cosine") >= tau)
-        .select(
-            F.col("a.g").alias(group_col),
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round("cosine", 6).alias("cosine"),
-        )
+    a label), as ``(group_col, id_a, id_b, cosine)``: the bucket-local
+    verify step of embedding dedup. One group must fit one Python
+    worker."""
+    return _within_group(
+        df.select(group_col, id_col, vec_col), group_col, tau, vec_col, id_col
     )
 
 
@@ -588,10 +614,11 @@ def quantized_knn_threshold(
 # SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic dedup for
 # training corpora: cluster embeddings (k-means cells), compare vectors
 # only WITHIN a cluster, and keep one representative per group of
-# semantic duplicates. The cluster step is what makes it scale — cosine
-# pairs are computed per cell, never across the corpus, so at 100 TB
-# the cell id doubles as the partition key and each task owns whole
-# cells (the same posture as ivf_knn_threshold's probe path).
+# semantic duplicates. Every duplicate component lies inside one cell,
+# so the whole step is one grouped-map pass per cell with an exact
+# re-check (_within_group). Precondition: one cell fits one Python
+# worker, so k_cells must grow with the corpus, as SemDeDup's tens of
+# thousands of clusters do; a fixed 8 does not reach 100 TB.
 
 
 def semantic_dedup_pairs(
@@ -601,39 +628,17 @@ def semantic_dedup_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     centroids: list[tuple[int, list[float]]] | None = None,
-    refine_iterations: int = 0,
 ) -> DataFrame:
     """(cell, id_a, id_b, cosine) for every within-cell pair with
     cosine ≥ tau. Centroids default to the deterministic md5-seeded
-    sample (oracle-reproducible); pass ``refine_iterations`` > 0 for
-    Lloyd-refined index quality in production (non-oracle) use."""
+    sample (oracle-reproducible); for production index quality pass
+    ``centroids=lloyd_refine(df, deterministic_centroids(df, k))``."""
     if centroids is None:
         centroids = deterministic_centroids(df, k_cells, vec_col, id_col)
-    if refine_iterations:
-        centroids = lloyd_refine(
-            df, centroids, vec_col, id_col, iterations=refine_iterations
-        )
-    # materialize the (id, cell, vec) projection before the self-join:
-    # the cell expression is a k_cells-way CASE over 64-dim distance
-    # folds, and left inline it would be duplicated into BOTH join
-    # sides (and re-analyzed/compiled twice); at 100 TB this projection
-    # is what you persist at ingest, with `cell` as the partition key
     with_cell = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        ivf_cell(F.col(vec_col), centroids).alias("__sem_cell"),
-    ).localCheckpoint()
-    return pairwise_cosine_within(
-        with_cell,
-        "__sem_cell",
-        tau,
-        vec_col,
-        id_col,
-        # the fitted centroids already carry the dimension — skip the
-        # one-row probe job (size-guarded per pair, so safe even if a
-        # ragged corpus row disagrees)
-        dim=len(centroids[0][1]) if centroids else None,
-    ).withColumnRenamed("__sem_cell", "cell")
+        ivf_cell(F.col(vec_col), centroids).alias("cell"), id_col, vec_col
+    )
+    return _within_group(with_cell, "cell", tau, vec_col, id_col)
 
 
 def semantic_dedup(
@@ -643,25 +648,18 @@ def semantic_dedup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     centroids: list[tuple[int, list[float]]] | None = None,
-    refine_iterations: int = 0,
 ) -> DataFrame:
     """SemDeDup keep-list: ``df`` filtered to one canonical row (the
     minimum id) per semantic-duplicate component, where components are
     the connected closure of the within-cell cosine-≥-tau pair graph.
-    Rows in no pair are kept as-is. The component frame only holds ids
-    that HAVE a semantic duplicate, so the final join broadcasts."""
-    from victoriametrics_spark.operators.dedup import near_dup_keep_list
-
-    pairs = semantic_dedup_pairs(
-        df,
-        tau,
-        k_cells=k_cells,
-        vec_col=vec_col,
-        id_col=id_col,
-        centroids=centroids,
-        refine_iterations=refine_iterations,
+    Rows in no pair are kept as-is. Precondition: ``id_col`` is unique
+    per row, since components are solved per cell."""
+    if centroids is None:
+        centroids = deterministic_centroids(df, k_cells, vec_col, id_col)
+    with_cell = df.withColumn("__sem_cell", ivf_cell(F.col(vec_col), centroids))
+    return _within_group(
+        with_cell, "__sem_cell", tau, vec_col, id_col, keep_rows=True
     )
-    return near_dup_keep_list(df, pairs, id_col=id_col)
 
 
 # ------------------------------------------------------------- round 9:

@@ -73,18 +73,6 @@ def series_id(name: Column, labels: Column) -> Column:
     return F.xxhash64(series_key(name, labels))
 
 
-def with_series_id(df: DataFrame) -> DataFrame:
-    """Attach ``series_id`` (and keep a reusable ``__series_key`` string)."""
-    if "series_id" in df.columns:
-        return df
-    if "__series_key" in df.columns:
-        return df.withColumn("series_id", F.xxhash64(F.col("__series_key")))
-    key = series_key(F.col("name"), F.col("labels"))
-    return df.withColumn("__series_key", key).withColumn(
-        "series_id", F.xxhash64(F.col("__series_key"))
-    )
-
-
 def samples_from_columns(
     df: DataFrame,
     *,

@@ -141,9 +141,3 @@ def _spread_small_scan(spark, df: DataFrame, path: str):
     # every core. Capped at the session parallelism.
     target = min(n_par, max(2, n_rows // 1000))
     return df.repartition(target)
-
-
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql()."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -410,14 +410,17 @@ def _partition_file_index(
 
 def _partitions_predicate(part_cols: list[str], parts) -> Column:
     """Row predicate selecting exactly the given partition-value tuples
-    (string-compared, matching the decoded file-listing values)."""
-    pred = F.lit(False)
-    for p in sorted(parts):
-        cond = F.lit(True)
-        for c, v in zip(part_cols, p):
-            cond = cond & (F.col(c).cast("string") == F.lit(v))
-        pred = pred | cond
-    return pred
+    (string-compared, matching the decoded file-listing values). One
+    ``IN`` over hex literals, as in :func:`merge_small_parts`: an
+    OR-chain of one term per partition overflows the JVM stack at about
+    500 partitions, and hex needs no escaping in either string-literal
+    dialect. Hex has no ``/``, so the joined key is unambiguous."""
+    row = ", '/', ".join(f"hex(CAST(`{c}` AS STRING))" for c in part_cols)
+    keys = ",".join(
+        "'" + "/".join(str(v).encode().hex().upper() for v in p) + "'"
+        for p in sorted(parts)
+    )
+    return F.expr(f"concat({row}) IN ({keys})")
 
 
 def _drop_partition(
@@ -714,8 +717,7 @@ def merge_small_parts(
     # either string-literal dialect, and one SQL string crosses py4j
     # once, where Column.isin makes a round trip per element. The
     # filter prunes files before any is opened; a partition predicate
-    # on top would add only driver cost (an OR-chain of one term per
-    # partition, which overflows the JVM stack at 500 partitions)
+    # on top would add only driver cost
     keys = ",".join(f"'{_file_key(u).encode().hex().upper()}'" for u in smalls)
     df = scan.filter(F.expr(f"hex({_FILE_KEY_SQL}) IN ({keys})"))
     df = _apply_tombstones(spark, df, table)
