@@ -486,20 +486,79 @@ def test_segment_cache_invalidated_by_new_files(spark, tmp_path):
     )
 
 
-def test_cache_corrupt_meta_reads_as_miss(spark, counter_samples, tmp_path):
-    """A truncated/corrupt meta file (crash mid-write before the atomic
-    rename existed) must read as a miss, not poison the key with a
-    JSONDecodeError on every later query."""
+@pytest.mark.parametrize(
+    "level, q, grids",
+    [
+        # (start, end) minutes after t0: a miss, then two partial hits
+        ("segment", "count_over_time(c[2m])", [(0, 10), (0, 20), (0, 25)]),
+        (
+            "leaf",
+            "topk_max(1, count_over_time(c[2m]))",
+            [(0, 10), (0, 20), (0, 25)],
+        ),
+        # instants 30m apart: each one outdates the entry and repopulates
+        ("instant", "sum_over_time(c[4h])", [(30, 30), (60, 60), (90, 90)]),
+    ],
+    ids=["segment", "leaf", "instant"],
+)
+def test_cache_corrupt_meta_reads_as_miss(
+    spark, counter_samples, tmp_path, level, q, grids
+):
+    """Every level keeps its entries in the one versioned format: after
+    three stores to one key, v(N−1) is still on disk for lazy readers
+    and v(N−2) is gone. A truncated/corrupt meta file (crash mid-write)
+    must read as a miss, not poison the key with a JSONDecodeError on
+    every later query."""
+    import json
+
     samples, t0 = counter_samples
-    cache = RollupResultCache(spark, str(tmp_path / "rrc_corrupt"))
-    q = "count_over_time(c[2m])"
-    cfg = EvalConfig(start=t0, end=t0 + 600_000, step=60_000)
-    cache.evaluate(q, samples, cfg)
-    key = cache._key(q, cfg)
-    with open(cache._meta_path(key), "w") as fh:
-        fh.write('{"start": 123, "ver')  # truncated JSON
-    out = cache.evaluate(q, samples, cfg)
-    assert cache.stats["mode"] == "miss"
+    root = tmp_path / "rrc_corrupt"
+    cache = RollupResultCache(spark, str(root))
+    cfgs = [
+        EvalConfig(start=t0 + a * 60_000, end=t0 + b * 60_000, step=60_000)
+        for a, b in grids
+    ]
+    for cfg in cfgs:
+        cache.evaluate(q, samples, cfg)
+    (meta,) = root.rglob("*.meta.json")
+    key = meta.name.removesuffix(".meta.json")
+    assert json.loads(meta.read_text())["version"] == 2
+    assert meta.with_name(f"{key}.v2.parquet").exists()
+    assert meta.with_name(f"{key}.v1.parquet").exists()
+    assert not meta.with_name(f"{key}.v0.parquet").exists()
+
+    meta.write_text('{"start": 123, "ver')  # truncated JSON
+    out = cache.evaluate(q, samples, cfgs[-1])
+    missed = {
+        "segment": lambda: cache.stats["mode"] == "miss",
+        "leaf": lambda: cache.stats["leaf"]["misses"] == 1,
+        "instant": lambda: (
+            cache.leaf_cache().instant_values().stats["misses"] == 4
+        ),
+    }
+    assert missed[level](), cache.stats
     assert _vals(out) == _vals(
-        evaluate(spark, q, samples, cfg, use_plan_cache=False)
+        evaluate(spark, q, samples, cfgs[-1], use_plan_cache=False)
     )
+
+
+def test_instant_cache_key_includes_two_level_cutover(
+    spark, wide_samples, tmp_path
+):
+    """Two instant evaluations that differ only in two_level_cutover
+    both miss: the cutover picks the prefix-sum or the grid plan, which
+    can differ in the last ulp, so a shared entry could break
+    cached == cold."""
+    samples, t0 = wide_samples
+    cache = RollupResultCache(spark, str(tmp_path / "inst_cutover"))
+    q = "sum_over_time(c[4h])"
+    t1 = t0 + 6 * 3600_000
+    for cutover in (16, 4):
+        cfg = EvalConfig(
+            start=t1, end=t1, step=300_000, two_level_cutover=cutover
+        )
+        out = cache.evaluate(q, samples, cfg)
+        assert _vals(out) == _vals(
+            evaluate(spark, q, samples, cfg, use_plan_cache=False)
+        )
+    assert cache.leaf_cache().instant_values().stats["misses"] == 2

@@ -36,11 +36,21 @@ keeps the same contract with results as parquet:
   stay cacheable — each grid point ranks only its own timestamp.
 
 Every grid point of a cacheable query depends only on samples in
-``(gts - window, gts]``, which is what makes prefix reuse sound.
-Entries carry the input frame's ``files_token`` — appended/backfilled
-files invalidate instead of serving a stale range — and metadata is
-written atomically (tmp + rename) with the immediately superseded
-parquet version kept one extra generation for in-flight lazy readers.
+``(gts - window, gts]``, which is what makes prefix reuse sound. The
+whole-query (segment) and rollup-leaf levels share one prefix-reuse
+routine, ``_reuse_prefix``; range entries carry the input frame's
+``files_token`` — appended/backfilled files invalidate instead of
+serving a stale range.
+
+Every level — segment, leaf, instant — and the stream-aggregation state
+(streaming/streamaggr.py) keep their entries in one on-disk format,
+``VersionedStore``: per key, ``{key}.meta.json`` names the committed
+version n with the caller's fields, and ``{key}.v{n}.parquet`` holds its
+rows. A store writes v(n+1) beside v(n) and publishes it by atomically
+replacing the meta file (tmp + rename); v(n) stays one more generation
+for lazy readers still bound to it, and v(n−1) is deleted. A missing or
+corrupt meta file reads as no entry. Keys come from ``cache_key``: the
+caller's identity plus every EvalConfig field that changes grid values.
 """
 
 from __future__ import annotations
@@ -48,6 +58,8 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
+import threading
 from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
@@ -91,40 +103,130 @@ _RANKING_AGGREGATES = frozenset(
     }
 )
 
+_RESULT_COLS = ("name", "labels", "ts", "value")
 _RESULT_SCHEMA = (
     "name string, labels map<string,string>, ts long, value double"
 )
 
 
-def _read_meta(path: str) -> dict | None:
-    """Shared meta reader: a missing file OR a truncated/corrupt one
-    (crash mid-write before the atomic rename existed) reads as a
-    cache miss, never a poisoned key."""
-    try:
-        with open(path) as fh:
-            return json.load(fh)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return None
+def cache_key(cfg: EvalConfig, *extras) -> str:
+    """Entry key: the caller's ``extras`` (query or leaf identity, and
+    whatever else selects the result) plus every EvalConfig field that
+    changes grid values — ``two_level_cutover`` included, since the
+    prefix-sum and grid plans it picks between can differ in the last
+    ulp."""
+    ident = json.dumps(
+        [
+            *extras,
+            cfg.step,
+            cfg.max_lookback,
+            cfg.lookback_delta,
+            cfg.dedup_interval_ms,
+            list(cfg.enforced_filters),
+            cfg.two_level_cutover,
+        ]
+    )
+    return hashlib.sha256(ident.encode()).hexdigest()[:24]
 
 
-def _write_meta_atomic(path: str, obj: dict) -> None:
-    """tmp + os.replace so a crash mid-write can never leave truncated
-    JSON at the final path."""
-    tmp = f"{path}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(obj, fh)
-    os.replace(tmp, path)
+class VersionedStore:
+    """Versioned parquet entries under ``root`` (format and retention
+    rule: see the module docstring). ``get`` returns the committed meta,
+    ``read`` a committed version's rows, ``put`` writes and publishes the
+    next version."""
+
+    def __init__(
+        self, spark: SparkSession, root: str, schema: str = _RESULT_SCHEMA
+    ):
+        self.spark = spark
+        self.root = root
+        self.schema = schema
+        os.makedirs(root, exist_ok=True)
+        # serializes the read-version → write → publish sequence against
+        # concurrent HTTP handler threads on the same key space
+        self._lock = threading.Lock()
+
+    def _file(self, key: str, suffix: str) -> str:
+        return os.path.join(self.root, f"{key}.{suffix}")
+
+    def get(self, key: str) -> dict | None:
+        """The committed meta of ``key``; a missing file or a truncated
+        one (crash mid-write) reads as no entry, never a poisoned key."""
+        try:
+            with open(self._file(key, "meta.json")) as fh:
+                return json.load(fh)
+        except (FileNotFoundError, json.JSONDecodeError):
+            return None
+
+    def read(self, key: str, version: int) -> DataFrame:
+        path = self._file(key, f"v{version}.parquet")
+        self.spark.catalog.refreshByPath(path)
+        return self.spark.read.schema(self.schema).parquet(path)
+
+    def put(self, key: str, df: DataFrame, fields: dict, then=None):
+        """Write ``df`` as the next version of ``key``, then publish it
+        with ``fields`` in its meta. ``then(new_rows)`` runs between the
+        write and the publish — a failure there leaves the committed
+        version as it was — and its result is returned (default: the new
+        version's rows)."""
+        with self._lock:
+            meta = self.get(key)
+            version = meta["version"] + 1 if meta else 0
+            path = self._file(key, f"v{version}.parquet")
+            df.write.mode("overwrite").parquet(path)
+            new = self.read(key, version)
+            out = new if then is None else then(new)
+            meta_path = self._file(key, "meta.json")
+            with open(f"{meta_path}.tmp", "w") as fh:
+                json.dump({**fields, "version": version}, fh)
+            os.replace(f"{meta_path}.tmp", meta_path)
+            if version >= 2:
+                stale = self._file(key, f"v{version - 2}.parquet")
+                shutil.rmtree(stale, ignore_errors=True)
+            return out
 
 
-def _drop_stale_generation(data_path_fn, key: str, version: int) -> None:
-    """Delete version-2 when storing version N: the immediately
-    superseded version N-1 stays on disk one more generation because a
-    previously returned LAZY DataFrame may still be bound to it (the
-    caller collects after evaluate returns)."""
-    if version >= 2:
-        import shutil
+def _reuse_prefix(
+    store: VersionedStore, key: str, cfg: EvalConfig, build, fingerprint
+) -> "tuple[DataFrame, str, int | None]":
+    """The one prefix-reuse path of the segment and leaf levels
+    (rollup_result_cache.go:283 Get / :606 Put). Returns the frame for
+    ``[cfg.start, cfg.end]``, the mode ("miss", "hit_full" or
+    "hit_partial") and the suffix start of a partial hit. ``build(sub_cfg)``
+    evaluates a sub-range; only the grid suffix past the cached end is
+    built. ``fingerprint`` is the input-data identity
+    (plancache.files_token): other files invalidate the entry; None skips
+    the check."""
+    ftok = repr(fingerprint) if fingerprint is not None else None
+    meta = store.get(key)
+    usable = (
+        meta is not None
+        and meta["start"] <= cfg.start
+        # cached grid must land exactly on the query grid
+        and (cfg.start - meta["start"]) % cfg.step == 0
+        and meta["end"] + cfg.step >= cfg.start
+        and (ftok is None or meta.get("ftok") in (None, ftok))
+    )
 
-        shutil.rmtree(data_path_fn(key, version - 2), ignore_errors=True)
+    def in_range(df: DataFrame) -> DataFrame:
+        return df.filter(
+            (F.col("ts") >= cfg.start) & (F.col("ts") <= cfg.end)
+        )
+
+    if not usable:
+        result = build(cfg).select(*_RESULT_COLS)
+        fields = {"start": cfg.start, "end": cfg.end, "ftok": ftok}
+        return in_range(store.put(key, result, fields)), "miss", None
+    ce = min(meta["end"], cfg.end)
+    cached = store.read(key, meta["version"])
+    if ce >= cfg.end:
+        return in_range(cached), "hit_full", None
+    suffix_start = ce + cfg.step
+    suffix = build(replace(cfg, start=suffix_start)).select(*_RESULT_COLS)
+    merged = cached.filter(F.col("ts") <= ce).unionByName(suffix)
+    fields = {"start": meta["start"], "end": cfg.end, "ftok": ftok}
+    out = in_range(store.put(key, merged, fields))
+    return out, "hit_partial", suffix_start
 
 
 def forward_looking(name: str) -> bool:
@@ -195,7 +297,7 @@ class RollupResultCache:
     ):
         self.spark = spark
         self.cache_dir = cache_dir
-        os.makedirs(cache_dir, exist_ok=True)
+        self.store = VersionedStore(spark, cache_dir)
         self.stats: dict = {}
         # Opt-in VM-faithful mode (rollup_result_cache.go:283 caches rate
         # leaves): estimate-dependent span-family leaves become
@@ -207,11 +309,6 @@ class RollupResultCache:
         # (cached == cold bit-for-bit).
         self.accept_estimate_drift = accept_estimate_drift
         self._leaf: "LeafResultCache | None" = None
-        import threading as _threading
-
-        # serializes the read-version → write → publish sequence against
-        # concurrent HTTP handler threads on the same key space
-        self._lock = _threading.Lock()
 
     # ------------------------------------------------------------- key
     @staticmethod
@@ -312,36 +409,18 @@ class RollupResultCache:
 
         return ok(root)
 
-    def _key(self, query: str, cfg: EvalConfig) -> str:
-        ident = json.dumps(
-            [
-                query,
-                cfg.step,
-                cfg.max_lookback,
-                cfg.lookback_delta,
-                cfg.dedup_interval_ms,
-                list(cfg.enforced_filters),
-                cfg.two_level_cutover,
-            ]
-        )
-        return hashlib.sha256(ident.encode()).hexdigest()[:24]
-
     def reset(self) -> None:
         """promql.ResetRollupResultCache analog — the reference's delete
         handler calls it explicitly (app/vmselect/prometheus/
         prometheus.go:527) because cached results are keyed on (query,
         cfg) with no data identity: without the reset, a previously
         cached range would keep serving deleted series indefinitely.
-        Drops every cached segment, leaf, and instant entry."""
-        import shutil
-
+        Drops every cached segment, leaf, and instant entry (a store's
+        next write recreates its directory)."""
         shutil.rmtree(self.cache_dir, ignore_errors=True)
         os.makedirs(self.cache_dir, exist_ok=True)
-        if self._leaf is not None:
-            os.makedirs(self._leaf.cache_dir, exist_ok=True)
-            if self._leaf._instant is not None:
-                os.makedirs(self._leaf._instant.cache_dir, exist_ok=True)
-                self._leaf._instant._templates.clear()
+        if self._leaf is not None and self._leaf._instant is not None:
+            self._leaf._instant._templates.clear()
 
     def leaf_cache(self) -> "LeafResultCache":
         if self._leaf is None:
@@ -352,39 +431,6 @@ class RollupResultCache:
             )
         self._leaf.stats = {"hits": 0, "partial": 0, "misses": 0}
         return self._leaf
-
-    def _meta_path(self, key: str) -> str:
-        return f"{self.cache_dir}/{key}.meta.json"
-
-    def _data_path(self, key: str, version: int) -> str:
-        return f"{self.cache_dir}/{key}.v{version}.parquet"
-
-    def _load_meta(self, key: str) -> dict | None:
-        return _read_meta(self._meta_path(key))
-
-    def _store(
-        self, key: str, df: DataFrame, start: int, end: int, ftok=None
-    ) -> None:
-        with self._lock:
-            meta = self._load_meta(key)
-            version = (meta["version"] + 1) if meta else 0
-            path = self._data_path(key, version)
-            df.write.mode("overwrite").parquet(path)
-            _write_meta_atomic(
-                self._meta_path(key),
-                {
-                    "start": start,
-                    "end": end,
-                    "version": version,
-                    "path": path,
-                    "ftok": ftok,
-                },
-            )
-            _drop_stale_generation(self._data_path, key, version)
-
-    def _cached_df(self, meta: dict) -> DataFrame:
-        self.spark.catalog.refreshByPath(meta["path"])
-        return self.spark.read.schema(_RESULT_SCHEMA).parquet(meta["path"])
 
     # -------------------------------------------------------- evaluate
     def evaluate(
@@ -410,56 +456,22 @@ class RollupResultCache:
                 self.stats = {"mode": "bypass", "leaf": dict(leaf.stats)}
             return out
 
-        key = self._key(query, cfg)
-        meta = self._load_meta(key)
         # data-identity guard: appended/backfilled/compacted input files
-        # change the token and invalidate the entry (the instant cache's
-        # r9 fix, applied to the segment level; callers passing
+        # change the token and invalidate the entry (callers passing
         # samples=None assert a no-evaluation full hit and skip it)
         from victoriametrics_spark.engine.plancache import files_token
 
-        ftok = repr(files_token(samples)) if samples is not None else None
-        usable = (
-            meta is not None
-            and meta["start"] <= cfg.start
-            # cached grid must land exactly on the query grid
-            and (cfg.start - meta["start"]) % cfg.step == 0
-            and meta["end"] + cfg.step >= cfg.start
-            and (ftok is None or meta.get("ftok") in (None, ftok))
+        out, mode, suffix_start = _reuse_prefix(
+            self.store,
+            cache_key(cfg, query),
+            cfg,
+            lambda c: _eval(self.spark, query, samples, c),
+            files_token(samples) if samples is not None else None,
         )
-        if usable:
-            ce = min(meta["end"], cfg.end)
-            cached = self._cached_df(meta)
-            prefix = cached.filter(
-                (F.col("ts") >= cfg.start) & (F.col("ts") <= ce)
-            )
-            if ce >= cfg.end:
-                self.stats = {"mode": "hit_full"}
-                return prefix
-            suffix_start = ce + cfg.step
-            suffix_cfg = replace(cfg, start=suffix_start)
-            suffix = _eval(self.spark, query, samples, suffix_cfg)
-            merged_range = cached.filter(F.col("ts") < cfg.start).unionByName(
-                prefix
-            ).unionByName(suffix)
-            self._store(key, merged_range, meta["start"], cfg.end, ftok=ftok)
-            meta2 = self._load_meta(key)
-            out = self._cached_df(meta2).filter(
-                (F.col("ts") >= cfg.start) & (F.col("ts") <= cfg.end)
-            )
-            self.stats = {"mode": "hit_partial", "suffix_start": suffix_start}
-            return out
-        result = _eval(self.spark, query, samples, cfg)
-        self._store(
-            key,
-            result.select("name", "labels", "ts", "value"),
-            cfg.start,
-            cfg.end,
-            ftok=ftok,
-        )
-        meta2 = self._load_meta(key)
-        self.stats = {"mode": "miss"}
-        return self._cached_df(meta2)
+        self.stats = {"mode": mode}
+        if suffix_start is not None:
+            self.stats["suffix_start"] = suffix_start
+        return out
 
 
 class InstantValuesCache:
@@ -476,7 +488,8 @@ class InstantValuesCache:
     - max/min: ``max(cached, rf(m[offset] @ t))``, valid only when the
       expiring region's extremum ``rf(m[offset] @ t−window)`` is
       strictly inside the cached value (else fall back to a cold
-      evaluation and drop the cached entry, eval.go getMaxInstantValues).
+      evaluation that replaces the cached entry, eval.go
+      getMaxInstantValues).
 
     VM applies this only to windows ≥ -search.minWindowForInstant
     RollupOptimization (3h default) — ``min_window_ms`` here.
@@ -486,13 +499,8 @@ class InstantValuesCache:
     EXTREMUM = frozenset({"max_over_time", "min_over_time"})
 
     def __init__(self, spark: SparkSession, cache_dir: str):
-        self.spark = spark
-        self.cache_dir = cache_dir
-        os.makedirs(cache_dir, exist_ok=True)
+        self.store = VersionedStore(spark, cache_dir)
         self.min_window_ms = 3 * 3600 * 1000
-        import threading as _threading
-
-        self._lock = _threading.Lock()
         self.stats: dict = {
             "hits": 0,
             "adjusted": 0,
@@ -501,66 +509,10 @@ class InstantValuesCache:
             "template_builds": 0,
             "template_hits": 0,
         }
-        # (key, entry_ts) → parameterized boundary plan (see
-        # _boundary_frames): the Column tree is built ONCE per cache
-        # entry; each refresh re-executes it against a fresh params file
+        # (key, entry_ts) → entry-constant base of the boundary plan (see
+        # _boundary_frames): built ONCE per cache entry, reused by every
+        # refresh
         self._templates: dict = {}
-
-    def _key(
-        self, ident: str, window_ms: int, cfg: EvalConfig, fingerprint=None
-    ) -> str:
-        payload = json.dumps(
-            [
-                ident,
-                window_ms,
-                cfg.step,
-                cfg.max_lookback,
-                cfg.lookback_delta,
-                cfg.dedup_interval_ms,
-                list(cfg.enforced_filters),
-                # input-data identity (plancache.files_token): backfilled
-                # or appended files change the token, so stale cached
-                # instants can't serve values the boundary-window
-                # adjustment would never see (cached == cold contract)
-                repr(fingerprint),
-            ]
-        )
-        return hashlib.sha256(payload.encode()).hexdigest()[:24]
-
-    def _meta_path(self, key: str) -> str:
-        return f"{self.cache_dir}/{key}.meta.json"
-
-    def _data_path(self, key: str, version: int) -> str:
-        return f"{self.cache_dir}/{key}.v{version}.parquet"
-
-    def _load_meta(self, key: str) -> dict | None:
-        return _read_meta(self._meta_path(key))
-
-    def _store(self, key: str, df: DataFrame, ts: int) -> None:
-        with self._lock:
-            meta = self._load_meta(key)
-            version = (meta["version"] + 1) if meta else 0
-            path = self._data_path(key, version)
-            df.select("name", "labels", "ts", "value").write.mode(
-                "overwrite"
-            ).parquet(path)
-            _write_meta_atomic(
-                self._meta_path(key),
-                {"ts": ts, "version": version, "path": path},
-            )
-            _drop_stale_generation(self._data_path, key, version)
-
-    def _delete(self, key: str) -> None:
-        meta = self._load_meta(key)
-        if meta:
-            import shutil
-
-            os.remove(self._meta_path(key))
-            shutil.rmtree(meta["path"], ignore_errors=True)
-
-    def _cached_df(self, meta: dict) -> DataFrame:
-        self.spark.catalog.refreshByPath(meta["path"])
-        return self.spark.read.schema(_RESULT_SCHEMA).parquet(meta["path"])
 
     @staticmethod
     def _keyed(df: DataFrame, col: str) -> DataFrame:
@@ -576,15 +528,15 @@ class InstantValuesCache:
     def _boundary_frames(
         self,
         key: str,
-        meta: dict,
+        ct: int,
         t: int,
         window_ms: int,
-        offset: int,
         build_template,
         apply_template,
-    ) -> DataFrame | None:
+    ) -> DataFrame:
         """Both boundary windows — rf(m[offset] @ t) and
-        rf(m[offset] @ t−window) — through ONE cached-base plan.
+        rf(m[offset] @ t−window), offset = t − ct — through ONE
+        cached-base plan.
 
         The offset differs on every dashboard refresh, so a plan keyed
         on the concrete window text can never be reused. Split the plan
@@ -594,48 +546,27 @@ class InstantValuesCache:
         parquet pushdown prunes on) is built once per cache entry and
         cached here; each refresh only appends the ~15-expression tail
         (explode of two literal (lo, hi, out_ts) bound structs +
-        membership filter + the spec's aggregate) onto the cached base —
-        the verdict-#4 "cache the analyzed boundary plan template per
-        leaf". Keyed on (cache key, entry timestamp): a repopulated
-        entry gets a fresh base."""
-        if apply_template is None:
-            return None
-        base, fresh = self._template_base(key, meta, window_ms, build_template)
-        if base is None:
-            return None
-        if not fresh:
-            self.stats["template_hits"] += 2  # both boundaries reused
-        bounds = [
-            (t - offset, t, t),
-            (t - window_ms - offset, t - window_ms, t - window_ms),
-        ]
-        return apply_template(base, bounds)
-
-    def _template_base(
-        self, key: str, meta: dict, window_ms: int, build_template
-    ) -> "tuple[DataFrame | None, bool]":
-        """(entry-constant base plan, freshly-built?) — see
-        :meth:`_boundary_frames`."""
-        if build_template is None:
-            return None, False
-        ct = meta["ts"]
-        max_offset = min(window_ms // 2, 1800_000)
+        membership filter + the spec's aggregate) onto the cached base.
+        Keyed on (cache key, entry timestamp): a repopulated entry gets
+        a fresh base."""
         tkey = (key, ct)
         base = self._templates.get(tkey)
         if base is not None:
-            return base, False
-        intervals = [
-            (ct, ct + max_offset),
-            (ct - window_ms, ct - window_ms + max_offset),
-        ]
-        base = build_template(intervals)
-        if base is None:
-            return None, False
-        if len(self._templates) > 64:
-            self._templates.clear()
-        self._templates[tkey] = base
-        self.stats["template_builds"] += 1
-        return base, True
+            self.stats["template_hits"] += 2  # both boundaries reused
+        else:
+            max_offset = min(window_ms // 2, 1800_000)
+            base = build_template(
+                [
+                    (ct, ct + max_offset),
+                    (ct - window_ms, ct - window_ms + max_offset),
+                ]
+            )
+            if len(self._templates) > 64:
+                self._templates.clear()
+            self._templates[tkey] = base
+            self.stats["template_builds"] += 1
+        bounds = [(ct, t, t), (ct - window_ms, t - window_ms, t - window_ms)]
+        return apply_template(base, bounds)
 
     def get_or_eval(
         self,
@@ -643,46 +574,36 @@ class InstantValuesCache:
         ident: str,
         window_ms: int,
         cfg: EvalConfig,
-        eval_at,
-        fingerprint=None,
-        build_template=None,
-        apply_template=None,
+        cold,
+        fingerprint,
+        build_template,
+        apply_template,
     ) -> DataFrame | None:
-        """``eval_at(ts_ms, window_ms)`` must return the leaf's series
-        frame for a single-point grid at ``ts_ms``. Returns the result
+        """``cold()`` must return the leaf's series frame for the
+        single-point grid ``cfg``; ``fingerprint`` is the input-data
+        identity (plancache.files_token) — backfilled or appended files
+        change the key, so a stale entry can't serve values the
+        boundary-window adjustment would never see. Returns the result
         frame, or None when the caller should use the normal path."""
         if cfg.start != cfg.end or window_ms < self.min_window_ms:
             return None
         t = cfg.start
-        key = self._key(ident, window_ms, cfg, fingerprint)
-        meta = self._load_meta(key)
+        key = cache_key(cfg, ident, window_ms, repr(fingerprint))
+        meta = self.store.get(key)
         max_offset = min(window_ms // 2, 1800_000)
-        if meta is not None:
-            offset = t - meta["ts"]
-            if offset < 0 or offset >= max_offset:
-                self._delete(key)  # outdated — repopulate below
-                meta = None
-        if meta is None:
+        if meta is None or not 0 <= t - meta["ts"] < max_offset:
+            # absent or outdated — (re)populate at this t
             self.stats["misses"] += 1
-            out = eval_at(t, window_ms)
-            self._store(key, out, t)
-            return self._cached_df(self._load_meta(key)).select(
-                "name", "labels", "ts", "value"
-            )
-        offset = t - meta["ts"]
-        cached = self._cached_df(meta)
-        if offset == 0:
+            return self.store.put(key, cold().select(*_RESULT_COLS), {"ts": t})
+        cached = self.store.read(key, meta["version"])
+        if t == meta["ts"]:
             self.stats["hits"] += 1
-            return cached.select("name", "labels", "ts", "value")
+            return cached
         both = self._boundary_frames(
-            key, meta, t, window_ms, offset, build_template, apply_template
+            key, meta["ts"], t, window_ms, build_template, apply_template
         )
-        if both is not None:
-            start_part = both.filter(F.col("ts") == t)
-            end_part = both.filter(F.col("ts") == t - window_ms)
-        else:
-            start_part = eval_at(t, offset)  # rf(m[offset] @ t)
-            end_part = eval_at(t - window_ms, offset)  # rf(m[o] @ t−w)
+        start_part = both.filter(F.col("ts") == t)
+        end_part = both.filter(F.col("ts") == t - window_ms)
         c = self._keyed(cached, "c")
         s = self._keyed(start_part, "s")
         e = self._keyed(end_part, "e")
@@ -714,14 +635,11 @@ class InstantValuesCache:
             )
             if invalid.limit(1).count() > 0:
                 self.stats["fallback"] += 1
-                self._delete(key)
                 # store the fresh evaluation like the miss path does —
                 # the NEXT refresh becomes an O(offset) adjustment
                 # instead of a second full O(window) scan
-                out = eval_at(t, window_ms)
-                self._store(key, out, t)
-                return self._cached_df(self._load_meta(key)).select(
-                    "name", "labels", "ts", "value"
+                return self.store.put(
+                    key, cold().select(*_RESULT_COLS), {"ts": t}
                 )
             merged = c.join(s, join_cols, "full")
             pick = F.greatest if name == "max_over_time" else F.least
@@ -757,6 +675,14 @@ class InstantValuesCache:
         return out
 
 
+# LeafResultCache.stats counter for each _reuse_prefix mode
+_LEAF_COUNTERS = {
+    "miss": "misses",
+    "hit_partial": "partial",
+    "hit_full": "hits",
+}
+
+
 class LeafResultCache:
     """Rollup-LEAF result cache — the Spark analog of VM's
     rollup_result_cache.go: results are cached *below* transforms and
@@ -782,13 +708,10 @@ class LeafResultCache:
     ):
         self.spark = spark
         self.cache_dir = cache_dir
-        os.makedirs(cache_dir, exist_ok=True)
+        self.store = VersionedStore(spark, cache_dir)
         self.accept_estimate_drift = accept_estimate_drift
         self.stats: dict = {"hits": 0, "partial": 0, "misses": 0}
         self._instant: "InstantValuesCache | None" = None
-        import threading as _threading
-
-        self._lock = _threading.Lock()
 
     def instant_values(self) -> "InstantValuesCache":
         if self._instant is None:
@@ -796,53 +719,6 @@ class LeafResultCache:
                 self.spark, os.path.join(self.cache_dir, "instant")
             )
         return self._instant
-
-    def _key(self, ident: str, cfg: EvalConfig) -> str:
-        payload = json.dumps(
-            [
-                ident,
-                cfg.step,
-                cfg.max_lookback,
-                cfg.lookback_delta,
-                cfg.dedup_interval_ms,
-                list(cfg.enforced_filters),
-                cfg.two_level_cutover,
-            ]
-        )
-        return hashlib.sha256(payload.encode()).hexdigest()[:24]
-
-    def _meta_path(self, key: str) -> str:
-        return f"{self.cache_dir}/{key}.meta.json"
-
-    def _data_path(self, key: str, version: int) -> str:
-        return f"{self.cache_dir}/{key}.v{version}.parquet"
-
-    def _load_meta(self, key: str) -> dict | None:
-        return _read_meta(self._meta_path(key))
-
-    def _store(
-        self, key: str, df: DataFrame, start: int, end: int, ftok=None
-    ) -> None:
-        with self._lock:
-            meta = self._load_meta(key)
-            version = (meta["version"] + 1) if meta else 0
-            path = self._data_path(key, version)
-            df.write.mode("overwrite").parquet(path)
-            _write_meta_atomic(
-                self._meta_path(key),
-                {
-                    "start": start,
-                    "end": end,
-                    "version": version,
-                    "path": path,
-                    "ftok": ftok,
-                },
-            )
-            _drop_stale_generation(self._data_path, key, version)
-
-    def _cached_df(self, meta: dict) -> DataFrame:
-        self.spark.catalog.refreshByPath(meta["path"])
-        return self.spark.read.schema(_RESULT_SCHEMA).parquet(meta["path"])
 
     def get_or_eval(
         self, ident: str, cfg: EvalConfig, build, fingerprint=None
@@ -853,32 +729,8 @@ class LeafResultCache:
         sub-range. ``fingerprint`` is the input-data identity
         (plancache.files_token): appended/backfilled files invalidate
         the entry instead of serving the stale range."""
-        key = self._key(ident, cfg)
-        meta = self._load_meta(key)
-        ftok = repr(fingerprint) if fingerprint is not None else None
-        usable = (
-            meta is not None
-            and meta["start"] <= cfg.start
-            and (cfg.start - meta["start"]) % cfg.step == 0
-            and meta["end"] + cfg.step >= cfg.start
-            and (ftok is None or meta.get("ftok") in (None, ftok))
+        out, mode, _ = _reuse_prefix(
+            self.store, cache_key(cfg, ident), cfg, build, fingerprint
         )
-        in_range = lambda df: df.filter(  # noqa: E731
-            (F.col("ts") >= cfg.start) & (F.col("ts") <= cfg.end)
-        )
-        if usable:
-            ce = min(meta["end"], cfg.end)
-            cached = self._cached_df(meta)
-            if ce >= cfg.end:
-                self.stats["hits"] += 1
-                return in_range(cached)
-            suffix_cfg = replace(cfg, start=ce + cfg.step)
-            suffix = build(suffix_cfg).select("name", "labels", "ts", "value")
-            merged = cached.filter(F.col("ts") <= ce).unionByName(suffix)
-            self._store(key, merged, meta["start"], cfg.end, ftok=ftok)
-            self.stats["partial"] += 1
-            return in_range(self._cached_df(self._load_meta(key)))
-        result = build(cfg).select("name", "labels", "ts", "value")
-        self._store(key, result, cfg.start, cfg.end, ftok=ftok)
-        self.stats["misses"] += 1
-        return in_range(self._cached_df(self._load_meta(key)))
+        self.stats[_LEAF_COUNTERS[mode]] += 1
+        return out

@@ -148,6 +148,4 @@ class PlanCache:
 
 
 # process-wide default instance used by engine.planner.evaluate
-GLOBAL_PLAN_CACHE = PlanCache(
-    capacity=int(os.environ.get("VM_SPARK_PLAN_CACHE_SIZE", "128"))
-)
+GLOBAL_PLAN_CACHE = PlanCache()

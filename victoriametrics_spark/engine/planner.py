@@ -385,8 +385,6 @@ class Planner:
         engine/cache.py InstantValuesCache. Returns None when the fast
         path doesn't apply (the caller falls through to the normal
         plan)."""
-        from dataclasses import replace as _replace
-
         from victoriametrics_spark.engine.cache import InstantValuesCache
 
         name = fe.name
@@ -408,23 +406,9 @@ class Planner:
         window_ms = a.window.ms(cfg.step)
         inst = self.leaf_cache.instant_values()
 
-        def eval_at(ts_ms: int, w_ms: int) -> DataFrame:
-            sub_cfg = _replace(cfg, start=ts_ms, end=ts_ms)
-            sub_fe = FuncExpr(
-                name=name,
-                args=[
-                    RollupExpr(
-                        expr=a.expr,
-                        window=DurationExpr(text=f"{int(w_ms)}ms"),
-                        keep_metric_names=a.keep_metric_names,
-                    )
-                ],
-                keep_metric_names=fe.keep_metric_names,
-            )
+        def cold() -> DataFrame:
             # direct plan construction — no instant re-entry
-            return self.materialize(
-                self.plan_rollup_func(sub_fe, sub_cfg), sub_cfg
-            )
+            return self.materialize(self.plan_rollup_func(fe, cfg), cfg)
 
         def build_template(intervals) -> DataFrame:
             """Entry-constant BASE of the boundary-window plan: selector
@@ -435,8 +419,6 @@ class Planner:
             across refreshes (InstantValuesCache._boundary_frames)."""
             from victoriametrics_spark.schema import series_key
 
-            if ROLLUPS.get(name) is None:
-                return None
             base = self.scan(a.expr)
             if "is_stale" in base.columns:
                 base = base.filter(
@@ -506,10 +488,10 @@ class Planner:
             repr(fe),
             window_ms,
             cfg,
-            eval_at,
-            fingerprint=self._samples_fingerprint(),
-            build_template=build_template,
-            apply_template=apply_template,
+            cold,
+            self._samples_fingerprint(),
+            build_template,
+            apply_template,
         )
 
     # ------------------------------------------------------------- leaves

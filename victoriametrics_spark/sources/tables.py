@@ -107,8 +107,6 @@ _SPREAD_MIN_ROWS = 2000
 def _spread_small_scan(spark, df: DataFrame, path: str):
     import os as _os
 
-    if _os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
     n_par = spark.sparkContext.defaultParallelism
     if n_par <= 1:
         return df

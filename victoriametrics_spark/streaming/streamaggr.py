@@ -18,7 +18,8 @@ Three execution modes share one config and one semantics definition:
 - ``MicroBatchCounterAggregator(spark, cfg, state_dir)`` — the counter
   outputs (total/increase/rate_*) over a stream via foreachBatch: each
   micro-batch is one Spark pass that reads one immutable parquet state
-  version and commits the next one atomically (a JSON commit file).
+  version and commits the next one atomically (engine/cache.py
+  ``VersionedStore``).
 
 Output series naming follows the reference exactly
 (streamaggr.go:627-635):
@@ -31,18 +32,13 @@ bucket per series, ties broken by the maximum value
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from victoriametrics_spark.engine.cache import (
-    _drop_stale_generation,
-    _read_meta,
-    _write_meta_atomic,
-)
+from victoriametrics_spark.engine.cache import VersionedStore
 from victoriametrics_spark.schema import SAMPLE_SCHEMA, canonical_labels_str, series_key
 
 STATELESS_OUTPUTS = {
@@ -434,17 +430,17 @@ class MicroBatchCounterAggregator:
     (also from a new aggregator on the same ``state_dir``) gives the
     same result as an uninterrupted run.
 
-    State layout under ``state_dir``: one parquet table per version,
-    ``v{n}``, whose ``kind`` column holds per-series last samples
-    (``s``), open window partials (``w``), running totals per group
-    (``t``, only for ``total``, ``total_prometheus`` and
-    ``sum_samples_total``), contributing series per open window (``x``,
-    only for ``rate_avg``) and the batch's flushed rows (``o``); plus
-    ``commit.json``, replaced atomically, naming the committed version
-    with the watermark and the stream start ``t0``. The version before
-    the committed one is kept, older ones are deleted. State directories
-    written before this layout (one parquet table per state kind) are
-    not read."""
+    State layout: ``state_dir`` is a ``VersionedStore``
+    (engine/cache.py: meta file, ``v{n}`` tables, atomic publish, the
+    version before the committed one kept, older ones deleted) with one
+    entry, ``state``. Its meta holds the watermark and the stream start
+    ``t0``; each version is one parquet table whose ``kind`` column
+    holds per-series last samples (``s``), open window partials
+    (``w``), running totals per group (``t``, only for ``total``,
+    ``total_prometheus`` and ``sum_samples_total``), contributing series
+    per open window (``x``, only for ``rate_avg``) and the batch's
+    flushed rows (``o``). State directories written before this layout
+    are not read."""
 
     _STATE = (
         "kind string, name string, gkey string, labels_json string, "
@@ -462,7 +458,7 @@ class MicroBatchCounterAggregator:
         self._totals = any(o in _TOTAL_OUTPUTS for o in self.outputs)
         self._wser = "rate_avg" in self.outputs
         self._types = dict(f.split() for f in self._STATE.split(", "))
-        os.makedirs(state_dir, exist_ok=True)
+        self._store = VersionedStore(spark, state_dir, self._STATE)
 
     def process(self, batch_df: DataFrame) -> DataFrame:
         return self._step(batch_df)
@@ -470,10 +466,6 @@ class MicroBatchCounterAggregator:
     def flush_all(self) -> DataFrame:
         """End-of-replay: flush every pending window."""
         return self._step(None)
-
-    # ---------------------------------------------------------- state io
-    def _version_path(self, version: int) -> str:
-        return os.path.join(self.state_dir, f"v{version}")
 
     # The expressions below are SQL text: the plan is built again for
     # every micro-batch, and one py4j call per expression is cheaper than
@@ -502,13 +494,12 @@ class MicroBatchCounterAggregator:
         every window) as one Spark pass that writes the next version,
         materialize the flushed rows, then commit."""
         cfg, iv, spark = self.cfg, self.cfg.interval_ms, self.spark
-        commit_path = os.path.join(self.state_dir, "commit.json")
-        commit = _read_meta(commit_path) or {}
-        version = commit.get("version", 0)
-        wm, t0 = commit.get("watermark"), commit.get("t0")
-        if version:
-            state = spark.read.schema(self._STATE).parquet(self._version_path(version))
+        commit = self._store.get("state")
+        if commit:
+            wm, t0 = commit["watermark"], commit["t0"]
+            state = self._store.read("state", commit["version"])
         else:
+            wm = t0 = None
             state = spark.createDataFrame([], self._STATE)
         flush = batch_df is None
         if flush:
@@ -561,14 +552,18 @@ class MicroBatchCounterAggregator:
                 if mm["mx"] is not None:
                     wm = int(mm["mx"]) if wm is None else max(wm, int(mm["mx"]))
             nxt = self._next_version(state, lagged, flush, wm, t0)
-            path = self._version_path(version + 1)
-            nxt.write.mode("overwrite").parquet(path)
+            return self._store.put(
+                "state", nxt, {"watermark": wm, "t0": t0}, then=self._flushed
+            )
         finally:
             lagged.unpersist()
-        out = (
-            spark.read.schema(self._STATE)
-            .parquet(path)
-            .filter("kind = 'o'")
+
+    @staticmethod
+    def _flushed(version: DataFrame) -> DataFrame:
+        """The flushed rows of a written state version, materialized on
+        the executors (``put`` runs this before the commit)."""
+        return (
+            version.filter("kind = 'o'")
             .selectExpr(
                 "name",
                 "from_json(labels_json, 'map<string,string>') AS labels",
@@ -577,11 +572,6 @@ class MicroBatchCounterAggregator:
             )
             .localCheckpoint()
         )
-        _write_meta_atomic(
-            commit_path, {"version": version + 1, "watermark": wm, "t0": t0}
-        )
-        _drop_stale_generation(lambda _, n: self._version_path(n), None, version + 1)
-        return out
 
     def _next_version(self, state, lagged, flush: bool, wm, t0) -> DataFrame:
         """The rows of the next state version (and the flushed rows),
