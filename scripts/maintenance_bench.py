@@ -10,6 +10,10 @@ The point is the scaling LAW, not the absolute numbers: at 100 TB the
 full rewrite is proportional to the table, the partition compact to one
 day, the tiered merge to the freshly-appended bytes.
 
+It also reports the compacted table's bytes on disk: per row, and per
+column as the compressed column-chunk bytes summed from the parquet
+footers (``footer`` is the rest of each file).
+
 Usage: python scripts/maintenance_bench.py [sf_dir]
 Prints one JSON line.
 """
@@ -55,6 +59,27 @@ def main() -> int:
             out[p] = os.stat(p).st_size
         return out
 
+    def footprint(table: str) -> dict:
+        import pyarrow.parquet as pq
+
+        cols: dict = {}
+        total = rows = 0
+        for path, size in sizes(table).items():
+            md = pq.ParquetFile(path).metadata
+            total += size
+            rows += md.num_rows
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                for c in range(rg.num_columns):
+                    chunk = rg.column(c)
+                    name = chunk.path_in_schema.split(".")[0]
+                    cols[name] = cols.get(name, 0) + chunk.total_compressed_size
+        cols["footer"] = total - sum(cols.values())
+        return {
+            "bytes_per_row": round(total / max(rows, 1), 3),
+            "column_bytes": cols,
+        }
+
     def build(table: str) -> int:
         """Returns a size threshold that separates the appended small
         files from the base day files (at tiny SFs their sizes are
@@ -75,6 +100,7 @@ def main() -> int:
     t0 = time.time()
     compact_samples_table(spark, "mb_full", n_buckets=16, full=True)
     out["full_rewrite_sec"] = round(time.time() - t0, 3)
+    out["compacted"] = footprint("mb_full")
     drop_samples_table(spark, "mb_full")
 
     build("mb_part")

@@ -508,7 +508,8 @@ def test_cache_corrupt_meta_reads_as_miss(
     three stores to one key, v(N−1) is still on disk for lazy readers
     and v(N−2) is gone. A truncated/corrupt meta file (crash mid-write)
     must read as a miss, not poison the key with a JSONDecodeError on
-    every later query."""
+    every later query; the store after it numbers past the versions on
+    disk instead of rewriting one a lazy reader may still hold."""
     import json
 
     samples, t0 = counter_samples
@@ -527,6 +528,11 @@ def test_cache_corrupt_meta_reads_as_miss(
     assert meta.with_name(f"{key}.v1.parquet").exists()
     assert not meta.with_name(f"{key}.v0.parquet").exists()
 
+    def mtimes(version):
+        d = meta.with_name(f"{key}.v{version}.parquet")
+        return {f.name: f.stat().st_mtime_ns for f in d.iterdir()}
+
+    v2_files = mtimes(2)
     meta.write_text('{"start": 123, "ver')  # truncated JSON
     out = cache.evaluate(q, samples, cfgs[-1])
     missed = {
@@ -540,6 +546,9 @@ def test_cache_corrupt_meta_reads_as_miss(
     assert _vals(out) == _vals(
         evaluate(spark, q, samples, cfgs[-1], use_plan_cache=False)
     )
+    assert json.loads(meta.read_text())["version"] == 3
+    assert mtimes(2) == v2_files
+    assert not meta.with_name(f"{key}.v1.parquet").exists()
 
 
 def test_instant_cache_key_includes_two_level_cutover(

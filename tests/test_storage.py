@@ -636,6 +636,7 @@ def test_maintain_samples_table_policy(spark):
         + [("b", T0 + 2 * DAY + i * 60_000, 4.0) for i in range(20)]
     )
     write_samples_table(_mk_samples(spark, rows), "t_maint", n_buckets=2)
+    base = _file_snapshot(spark, "t_maint")
     for k in range(2):
         append_samples(
             _mk_samples(
@@ -647,13 +648,12 @@ def test_maintain_samples_table_policy(spark):
     assert delete_series(spark, "t_maint", ['m{s="kill"}']) == 1
     before = _file_snapshot(spark, "t_maint")
     day0 = "date=2024-01-01"
-    day1_appends = [
-        p
-        for p in before
-        if "date=2024-01-02" in p and os.stat(p).st_size < 4000
-    ]
+    # a threshold just above the appends: at this size a base file is
+    # only a few hundred bytes bigger than a one-row append
+    day1_appends = [p for p in before if p not in base]
+    threshold = max(os.stat(p).st_size for p in day1_appends) + 1
     out = maintain_samples_table(
-        spark, "t_maint", max_small_bytes=4000, max_files_per_bucket=8
+        spark, "t_maint", max_small_bytes=threshold, max_files_per_bucket=8
     )
     after = _file_snapshot(spark, "t_maint")
     # clean day0 untouched
@@ -673,6 +673,7 @@ def test_maintain_samples_table_policy(spark):
         for p in before
         if "date=2024-01-02" in p and p not in day1_appends
     ]
+    assert big_day1
     for p in big_day1:
         assert after.get(p) == before[p]
     assert t.count() == 1022  # 500+500+2 appends+20 b; kill deleted
@@ -942,6 +943,7 @@ def test_maintain_full_lifecycle(spark):
         + [("a", T0 + 9 * DAY + h * H, 3.0) for h in range(24)]
     )
     write_samples_table(_mk_samples(spark, rows), "t_life", n_buckets=2)
+    base = _file_snapshot(spark, "t_life")
     try:
         for k in range(2):
             append_samples(
@@ -952,15 +954,18 @@ def test_maintain_full_lifecycle(spark):
                 n_buckets=2,
             )
         before = _file_snapshot(spark, "t_life")
-        small = [
-            p
-            for p in before
-            if "date=2024-01-10" in p and os.stat(p).st_size < 4000
-        ]
+        # a threshold just above the appends, below the day9 base file
+        small = [p for p in before if p not in base]
+        threshold = max(os.stat(p).st_size for p in small) + 1
+        assert all(
+            os.stat(p).st_size >= threshold
+            for p in base
+            if "date=2024-01-10" in p
+        )
         out = maintain_samples_table(
             spark,
             "t_life",
-            max_small_bytes=4000,
+            max_small_bytes=threshold,
             now_ms=now,
             retention_ms=8 * DAY,
             downsample_rules=[(2 * DAY, H)],
@@ -1509,3 +1514,165 @@ def test_500_partition_rewrites_keep_rows(spark):
         assert got == sorted((s, ts, v) for s, ts, v in rows + late if s == "b")
     finally:
         drop_samples_table(spark, "t_p500")
+
+
+def _column_chunks(paths):
+    """[(file, column, physical type, compression, encodings)] for every
+    column chunk of every row group, read from the parquet footers."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for p in paths:
+        md = pq.ParquetFile(p).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for c in range(rg.num_columns):
+                col = rg.column(c)
+                out.append(
+                    (
+                        p,
+                        col.path_in_schema,
+                        col.physical_type,
+                        col.compression,
+                        set(col.encodings),
+                    )
+                )
+    return out
+
+
+def _assert_at_rest(paths, time_col, time_encoding="DELTA_BINARY_PACKED"):
+    chunks = _column_chunks(paths)
+    assert chunks
+    assert {c[3] for c in chunks} == {"ZSTD"}
+    time_chunks = [c for c in chunks if c[1] == time_col]
+    assert len(time_chunks) >= len(paths)
+    assert all(c[4] == {time_encoding} for c in time_chunks), time_chunks
+    return time_chunks
+
+
+def test_at_rest_encoding_through_table_lifecycle(spark):
+    """Every file a samples table gets (bulk write, append, small-part
+    merge, partition compaction) is zstd with a DELTA_BINARY_PACKED
+    ``ts``: the encoding is stored with the table, not passed per write.
+    Rows read back as written."""
+    from collections import Counter
+
+    from victoriametrics_spark.storage import (
+        drop_samples_table,
+        merge_small_parts,
+    )
+
+    def rows_of(table):
+        return Counter(
+            (r["labels"]["s"], r["ts"], r["value"])
+            for r in spark.table(table).select("labels", "ts", "value").collect()
+        )
+
+    base = [(f"s{i % 7}", T0 + (i % 2) * DAY + i * 1000, float(i)) for i in range(600)]
+    late = [
+        [(f"s{i % 7}", T0 + DAY + 5 * H + k * 60_000 + i, -1.0) for i in range(20)]
+        for k in range(3)
+    ]
+    table = "t_at_rest"
+    write_samples_table(_mk_samples(spark, base), table, n_buckets=2)
+    try:
+        _assert_at_rest(_file_snapshot(spark, table), "ts")
+        for chunk in late[:2]:
+            append_samples(_mk_samples(spark, chunk), table)
+        _assert_at_rest(_file_snapshot(spark, table), "ts")
+        assert merge_small_parts(spark, table, max_small_bytes=1 << 30) > 0
+        _assert_at_rest(_file_snapshot(spark, table), "ts")
+        append_samples(_mk_samples(spark, late[2]), table)
+        before = _file_snapshot(spark, table)
+        compact_samples_table(spark, table, n_buckets=2)
+        after = _file_snapshot(spark, table)
+        assert set(after) != set(before)
+        _assert_at_rest(after, "ts")
+        expected = Counter(base + [r for chunk in late for r in chunk])
+        assert rows_of(table) == expected
+    finally:
+        drop_samples_table(spark, table)
+
+
+def test_at_rest_encoding_logs_and_versioned_store(spark, tmp_path):
+    """The logs table and a VersionedStore entry use the same at-rest
+    options. The logs ``_time`` is a TIMESTAMP, which Spark writes in the
+    session's physical type (INT96 by default) that has no delta
+    encoding: it is stored PLAIN, without a dictionary."""
+    import glob
+    from datetime import datetime
+
+    from victoriametrics_spark.engine.cache import VersionedStore
+    from victoriametrics_spark.storage.layout import (
+        drop_samples_table,
+        write_logs_table,
+    )
+
+    rows = [
+        (datetime(2024, 1, 1 + i % 2, i % 24, i % 60), f"msg {i}", f"app{i % 5}")
+        for i in range(300)
+    ]
+    logs = spark.createDataFrame(rows, ["_time", "_msg", "app"])
+    drop_samples_table(spark, "t_at_rest_logs")
+    try:
+        write_logs_table(logs, "t_at_rest_logs", stream_fields=["app"], n_buckets=2)
+        time_chunks = _assert_at_rest(
+            _file_snapshot(spark, "t_at_rest_logs"), "_time", time_encoding="PLAIN"
+        )
+        assert {c[2] for c in time_chunks} == {"INT96"}
+        back = spark.table("t_at_rest_logs").select("_time", "_msg", "app")
+        assert sorted(map(tuple, back.collect())) == sorted(rows)
+    finally:
+        drop_samples_table(spark, "t_at_rest_logs")
+
+    store = VersionedStore(spark, str(tmp_path / "store"))
+    entry = [("m", {"s": "a"}, T0 + i * 15_000, float(i)) for i in range(200)]
+    df = spark.createDataFrame(
+        entry, "name string, labels map<string,string>, ts long, value double"
+    )
+    got = store.put("k", df, {})
+    assert store.get("k")["version"] == 0
+    _assert_at_rest(glob.glob(str(tmp_path / "store" / "k.v0.parquet" / "*.parquet")), "ts")
+    assert sorted(map(tuple, got.collect())) == sorted(entry)
+
+
+def test_table_created_before_at_rest_options_keeps_working(spark, monkeypatch):
+    """A table created by the old writer (no options: Spark's snappy
+    default) keeps its encoding: appends and small-part merges into it
+    write the table's stored options, not the current ones, and every
+    row reads back. A full rewrite creates the table anew in the at-rest
+    format."""
+    from collections import Counter
+
+    from victoriametrics_spark.storage import (
+        drop_samples_table,
+        merge_small_parts,
+    )
+    from victoriametrics_spark.storage import layout
+
+    base = [(f"s{i % 5}", T0 + i * 1000, float(i)) for i in range(300)]
+    late = [
+        [(f"s{i % 5}", T0 + 3 * H + k * 60_000 + i, -1.0) for i in range(10)]
+        for k in range(2)
+    ]
+    table = "t_old_format"
+    with monkeypatch.context() as m:
+        m.setattr(layout, "at_rest_options", lambda time_col: {})
+        write_samples_table(_mk_samples(spark, base), table, n_buckets=2)
+    try:
+        assert "zstd" not in spark.sql(f"SHOW CREATE TABLE {table}").first()[0]
+        for chunk in late:
+            append_samples(_mk_samples(spark, chunk), table)
+        assert merge_small_parts(spark, table, max_small_bytes=1 << 30) > 0
+        chunks = _column_chunks(_file_snapshot(spark, table))
+        assert {c[3] for c in chunks} == {"SNAPPY"}
+        expected = Counter(base + late[0] + late[1])
+        got = Counter(
+            (r["labels"]["s"], r["ts"], r["value"])
+            for r in read_samples_table(spark, table).collect()
+        )
+        assert got == expected
+        compact_samples_table(spark, table, n_buckets=2, full=True)
+        _assert_at_rest(_file_snapshot(spark, table), "ts")
+    finally:
+        drop_samples_table(spark, table)

@@ -49,8 +49,12 @@ version n with the caller's fields, and ``{key}.v{n}.parquet`` holds its
 rows. A store writes v(n+1) beside v(n) and publishes it by atomically
 replacing the meta file (tmp + rename); v(n) stays one more generation
 for lazy readers still bound to it, and v(n−1) is deleted. A missing or
-corrupt meta file reads as no entry. Keys come from ``cache_key``: the
-caller's identity plus every EvalConfig field that changes grid values.
+corrupt meta file reads as no entry; the next put then numbers past the
+highest version on disk, so it never rewrites a file a lazy reader may
+still hold. Versions are written in the samples table's at-rest format
+(storage/layout.py ``at_rest_options``: zstd, v2 pages, ``ts``
+DELTA_BINARY_PACKED). Keys come from ``cache_key``: the caller's
+identity plus every EvalConfig field that changes grid values.
 """
 
 from __future__ import annotations
@@ -58,6 +62,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import shutil
 import threading
 from dataclasses import replace
@@ -66,6 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from victoriametrics_spark.engine.evalcfg import EvalConfig
+from victoriametrics_spark.storage.layout import at_rest_options
 
 # transforms whose output at one grid point depends on the whole range
 _RANGE_DEPENDENT_TRANSFORMS = frozenset(
@@ -163,6 +169,19 @@ class VersionedStore:
         self.spark.catalog.refreshByPath(path)
         return self.spark.read.schema(self.schema).parquet(path)
 
+    def _next_free(self, key: str) -> int:
+        """The version after the highest ``{key}.v{n}.parquet`` on disk
+        (0 if none): without a readable meta, a put must not rewrite a
+        version a lazy reader may still be bound to. One listing of the
+        store, paid by a new key's first put, beside its Spark write."""
+        pat = re.compile(re.escape(key) + r"\.v(\d+)\.parquet")
+        found = [
+            int(m.group(1))
+            for m in map(pat.fullmatch, os.listdir(self.root))
+            if m
+        ]
+        return max(found, default=-1) + 1
+
     def put(self, key: str, df: DataFrame, fields: dict, then=None):
         """Write ``df`` as the next version of ``key``, then publish it
         with ``fields`` in its meta. ``then(new_rows)`` runs between the
@@ -171,9 +190,13 @@ class VersionedStore:
         version's rows)."""
         with self._lock:
             meta = self.get(key)
-            version = meta["version"] + 1 if meta else 0
+            version = meta["version"] + 1 if meta else self._next_free(key)
             path = self._file(key, f"v{version}.parquet")
-            df.write.mode("overwrite").parquet(path)
+            (
+                df.write.mode("overwrite")
+                .options(**at_rest_options("ts"))
+                .parquet(path)
+            )
             new = self.read(key, version)
             out = new if then is None else then(new)
             meta_path = self._file(key, "meta.json")

@@ -25,6 +25,15 @@ bucket).
 Compaction (the LSM merge analog, lib/storage/merge.go) rewrites a table
 back to one file per (date, bucket), optionally applying last-wins
 dedup exactly like VM dedups during part merges (lib/storage/dedup.go).
+
+At rest (:func:`at_rest_options`, the lib/encoding analog): VM picks a
+per-block encoding by series shape (const, delta-const, nearest-delta)
+and zstd-compresses the block. Here each table is created with zstd
+pages, v2 data pages and no dictionary on the time column, so the
+samples' long ``ts`` is stored DELTA_BINARY_PACKED. ``saveAsTable``
+keeps these as the table's ``OPTIONS``, so every later append, merge
+and partition rewrite into the table writes the same encoding, whatever
+session writes it.
 """
 
 from __future__ import annotations
@@ -38,6 +47,19 @@ from pyspark.sql import functions as F
 from victoriametrics_spark.schema import series_key
 
 DEFAULT_BUCKETS = 32
+
+
+def at_rest_options(time_col: str) -> dict[str, str]:
+    """Parquet writer options of every table and store this package
+    owns: zstd pages, v2 data pages, and ``time_col`` without a
+    dictionary, so an INT64 time column is DELTA_BINARY_PACKED. (A
+    TIMESTAMP column is written in Spark's session-wide physical type,
+    INT96 by default, which has no delta encoding: it is stored PLAIN.)"""
+    return {
+        "compression": "zstd",
+        "parquet.writer.version": "v2",
+        f"parquet.enable.dictionary#{time_col}": "false",
+    }
 
 
 def parse_tenant(token: str) -> str:
@@ -142,11 +164,14 @@ def _save_bucketed(
 ) -> None:
     """``saveAsTable`` partitioned by ``part_cols``, bucketed by ``key``
     and sorted by (``key``, ``sort_col``), each bucket written by one
-    task: one file per (partition, bucket)."""
+    task: one file per (partition, bucket). A new table stores
+    :func:`at_rest_options` of ``sort_col`` as its ``OPTIONS``; an
+    append keeps the existing table's."""
     (
         _by_bucket(df, key, n_buckets)
         .write.mode(mode)
         .format("parquet")
+        .options(**at_rest_options(sort_col))
         .partitionBy(*part_cols)
         .bucketBy(n_buckets, key)
         .sortBy(key, sort_col)
@@ -162,7 +187,14 @@ def append_samples(
     spec (Spark rejects appends with a mismatched one); ``n_buckets``
     only applies when the table doesn't exist yet. Appends create extra
     files per bucket; run :func:`compact_samples_table` periodically to
-    restore the one-file-per-(date, bucket) invariant."""
+    restore the one-file-per-(date, bucket) invariant.
+
+    A table's Parquet encoding is fixed when the table is created: an
+    append writes with the table's stored ``OPTIONS``, so a table
+    created by a writer that passed no options keeps Spark's session
+    defaults (snappy, dictionary ``ts``) for its appends and merges
+    until a full rewrite (``compact_samples_table(full=True)``) creates
+    it anew with :func:`at_rest_options`."""
     spark = samples.sparkSession
     cur = None
     try:
@@ -686,6 +718,11 @@ def merge_small_parts(
     partition size — the frequent cheap op between rare
     :func:`compact_samples_table` full-partition rewrites (which restore
     the one-file-per-bucket sorted-scan invariant).
+
+    ``max_small_bytes`` compares compressed sizes on disk, as VM's part
+    sizes do: under :func:`at_rest_options` a file of more than a few
+    hundred rows is about a third smaller than under Spark's snappy
+    default, so one threshold covers more rows.
 
     The small files are read through the table's own file index, pruned
     by ``_metadata.file_path``, and their rows are appended to the table
