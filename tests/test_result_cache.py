@@ -551,6 +551,33 @@ def test_cache_corrupt_meta_reads_as_miss(
     assert not meta.with_name(f"{key}.v1.parquet").exists()
 
 
+def test_cache_reset_then_new_entries(spark, counter_samples, tmp_path):
+    """``reset`` drops the whole cache directory while the leaf and
+    instant stores keep their roots: the next miss at each level writes
+    v0 (recreating the directory) instead of failing, and its result
+    equals a cold evaluation."""
+    samples, t0 = counter_samples
+    cache = RollupResultCache(spark, str(tmp_path / "rrc_reset"))
+    t1 = t0 + 30 * 60_000
+    instant = EvalConfig(start=t1, end=t1, step=60_000)
+    rng = EvalConfig(start=t0, end=t0 + 600_000, step=60_000)
+    cache.evaluate("sum_over_time(c[4h])", samples, instant)
+    cache.evaluate("topk_max(1, count_over_time(c[2m]))", samples, rng)
+    cache.reset()
+    for q, cfg in [
+        ("count_over_time(c[4h])", instant),
+        ("topk_max(1, increase_prometheus(c[2m]))", rng),
+        ("sum(increase_prometheus(c[2m])) by (job)", rng),
+    ]:
+        out = cache.evaluate(q, samples, cfg)
+        assert _vals(out) == _vals(
+            evaluate(spark, q, samples, cfg, use_plan_cache=False)
+        )
+    assert cache.leaf_cache().instant_values().stats["misses"] == 2
+    assert cache.stats["mode"] == "miss"
+    assert len(list((tmp_path / "rrc_reset").rglob("*.v0.parquet"))) == 3
+
+
 def test_instant_cache_key_includes_two_level_cutover(
     spark, wide_samples, tmp_path
 ):

@@ -1540,14 +1540,15 @@ def _column_chunks(paths):
     return out
 
 
-def _assert_at_rest(paths, time_col, time_encoding="DELTA_BINARY_PACKED"):
+def _assert_at_rest(paths, has_ts=True):
+    """Every column chunk of ``paths`` is ZSTD; with ``has_ts``, every
+    file has ``ts`` chunks and all of them are DELTA_BINARY_PACKED."""
     chunks = _column_chunks(paths)
     assert chunks
     assert {c[3] for c in chunks} == {"ZSTD"}
-    time_chunks = [c for c in chunks if c[1] == time_col]
-    assert len(time_chunks) >= len(paths)
-    assert all(c[4] == {time_encoding} for c in time_chunks), time_chunks
-    return time_chunks
+    ts_chunks = [c for c in chunks if c[1] == "ts"]
+    assert len(ts_chunks) >= (len(paths) if has_ts else 0)
+    assert all(c[4] == {"DELTA_BINARY_PACKED"} for c in ts_chunks), ts_chunks
 
 
 def test_at_rest_encoding_through_table_lifecycle(spark):
@@ -1576,18 +1577,18 @@ def test_at_rest_encoding_through_table_lifecycle(spark):
     table = "t_at_rest"
     write_samples_table(_mk_samples(spark, base), table, n_buckets=2)
     try:
-        _assert_at_rest(_file_snapshot(spark, table), "ts")
+        _assert_at_rest(_file_snapshot(spark, table))
         for chunk in late[:2]:
             append_samples(_mk_samples(spark, chunk), table)
-        _assert_at_rest(_file_snapshot(spark, table), "ts")
+        _assert_at_rest(_file_snapshot(spark, table))
         assert merge_small_parts(spark, table, max_small_bytes=1 << 30) > 0
-        _assert_at_rest(_file_snapshot(spark, table), "ts")
+        _assert_at_rest(_file_snapshot(spark, table))
         append_samples(_mk_samples(spark, late[2]), table)
         before = _file_snapshot(spark, table)
         compact_samples_table(spark, table, n_buckets=2)
         after = _file_snapshot(spark, table)
         assert set(after) != set(before)
-        _assert_at_rest(after, "ts")
+        _assert_at_rest(after)
         expected = Counter(base + [r for chunk in late for r in chunk])
         assert rows_of(table) == expected
     finally:
@@ -1596,9 +1597,9 @@ def test_at_rest_encoding_through_table_lifecycle(spark):
 
 def test_at_rest_encoding_logs_and_versioned_store(spark, tmp_path):
     """The logs table and a VersionedStore entry use the same at-rest
-    options. The logs ``_time`` is a TIMESTAMP, which Spark writes in the
-    session's physical type (INT96 by default) that has no delta
-    encoding: it is stored PLAIN, without a dictionary."""
+    options: every logs column is zstd (the logs table has no ``ts``, so
+    its ``_time`` keeps its dictionary), and a store entry's ``ts`` is
+    DELTA_BINARY_PACKED."""
     import glob
     from datetime import datetime
 
@@ -1616,10 +1617,7 @@ def test_at_rest_encoding_logs_and_versioned_store(spark, tmp_path):
     drop_samples_table(spark, "t_at_rest_logs")
     try:
         write_logs_table(logs, "t_at_rest_logs", stream_fields=["app"], n_buckets=2)
-        time_chunks = _assert_at_rest(
-            _file_snapshot(spark, "t_at_rest_logs"), "_time", time_encoding="PLAIN"
-        )
-        assert {c[2] for c in time_chunks} == {"INT96"}
+        _assert_at_rest(_file_snapshot(spark, "t_at_rest_logs"), has_ts=False)
         back = spark.table("t_at_rest_logs").select("_time", "_msg", "app")
         assert sorted(map(tuple, back.collect())) == sorted(rows)
     finally:
@@ -1632,7 +1630,7 @@ def test_at_rest_encoding_logs_and_versioned_store(spark, tmp_path):
     )
     got = store.put("k", df, {})
     assert store.get("k")["version"] == 0
-    _assert_at_rest(glob.glob(str(tmp_path / "store" / "k.v0.parquet" / "*.parquet")), "ts")
+    _assert_at_rest(glob.glob(str(tmp_path / "store" / "k.v0.parquet" / "*.parquet")))
     assert sorted(map(tuple, got.collect())) == sorted(entry)
 
 
@@ -1657,7 +1655,7 @@ def test_table_created_before_at_rest_options_keeps_working(spark, monkeypatch):
     ]
     table = "t_old_format"
     with monkeypatch.context() as m:
-        m.setattr(layout, "at_rest_options", lambda time_col: {})
+        m.setattr(layout, "AT_REST_OPTIONS", {})
         write_samples_table(_mk_samples(spark, base), table, n_buckets=2)
     try:
         assert "zstd" not in spark.sql(f"SHOW CREATE TABLE {table}").first()[0]
@@ -1673,6 +1671,6 @@ def test_table_created_before_at_rest_options_keeps_working(spark, monkeypatch):
         )
         assert got == expected
         compact_samples_table(spark, table, n_buckets=2, full=True)
-        _assert_at_rest(_file_snapshot(spark, table), "ts")
+        _assert_at_rest(_file_snapshot(spark, table))
     finally:
         drop_samples_table(spark, table)

@@ -49,11 +49,12 @@ version n with the caller's fields, and ``{key}.v{n}.parquet`` holds its
 rows. A store writes v(n+1) beside v(n) and publishes it by atomically
 replacing the meta file (tmp + rename); v(n) stays one more generation
 for lazy readers still bound to it, and v(n−1) is deleted. A missing or
-corrupt meta file reads as no entry; the next put then numbers past the
-highest version on disk, so it never rewrites a file a lazy reader may
-still hold. Versions are written in the samples table's at-rest format
-(storage/layout.py ``at_rest_options``: zstd, v2 pages, ``ts``
-DELTA_BINARY_PACKED). Keys come from ``cache_key``: the caller's
+corrupt meta file reads as no entry. A missing meta means no version was
+published (or a reset dropped them all), so the next put writes v0; after
+a corrupt one it numbers past the highest version on disk, so it never
+rewrites a file a lazy reader may still hold. Versions are written in
+the samples table's at-rest format (storage/layout.py
+``AT_REST_OPTIONS``: zstd, v2 pages, ``ts`` DELTA_BINARY_PACKED). Keys come from ``cache_key``: the caller's
 identity plus every EvalConfig field that changes grid values.
 """
 
@@ -71,7 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from victoriametrics_spark.engine.evalcfg import EvalConfig
-from victoriametrics_spark.storage.layout import at_rest_options
+from victoriametrics_spark.storage.layout import AT_REST_OPTIONS
 
 # transforms whose output at one grid point depends on the whole range
 _RANGE_DEPENDENT_TRANSFORMS = frozenset(
@@ -169,17 +170,26 @@ class VersionedStore:
         self.spark.catalog.refreshByPath(path)
         return self.spark.read.schema(self.schema).parquet(path)
 
-    def _next_free(self, key: str) -> int:
-        """The version after the highest ``{key}.v{n}.parquet`` on disk
-        (0 if none): without a readable meta, a put must not rewrite a
-        version a lazy reader may still be bound to. One listing of the
-        store, paid by a new key's first put, beside its Spark write."""
+    def _next_version(self, key: str) -> int:
+        """The version a put of ``key`` writes. Without a meta file no
+        version was ever published (or a reset dropped them all), so v0
+        is free. A corrupt meta numbers past the highest
+        ``{key}.v{n}.parquet`` on disk, so the put never rewrites a
+        version a lazy reader may still be bound to; only that rare
+        path lists the store."""
+        try:
+            with open(self._file(key, "meta.json")) as fh:
+                return json.load(fh)["version"] + 1
+        except FileNotFoundError:
+            return 0
+        except json.JSONDecodeError:
+            pass
         pat = re.compile(re.escape(key) + r"\.v(\d+)\.parquet")
-        found = [
-            int(m.group(1))
-            for m in map(pat.fullmatch, os.listdir(self.root))
-            if m
-        ]
+        try:
+            names = os.listdir(self.root)
+        except FileNotFoundError:
+            names = []
+        found = [int(m.group(1)) for m in map(pat.fullmatch, names) if m]
         return max(found, default=-1) + 1
 
     def put(self, key: str, df: DataFrame, fields: dict, then=None):
@@ -189,12 +199,11 @@ class VersionedStore:
         version as it was — and its result is returned (default: the new
         version's rows)."""
         with self._lock:
-            meta = self.get(key)
-            version = meta["version"] + 1 if meta else self._next_free(key)
+            version = self._next_version(key)
             path = self._file(key, f"v{version}.parquet")
             (
                 df.write.mode("overwrite")
-                .options(**at_rest_options("ts"))
+                .options(**AT_REST_OPTIONS)
                 .parquet(path)
             )
             new = self.read(key, version)

@@ -26,11 +26,11 @@ Compaction (the LSM merge analog, lib/storage/merge.go) rewrites a table
 back to one file per (date, bucket), optionally applying last-wins
 dedup exactly like VM dedups during part merges (lib/storage/dedup.go).
 
-At rest (:func:`at_rest_options`, the lib/encoding analog): VM picks a
+At rest (:data:`AT_REST_OPTIONS`, the lib/encoding analog): VM picks a
 per-block encoding by series shape (const, delta-const, nearest-delta)
 and zstd-compresses the block. Here each table is created with zstd
-pages, v2 data pages and no dictionary on the time column, so the
-samples' long ``ts`` is stored DELTA_BINARY_PACKED. ``saveAsTable``
+pages, v2 data pages and no dictionary on ``ts``, so the samples' long
+timestamps are stored DELTA_BINARY_PACKED. ``saveAsTable``
 keeps these as the table's ``OPTIONS``, so every later append, merge
 and partition rewrite into the table writes the same encoding, whatever
 session writes it.
@@ -49,17 +49,15 @@ from victoriametrics_spark.schema import series_key
 DEFAULT_BUCKETS = 32
 
 
-def at_rest_options(time_col: str) -> dict[str, str]:
-    """Parquet writer options of every table and store this package
-    owns: zstd pages, v2 data pages, and ``time_col`` without a
-    dictionary, so an INT64 time column is DELTA_BINARY_PACKED. (A
-    TIMESTAMP column is written in Spark's session-wide physical type,
-    INT96 by default, which has no delta encoding: it is stored PLAIN.)"""
-    return {
-        "compression": "zstd",
-        "parquet.writer.version": "v2",
-        f"parquet.enable.dictionary#{time_col}": "false",
-    }
+# Parquet writer options of every table and store this package owns:
+# zstd pages, v2 data pages, and ``ts`` without a dictionary, so it is
+# DELTA_BINARY_PACKED (tables without a ``ts`` column keep every
+# dictionary).
+AT_REST_OPTIONS = {
+    "compression": "zstd",
+    "parquet.writer.version": "v2",
+    "parquet.enable.dictionary#ts": "false",
+}
 
 
 def parse_tenant(token: str) -> str:
@@ -165,13 +163,13 @@ def _save_bucketed(
     """``saveAsTable`` partitioned by ``part_cols``, bucketed by ``key``
     and sorted by (``key``, ``sort_col``), each bucket written by one
     task: one file per (partition, bucket). A new table stores
-    :func:`at_rest_options` of ``sort_col`` as its ``OPTIONS``; an
-    append keeps the existing table's."""
+    :data:`AT_REST_OPTIONS` as its ``OPTIONS``; an append keeps the
+    existing table's."""
     (
         _by_bucket(df, key, n_buckets)
         .write.mode(mode)
         .format("parquet")
-        .options(**at_rest_options(sort_col))
+        .options(**AT_REST_OPTIONS)
         .partitionBy(*part_cols)
         .bucketBy(n_buckets, key)
         .sortBy(key, sort_col)
@@ -194,7 +192,7 @@ def append_samples(
     created by a writer that passed no options keeps Spark's session
     defaults (snappy, dictionary ``ts``) for its appends and merges
     until a full rewrite (``compact_samples_table(full=True)``) creates
-    it anew with :func:`at_rest_options`."""
+    it anew with :data:`AT_REST_OPTIONS`."""
     spark = samples.sparkSession
     cur = None
     try:
@@ -720,7 +718,7 @@ def merge_small_parts(
     the one-file-per-bucket sorted-scan invariant).
 
     ``max_small_bytes`` compares compressed sizes on disk, as VM's part
-    sizes do: under :func:`at_rest_options` a file of more than a few
+    sizes do: under :data:`AT_REST_OPTIONS` a file of more than a few
     hundred rows is about a third smaller than under Spark's snappy
     default, so one threshold covers more rows.
 
