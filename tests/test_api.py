@@ -1821,27 +1821,53 @@ def test_max_concurrent_requests_limiter(api):
 
 def test_metrics_self_exposition(api):
     """/metrics serves Prometheus-exposition self metrics: per-path
-    request counters and the concurrent-select gauges/counters
-    (vm_http_requests_total / vm_concurrent_select_* family)."""
+    request counters, the concurrent-select gauges/counters
+    (vm_http_requests_total / vm_concurrent_select_* family) and the
+    JVM's codegen compilations, which a repeated query does not add to:
+    it finds every generated class in the codegen cache."""
     srv = serve(api, port=0, max_concurrent_requests=2)
     port = srv.server_address[1]
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     base = f"http://127.0.0.1:{port}"
+
+    def scrape() -> str:
+        with urllib.request.urlopen(f"{base}/metrics") as resp:
+            assert resp.headers["Content-Type"].startswith("text/plain")
+            return resp.read().decode()
+
+    def compilations() -> int:
+        (line,) = [
+            l for l in scrape().splitlines()
+            if l.startswith("vm_spark_codegen_compilations_total ")
+        ]
+        return int(line.split()[1])
+
+    def query() -> None:
+        with urllib.request.urlopen(
+            f"{base}/api/v1/query?query=last_over_time(temp%5B400s%5D)&time=1500"
+        ) as resp:
+            assert json.loads(resp.read())["status"] == "success"
+
     try:
         with urllib.request.urlopen(f"{base}/api/v1/labels"):
             pass
         with urllib.request.urlopen(f"{base}/prometheus/api/v1/labels"):
             pass
-        with urllib.request.urlopen(f"{base}/metrics") as resp:
-            assert resp.headers["Content-Type"].startswith("text/plain")
-            body = resp.read().decode()
+        body = scrape()
         # prefix-stripped path counting: both requests count to one path
         assert 'vm_http_requests_total{path="/api/v1/labels"} 2' in body
         assert "vm_concurrent_select_capacity 2" in body
         assert "vm_concurrent_select_current 0" in body
         assert "vm_concurrent_select_limit_timeout_total 0" in body
         assert "vm_app_uptime_seconds" in body
+
+        before = compilations()
+        query()
+        first = compilations()
+        assert first >= before
+        query()
+        assert compilations() == first
     finally:
         srv.shutdown()
 

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from victoriametrics_spark.engine.evalcfg import EvalConfig
 from victoriametrics_spark.engine.planner import evaluate
 from victoriametrics_spark.metricsql.ast import DurationExpr
+from victoriametrics_spark.session import codegen_compilations
 
 DEFAULT_STEP_MS = 300_000  # 5m, prometheus.go:72
 # -search.latencyOffset default (prometheus.go:38): samples younger than
@@ -3481,7 +3482,8 @@ class IngestAPI:
     # --------------------------------------------------------- helpers
     def _lines_df(self, body: str) -> DataFrame:
         rows = [(ln,) for ln in body.splitlines() if ln.strip()]
-        return self.spark.createDataFrame(rows or [("",)], ["value"])
+        # a DDL schema: inferring it walks every line in Python
+        return self.spark.createDataFrame(rows or [("",)], "value string")
 
     def ingest_json(self, body: str, dialect: str, extra_labels=None) -> int:
         """POST JSON-document ingestion dialects (one payload document
@@ -4382,6 +4384,13 @@ def serve(api: PromAPI, port: int = 8428, host: str = "127.0.0.1", logs_api: "Lo
                 "# TYPE vm_concurrent_select_current gauge",
                 f"vm_concurrent_select_current {inflight}",
             ]
+        # exact count of the driver JVM, which in local mode also runs
+        # the executors; on a cluster each executor counts its own
+        lines += [
+            "# TYPE vm_spark_codegen_compilations_total counter",
+            "vm_spark_codegen_compilations_total "
+            f"{codegen_compilations(api.spark)}",
+        ]
         with metrics_lock:
             lines.append("# TYPE vm_concurrent_select_limit_reached_total counter")
             lines.append(
