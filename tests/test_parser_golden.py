@@ -21,6 +21,7 @@ from victoriametrics_spark.streaming.parsers import (
     parse_graphite,
     parse_influx,
     parse_opentsdb,
+    parse_prometheus_lines,
     parse_prometheus_text,
 )
 
@@ -124,6 +125,13 @@ _DIALECTS = {
         ),
         _exp_prometheus,
     ),
+    # the same corpus through the driver-side decode of an import body
+    "prometheus-driver": (
+        lambda spark, text: parse_prometheus_lines(
+            spark, text.split("\n"), DEF_MS
+        ),
+        _exp_prometheus,
+    ),
     "graphite": (
         lambda spark, text: parse_graphite(_lines(spark, text), DEF_MS),
         _exp_graphite,
@@ -143,15 +151,19 @@ _DIALECTS = {
 }
 
 
+def _corpus(dialect):
+    return CASES[dialect.removesuffix("-driver")]
+
+
 def _success_params():
     for d, (run, exp) in _DIALECTS.items():
-        for i, case in enumerate(CASES[d]["success"]):
+        for i, case in enumerate(_corpus(d)["success"]):
             yield pytest.param(d, case, id=f"{d}-ok-{i}")
 
 
 def _failure_params():
     for d in _DIALECTS:
-        for i, inp in enumerate(CASES[d]["failure"]):
+        for i, inp in enumerate(_corpus(d)["failure"]):
             yield pytest.param(d, inp, id=f"{d}-err-{i}")
 
 

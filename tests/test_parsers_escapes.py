@@ -129,6 +129,46 @@ def test_prom_junk_after_timestamp_rejected(spark):
     assert got == [("alsook", 9.0), ("ok", 7.0)]
 
 
+def test_prom_driver_decode_matches_executor_decode(spark, monkeypatch):
+    """An import body decoded on the driver parses exactly like the same
+    lines decoded on the executors, escapes and poison lines included;
+    a body above the line limit goes to the executors."""
+    from victoriametrics_spark.streaming import parsers as P
+
+    rows = [
+        'm{msg="a}b",path="/a,b"} 2 1000',
+        'm2{a="c\\"d",b="e\\\\f",c="g\\nh"} 9',
+        '{"metric name", "l b"="v,2"} 3 5',
+        'a{x="1"} +Inf 1',
+        "d nan 1",
+        "m   7.5",
+        " \tn{a=\"b\"}   8   1234\r",
+        'bad{x="y} oops',
+        "m notanumber 1000",
+        "{} 5 5",
+        'm{a="b"} 1 2 3',
+        "# HELP m help",
+        "",
+    ]
+
+    def got(df):
+        return sorted(
+            (r["name"], sorted(r["labels"].items()), r["ts"], repr(r["value"]))
+            for r in df.collect()
+        )
+
+    executors = parse_prometheus_text(_lines(spark, rows), 5000)
+    driver = P.parse_prometheus_lines(spark, rows, 5000)
+    assert driver.schema == executors.schema
+    want = got(executors)
+    assert len(want) == 7
+    assert got(driver) == want
+    monkeypatch.setattr(P, "DRIVER_DECODE_MAX_LINES", 0)
+    assert got(P.parse_prometheus_lines(spark, rows, 5000)) == want
+    monkeypatch.undo()
+    assert P.parse_prometheus_lines(spark, [""], 5000).collect() == []
+
+
 def test_prom_multiple_spaces_and_default_ts(spark):
     by, _ = _prom(spark, ["m   7.5", 'n{a="b"}   8   1234'], default_ts=42)
     assert by["m"]["ts"] == 42 and by["m"]["value"] == 7.5

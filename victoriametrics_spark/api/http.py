@@ -3480,10 +3480,14 @@ class IngestAPI:
             self.tenant = parse_tenant(tenant) if tenant is not None else None
 
     # --------------------------------------------------------- helpers
+    @staticmethod
+    def _lines(body: str) -> list:
+        return [ln for ln in body.splitlines() if ln.strip()] or [""]
+
     def _lines_df(self, body: str) -> DataFrame:
-        rows = [(ln,) for ln in body.splitlines() if ln.strip()]
-        # a DDL schema: inferring it walks every line in Python
-        return self.spark.createDataFrame(rows or [("",)], "value string")
+        from victoriametrics_spark.streaming.parsers import lines_frame
+
+        return lines_frame(self.spark, self._lines(body))
 
     def ingest_json(self, body: str, dialect: str, extra_labels=None) -> int:
         """POST JSON-document ingestion dialects (one payload document
@@ -3838,9 +3842,8 @@ class IngestAPI:
         """POST /api/v1/import[...] & friends — line dialects."""
         from victoriametrics_spark.streaming import parsers as P
 
-        lines = self._lines_df(body)
         if fmt == "jsonl":
-            df = P.parse_vm_jsonl(lines)
+            df = P.parse_vm_jsonl(self._lines_df(body))
         elif fmt == "prometheus":
             # HELP/TYPE comment lines feed the metadata registry (the
             # body is already driver-side here; comment volume is
@@ -3849,26 +3852,29 @@ class IngestAPI:
                 (ln for ln in body.splitlines() if ln.lstrip()[:1] == "#"),
                 tenant=self._metadata_tenant(),
             )
-            df = P.parse_prometheus_text(lines, default_ts_ms)
+            df = P.parse_prometheus_lines(
+                self.spark, self._lines(body), default_ts_ms
+            )
         elif fmt == "influx":
             df = P.parse_influx(
-                lines,
+                self._lines_df(body),
                 default_ts_ms=default_ts_ms or self._now_ms(),
                 keep_line_id=True,
                 precision=precision,
             )
         elif fmt == "graphite":
             df = P.parse_graphite(
-                lines,
+                self._lines_df(body),
                 default_ts_ms,
                 sanitize_metric_name=self.graphite_sanitize_metric_name,
             )
         elif fmt == "opentsdb":
             df = P.parse_opentsdb(
-                lines, default_ts_ms=default_ts_ms or self._now_ms()
+                self._lines_df(body),
+                default_ts_ms=default_ts_ms or self._now_ms(),
             )
         elif fmt == "zabbix":
-            df = P.parse_zabbix(lines)
+            df = P.parse_zabbix(self._lines_df(body))
         else:
             raise ValueError(f"unknown import format {fmt!r}")
         df, n_rows = self._count_invalid_lines(df, fmt, body)
@@ -3904,7 +3910,8 @@ class IngestAPI:
             for ln in body.splitlines()
             if ln.strip() and pred(ln.strip())
         )
-        df = df.localCheckpoint(eager=True)
+        # the count below is the job that fills the checkpoint
+        df = df.localCheckpoint(eager=False)
         if fmt == "influx":
             # multi-field lines explode to several rows; count LINES
             valid = df.select(
@@ -3956,7 +3963,7 @@ class IngestAPI:
             (ln for ln in body.splitlines() if ln.lstrip()[:1] == "#"),
             tenant=self._metadata_tenant(),
         )
-        df = P.parse_prometheus_text(self._lines_df(body), ts_ms)
+        df = P.parse_prometheus_lines(self.spark, self._lines(body), ts_ms)
         # a malformed exposition line in a scrape body drops that line
         # only — never the whole scrape (scrapework.go keeps the rest)
         df, n_rows = self._count_invalid_lines(

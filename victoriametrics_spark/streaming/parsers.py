@@ -12,7 +12,9 @@ serves batch backfill and streaming ingest. Influx lines that carry
 line-protocol escapes or quoted field strings take an Arrow-batched
 ``mapInPandas`` slow path (the reference keeps the same fast/slow split
 via its ``noEscapes`` flag, influx/parser.go:400-447); everything else
-stays JVM-side.
+stays JVM-side. A Prometheus-text HTTP import body, which the driver
+already holds, is decoded on the driver by the same per-line decode
+(:func:`parse_prometheus_lines`).
 
 Robustness contract (round 11, mirroring
 lib/protoparser/prometheus/parser.go:21-49 errLogger-and-skip): a
@@ -597,7 +599,8 @@ def parse_influx(
 # try_cast semantics match the other dialects. A pure-Catalyst decode
 # evaluates the quote-aware brace regex 4x per line and measured slower
 # on both escape-heavy and escape-free input. The upstream 232-case
-# parser corpus and the escape suite pin this decode's behaviour.
+# parser corpus and the escape suite pin this decode's behaviour, on
+# the executors and on the driver (parse_prometheus_lines).
 # re.A pins \s/\S to ASCII like Java's regex.
 _PROM_BODY = r'((?:[^"}]|"(?:[^"\\]|\\.)*")*)'
 _PROM_BRACED: dict | None = None  # compiled-pattern table, built lazily
@@ -683,18 +686,56 @@ def _prom_decode_line(raw: str | None, P: dict):
 
 
 def _prom_decode_batches(it):
-    import pandas as pd
-
     P = _prom_patterns()
     for pdf in it:
-        rows = [
-            r
-            for raw in pdf["value"]
-            if (r := _prom_decode_line(raw, P)) is not None
-        ]
-        yield pd.DataFrame(
-            rows, columns=["name", "keys", "vals", "val", "tss", "braced"]
-        )
+        yield _prom_decoded_frame(pdf["value"], P)
+
+
+def _prom_decoded_frame(lines, P: dict):
+    """The decoded pieces of ``lines`` as a pandas frame of
+    :data:`_PROM_DECODED` columns; undecodable lines are left out."""
+    import pandas as pd
+
+    rows = [r for raw in lines if (r := _prom_decode_line(raw, P)) is not None]
+    return pd.DataFrame(
+        rows, columns=["name", "keys", "vals", "val", "tss", "braced"]
+    )
+
+
+_PROM_DECODED = (
+    "name string, keys array<string>, vals array<string>, "
+    "val string, tss string, braced boolean"
+)
+
+# Bodies of up to this many lines are decoded on the driver, which
+# already holds them, and reach Spark as Arrow batches: no Python worker
+# runs. On a 4-core host a 2000-line body then parses and counts in
+# about 0.15 s, against 0.5 s through four Python workers. The driver
+# decodes a line in about 17 us, so from some 25k lines on the
+# executors' parallel decode is faster.
+DRIVER_DECODE_MAX_LINES = 25_000
+
+
+def lines_frame(spark, lines: list) -> DataFrame:
+    """A one-column ``value`` frame of text lines, sent as Arrow batches
+    (a list of rows would be pickled and pass through a Python worker
+    on every partition before any parser runs)."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame({"value": lines}), "value string")
+
+
+def parse_prometheus_lines(spark, lines: list, default_ts_ms: int) -> DataFrame:
+    """:func:`parse_prometheus_text` over text lines the driver holds
+    (an HTTP import body): up to :data:`DRIVER_DECODE_MAX_LINES` lines
+    are decoded right here by the same per-line decode, larger bodies go
+    to the executors."""
+    if len(lines) > DRIVER_DECODE_MAX_LINES:
+        return parse_prometheus_text(lines_frame(spark, lines), default_ts_ms)
+    decoded = spark.createDataFrame(
+        _prom_decoded_frame(lines, _prom_patterns()), _PROM_DECODED
+    )
+    return _prom_finish(decoded, default_ts_ms)
 
 
 def parse_prometheus_text(lines: DataFrame, default_ts_ms: int) -> DataFrame:
@@ -705,11 +746,13 @@ def parse_prometheus_text(lines: DataFrame, default_ts_ms: int) -> DataFrame:
     ``mapInPandas``); value, timestamp and labels finish in Catalyst."""
     l = _wstrip(F.col("value"))
     data = lines.select(l.alias("value"))
-    decoded = data.mapInPandas(
-        _prom_decode_batches,
-        "name string, keys array<string>, vals array<string>, "
-        "val string, tss string, braced boolean",
-    )
+    decoded = data.mapInPandas(_prom_decode_batches, _PROM_DECODED)
+    return _prom_finish(decoded, default_ts_ms)
+
+
+def _prom_finish(decoded: DataFrame, default_ts_ms: int) -> DataFrame:
+    """Canonical samples from decoded pieces: value, timestamp and the
+    labels map are parsed in Catalyst."""
     tsd = _try_double(F.col("tss"))
     ts = (
         F.when(F.col("tss") == "", F.lit(default_ts_ms).cast("long"))
