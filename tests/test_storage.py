@@ -1542,13 +1542,33 @@ def _column_chunks(paths):
 
 def _assert_at_rest(paths, has_ts=True):
     """Every column chunk of ``paths`` is ZSTD; with ``has_ts``, every
-    file has ``ts`` chunks and all of them are DELTA_BINARY_PACKED."""
+    file has ``ts`` chunks and all of them are DELTA_BINARY_PACKED and
+    carry min/max. Series keys, labels, values and stale flags carry
+    no statistics."""
+    import pyarrow.parquet as pq
+
     chunks = _column_chunks(paths)
     assert chunks
     assert {c[3] for c in chunks} == {"ZSTD"}
     ts_chunks = [c for c in chunks if c[1] == "ts"]
     assert len(ts_chunks) >= (len(paths) if has_ts else 0)
     assert all(c[4] == {"DELTA_BINARY_PACKED"} for c in ts_chunks), ts_chunks
+    no_stats = {
+        "__series_key",
+        "labels.key_value.key",
+        "labels.key_value.value",
+        "value",
+        "is_stale",
+    }
+    for p in paths:
+        rg = pq.ParquetFile(p).metadata.row_group(0)
+        stats = {
+            rg.column(c).path_in_schema: rg.column(c).is_stats_set
+            for c in range(rg.num_columns)
+        }
+        assert not any(stats.get(c) for c in no_stats), (p, stats)
+        if has_ts:
+            assert stats["ts"], (p, stats)
 
 
 def test_at_rest_encoding_through_table_lifecycle(spark):

@@ -54,8 +54,9 @@ published (or a reset dropped them all), so the next put writes v0; after
 a corrupt one it numbers past the highest version on disk, so it never
 rewrites a file a lazy reader may still hold. Versions are written in
 the samples table's at-rest format (storage/layout.py
-``AT_REST_OPTIONS``: zstd, v2 pages, ``ts`` DELTA_BINARY_PACKED). Keys come from ``cache_key``: the caller's
-identity plus every EvalConfig field that changes grid values.
+``AT_REST_OPTIONS``: zstd, v2 pages, ``ts`` DELTA_BINARY_PACKED, no
+statistics on labels and values). Keys come from ``cache_key``: the
+caller's identity plus every EvalConfig field that changes grid values.
 """
 
 from __future__ import annotations

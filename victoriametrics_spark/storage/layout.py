@@ -30,7 +30,8 @@ At rest (:data:`AT_REST_OPTIONS`, the lib/encoding analog): VM picks a
 per-block encoding by series shape (const, delta-const, nearest-delta)
 and zstd-compresses the block. Here each table is created with zstd
 pages, v2 data pages and no dictionary on ``ts``, so the samples' long
-timestamps are stored DELTA_BINARY_PACKED. ``saveAsTable``
+timestamps are stored DELTA_BINARY_PACKED. Column statistics are kept
+only where a pushed-down filter can use them. ``saveAsTable``
 keeps these as the table's ``OPTIONS``, so every later append, merge
 and partition rewrite into the table writes the same encoding, whatever
 session writes it.
@@ -49,14 +50,30 @@ from victoriametrics_spark.schema import series_key
 DEFAULT_BUCKETS = 32
 
 
+# Columns written without min/max statistics. No filter on them reaches
+# the Parquet reader: a map column cannot be pushed down, the engine
+# filters ``is_stale`` through ``coalesce`` and selects by name and time,
+# never by series key or sample value. Their min/max sat in the footer,
+# in every page header and in the page index; that is about a tenth of a
+# small bucket file (164 690 -> 148 410 bytes over the 32 files of
+# 18 400 samples).
+_NO_STATS_COLUMNS = (
+    "__series_key",
+    "labels.key_value.key",
+    "labels.key_value.value",
+    "value",
+    "is_stale",
+)
+
 # Parquet writer options of every table and store this package owns:
-# zstd pages, v2 data pages, and ``ts`` without a dictionary, so it is
+# zstd pages, v2 data pages, ``ts`` without a dictionary, so it is
 # DELTA_BINARY_PACKED (tables without a ``ts`` column keep every
-# dictionary).
+# dictionary), and no statistics on ``_NO_STATS_COLUMNS``.
 AT_REST_OPTIONS = {
     "compression": "zstd",
     "parquet.writer.version": "v2",
     "parquet.enable.dictionary#ts": "false",
+    **{f"parquet.column.statistics.enabled#{c}": "false" for c in _NO_STATS_COLUMNS},
 }
 
 
