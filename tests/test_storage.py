@@ -10,6 +10,8 @@ per-series lag window and the (series, grid-index) aggregation directly.
 
 from __future__ import annotations
 
+import contextlib
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -1479,6 +1481,153 @@ def test_write_logs_table_write_shape(spark):
         )
     finally:
         drop_samples_table(spark, "t_shape_logs")
+
+
+# ------------------------------------------------------ default buckets
+# A table created without ``n_buckets`` gets min(32, shuffle partitions)
+# buckets; appends and compactions keep whatever count the table has.
+# Each test sets the shuffle partitions itself, so none depends on the
+# host's core count.
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n):
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_default_buckets_follow_shuffle_partitions(spark):
+    """Under 3 shuffle partitions a default write makes 3 buckets, one
+    file per (date, bucket), and a rate query scans them in 3
+    partitions with no exchange; under 64 it makes 32 buckets."""
+    from victoriametrics_spark.storage import drop_samples_table
+    from victoriametrics_spark.storage.layout import (
+        _table_num_buckets,
+        default_buckets,
+    )
+
+    rows = [
+        (f"s{i}", T0 + d * DAY + h * H, float(d * 24 + h))
+        for i in range(12)
+        for d in range(2)
+        for h in range(0, 24, 3)
+    ]
+    try:
+        with _shuffle_partitions(spark, 3):
+            assert default_buckets(spark) == 3
+            write_samples_table(_mk_samples(spark, rows), "t_defb")
+            for name in ("t_defb", "default.t_defb", "`default`.`t_defb`"):
+                assert _table_num_buckets(spark, name) == 3
+            per_bucket = _new_files_per_bucket({}, _file_snapshot(spark, "t_defb"))
+            assert set(per_bucket.values()) == {1}
+            assert len(per_bucket) == _touched(
+                spark.table("t_defb"), 3, part_cols=("date",)
+            )
+            cfg = EvalConfig(start=T0 + 6 * H, end=T0 + 2 * DAY - H, step=6 * H)
+            df = evaluate(
+                spark,
+                "rate(m[1d])",
+                read_samples_table(
+                    spark, "t_defb", cfg.start, cfg.end, lookback_ms=DAY
+                ),
+                cfg,
+            )
+            assert "Exchange" not in _physical_plan(df)
+            assert df.rdd.getNumPartitions() == 3
+            assert df.count() > 0
+        with _shuffle_partitions(spark, 64):
+            assert default_buckets(spark) == 32
+            write_samples_table(_mk_samples(spark, rows), "t_defb")
+            assert _table_num_buckets(spark, "t_defb") == 32
+    finally:
+        drop_samples_table(spark, "t_defb")
+    assert _table_num_buckets(spark, "t_defb") is None
+
+
+def test_logs_append_keeps_bucket_count(spark):
+    """An append with the default count into a 2-bucket logs table keeps
+    its 2 buckets (Spark rejects an append with another bucket spec) and
+    adds every row."""
+    from collections import Counter
+    from datetime import datetime
+
+    from victoriametrics_spark.storage.layout import (
+        _table_num_buckets,
+        drop_samples_table,
+        write_logs_table,
+    )
+
+    rows = [
+        (datetime(2024, 1, 1 + i % 2, i % 24), f"msg {i}", f"app{i % 5}")
+        for i in range(40)
+    ]
+    logs = spark.createDataFrame(rows, ["_time", "_msg", "app"])
+    drop_samples_table(spark, "t_logs_keepb")
+    try:
+        write_logs_table(logs, "t_logs_keepb", stream_fields=["app"], n_buckets=2)
+        once = _table_rows(spark, "t_logs_keepb")
+        with _shuffle_partitions(spark, 3):
+            write_logs_table(
+                logs, "t_logs_keepb", stream_fields=["app"], mode="append"
+            )
+        assert _table_num_buckets(spark, "t_logs_keepb") == 2
+        assert _table_rows(spark, "t_logs_keepb") == Counter(
+            {r: 2 * n for r, n in once.items()}
+        )
+    finally:
+        drop_samples_table(spark, "t_logs_keepb")
+
+
+def test_default_compact_keeps_bucket_count(spark):
+    """A default compact_samples_table of a 2-bucket table, under a
+    session whose default would be 3, keeps 2 buckets and stays
+    partition-scoped: after an append to one day, every other day's
+    files are left byte-identical."""
+    import hashlib
+
+    from victoriametrics_spark.storage import drop_samples_table
+    from victoriametrics_spark.storage.layout import _table_num_buckets
+
+    def contents(paths):
+        out = {}
+        for p in paths:
+            with open(p, "rb") as f:
+                out[p] = hashlib.sha256(f.read()).hexdigest()
+        return out
+
+    rows = [
+        (s, T0 + d * DAY + h * H, float(d * 24 + h))
+        for s in ("a", "b", "c")
+        for d in range(3)
+        for h in range(24)
+    ]
+    write_samples_table(_mk_samples(spark, rows), "t_keepb", n_buckets=2)
+    try:
+        with _shuffle_partitions(spark, 3):
+            late = [("a", T0 + DAY + h * H + 1, 999.0) for h in range(4)]
+            append_samples(_mk_samples(spark, late), "t_keepb")
+            before = _file_snapshot(spark, "t_keepb")
+            untouched = {p for p in before if "date=2024-01-02" not in p}
+            assert untouched
+            bytes_before = contents(untouched)
+            compact_samples_table(spark, "t_keepb")
+            after = _file_snapshot(spark, "t_keepb")
+        assert _table_num_buckets(spark, "t_keepb") == 2
+        assert {p: after.get(p) for p in untouched} == {
+            p: before[p] for p in untouched
+        }
+        assert contents(untouched) == bytes_before
+        per_bucket = _new_files_per_bucket(before, after)
+        assert set(per_bucket.values()) == {1}
+        assert {p for p in after if p not in before} == {
+            p for p in after if "date=2024-01-02" in p
+        }
+        assert read_samples_table(spark, "t_keepb").count() == len(rows) + 4
+    finally:
+        drop_samples_table(spark, "t_keepb")
 
 
 def test_500_partition_rewrites_keep_rows(spark):

@@ -1993,7 +1993,6 @@ class PromAPI:
         call can just wait) and re-derives the pinned samples frame."""
         from victoriametrics_spark.storage.layout import (
             _partition_file_index,
-            _table_num_buckets,
             compact_samples_table,
         )
 
@@ -2008,12 +2007,7 @@ class PromAPI:
             }
         )
         if dates:
-            compact_samples_table(
-                self.spark,
-                table,
-                n_buckets=_table_num_buckets(self.spark, table) or 32,
-                dates=dates,
-            )
+            compact_samples_table(self.spark, table, dates=dates)
             self.reload_samples()
         return {"status": "ok", "partitions": dates}
 

@@ -35,6 +35,8 @@ def get_spark(app_name: str = "victoriametrics-spark") -> SparkSession:
     On a real cluster the master/deploy settings come from spark-submit;
     everything configured here is cluster-size independent except
     ``shuffle.partitions``, which AQE coalesces downward at runtime anyway.
+    It also sets the bucket count of a new samples or logs table, capped
+    at 32 (``storage.layout.default_buckets``).
     """
     n = default_parallelism()
     builder = (

@@ -22,6 +22,14 @@ Each bucket is written by exactly one task, with at most one task per
 core (:func:`_by_bucket`), so a write adds one file per (partition,
 bucket).
 
+A new table gets :func:`default_buckets` buckets unless the caller
+names a count: the session's shuffle parallelism, capped at 32. On a
+local session that is one bucket per core, so a bucketed read is one
+wave of tasks and each write task writes one bucket file; a session of
+32 or more shuffle partitions gets 32. The count is fixed when the
+table is created: appends, merges, compactions and partition rewrites
+keep it.
+
 Compaction (the LSM merge analog, lib/storage/merge.go) rewrites a table
 back to one file per (date, bucket), optionally applying last-wins
 dedup exactly like VM dedups during part merges (lib/storage/dedup.go).
@@ -47,7 +55,15 @@ from pyspark.sql import functions as F
 
 from victoriametrics_spark.schema import series_key
 
-DEFAULT_BUCKETS = 32
+
+def default_buckets(spark: SparkSession) -> int:
+    """Bucket count of a new samples or logs table:
+    ``min(32, spark.sql.shuffle.partitions)``. Shuffle partitions rather
+    than executor cores: the setting stays put under dynamic allocation,
+    and every other exchange of the engine already fans out to it
+    (:func:`~victoriametrics_spark.session.get_spark` sets it to the
+    local core count)."""
+    return min(32, int(spark.conf.get("spark.sql.shuffle.partitions")))
 
 
 # Columns written without min/max statistics. No filter on them reaches
@@ -55,7 +71,7 @@ DEFAULT_BUCKETS = 32
 # filters ``is_stale`` through ``coalesce`` and selects by name and time,
 # never by series key or sample value. Their min/max sat in the footer,
 # in every page header and in the page index; that is about a tenth of a
-# small bucket file (164 690 -> 148 410 bytes over the 32 files of
+# small bucket file (164 690 -> 148 410 bytes for a 32-bucket table of
 # 18 400 samples).
 _NO_STATS_COLUMNS = (
     "__series_key",
@@ -127,7 +143,7 @@ def drop_samples_table(spark: SparkSession, table: str) -> None:
 def write_samples_table(
     samples: DataFrame,
     table: str,
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: "int | None" = None,
     mode: str = "overwrite",
     dedup_interval_ms: int = 0,
 ) -> None:
@@ -135,7 +151,9 @@ def write_samples_table(
     ts-sorted parquet table.
 
     Each bucket is written by exactly one task, so each (date, bucket)
-    pair lands in one file — the compacted invariant.
+    pair lands in one file — the compacted invariant. A new table gets
+    ``n_buckets`` buckets, or :func:`default_buckets` when it is None;
+    an append into an existing table keeps the table's count.
     ``dedup_interval_ms`` applies last-wins dedup during the write, the
     VM merge-time dedup analog (lib/storage/dedup.go:29-60).
 
@@ -165,8 +183,10 @@ def _by_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
     """``df`` exchanged so that one task holds each bucket of
     ``bucketBy(n_buckets, key)``: the partition id is the bucket id taken
     modulo ``tasks = min(n_buckets, default parallelism)``, so bucket
-    ``b`` lands in task ``b mod tasks`` (32 buckets on 4 cores: 4 tasks
-    of 8; with 32 or more cores, task ``b``). Unlike a hash repartition
+    ``b`` lands in task ``b mod tasks``. With :func:`default_buckets`
+    on a local session that is task ``b``, one bucket file per task; a
+    table with more buckets than cores puts several in one task (32
+    buckets on 4 cores: 4 tasks of 8). Unlike a hash repartition
     on the key, this exchange is never dropped as redundant with a
     bucketed scan's partitioning."""
     tasks = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
@@ -175,13 +195,21 @@ def _by_bucket(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
 
 def _save_bucketed(
     df: DataFrame, table: str, part_cols: list[str], key: str, sort_col: str,
-    n_buckets: int, mode: str,
+    n_buckets: "int | None", mode: str,
 ) -> None:
     """``saveAsTable`` partitioned by ``part_cols``, bucketed by ``key``
     and sorted by (``key``, ``sort_col``), each bucket written by one
     task: one file per (partition, bucket). A new table stores
-    :data:`AT_REST_OPTIONS` as its ``OPTIONS``; an append keeps the
-    existing table's."""
+    :data:`AT_REST_OPTIONS` as its ``OPTIONS`` and gets ``n_buckets``
+    buckets (:func:`default_buckets` when None); an append keeps the
+    existing table's options and bucket count (Spark rejects an append
+    with another bucket spec)."""
+    spark = df.sparkSession
+    cur = _table_num_buckets(spark, table) if mode == "append" else None
+    if cur is not None:
+        n_buckets = cur
+    elif n_buckets is None:
+        n_buckets = default_buckets(spark)
     (
         _by_bucket(df, key, n_buckets)
         .write.mode(mode)
@@ -200,7 +228,8 @@ def append_samples(
     """Ingest-path append (the in-memory-part flush analog,
     lib/storage/partition.go:42). Adopts the EXISTING table's bucket
     spec (Spark rejects appends with a mismatched one); ``n_buckets``
-    only applies when the table doesn't exist yet. Appends create extra
+    only applies when the table doesn't exist yet, and None then means
+    :func:`default_buckets`. Appends create extra
     files per bucket; run :func:`compact_samples_table` periodically to
     restore the one-file-per-(date, bucket) invariant.
 
@@ -210,18 +239,7 @@ def append_samples(
     defaults (snappy, dictionary ``ts``) for its appends and merges
     until a full rewrite (``compact_samples_table(full=True)``) creates
     it anew with :data:`AT_REST_OPTIONS`."""
-    spark = samples.sparkSession
-    cur = None
-    try:
-        cur = _table_num_buckets(spark, table)
-    except Exception:
-        pass
-    write_samples_table(
-        samples,
-        table,
-        n_buckets=cur or n_buckets or DEFAULT_BUCKETS,
-        mode="append",
-    )
+    write_samples_table(samples, table, n_buckets=n_buckets, mode="append")
 
 
 def read_samples_table(
@@ -390,13 +408,18 @@ def delete_series(
 
 
 def _table_num_buckets(spark: SparkSession, table: str) -> int | None:
-    for r in spark.sql(f"DESCRIBE EXTENDED {table}").collect():
-        if r["col_name"] == "Num Buckets":
-            try:
-                return int(r["data_type"])
-            except (TypeError, ValueError):
-                return None
-    return None
+    """The bucket count in ``table``'s catalog entry; None when no such
+    table exists or it is not bucketed. Read from the session catalog's
+    metadata: about 2 ms warm on a 4-core host, where ``DESCRIBE
+    EXTENDED`` builds and collects a frame in 33-50 ms. The SQL parser
+    resolves a db-qualified or quoted name."""
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(table)
+    catalog = state.catalog()
+    if not catalog.tableExists(ident):
+        return None
+    spec = catalog.getTableMetadata(ident).bucketSpec()
+    return spec.get().numBuckets() if spec.isDefined() else None
 
 
 _BUCKET_FILE_RE = re.compile(r"_(\d{5})\.")
@@ -525,7 +548,7 @@ def _rewrite_partitions(
 def _compact_full(
     spark: SparkSession,
     table: str,
-    n_buckets: int,
+    n_buckets: "int | None",
     dedup_interval_ms: int,
     downsample_rules: "list | None" = None,
     now_ms: "int | None" = None,
@@ -556,7 +579,7 @@ def _compact_full(
 def compact_samples_table(
     spark: SparkSession,
     table: str,
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: "int | None" = None,
     dedup_interval_ms: int = 0,
     dates: "list | None" = None,
     full: bool = False,
@@ -586,11 +609,14 @@ def compact_samples_table(
     or date); a tombstone is cleared only once EVERY partition holding
     its dead rows has been rewritten — a partial compact leaves it in
     place, exactly like VM keeps deleted metricIDs until the last
-    affected part is merged. ``full=True`` (or changing ``n_buckets``)
-    forces the old whole-table rewrite."""
+    affected part is merged. ``full=True`` (or an ``n_buckets`` other
+    than the table's) forces the old whole-table rewrite; None keeps the
+    table's bucket count."""
     cur = _table_num_buckets(spark, table)
     scan = spark.table(table)
     part_cols = [c for c in ("tenant", "date") if c in scan.columns]
+    if n_buckets is None:
+        n_buckets = cur
     if full or cur is None or cur != n_buckets or not part_cols:
         _compact_full(
             spark,
@@ -1198,7 +1224,6 @@ def maintain_samples_table(
             compact_samples_table(
                 spark,
                 table,
-                n_buckets=cur,
                 dedup_interval_ms=dedup_interval_ms,
                 dates=compact_dates,
                 downsample_rules=downsample_rules,
@@ -1271,7 +1296,7 @@ def write_logs_table(
     logs: DataFrame,
     table: str,
     stream_fields: list[str] | None = None,
-    n_buckets: int = DEFAULT_BUCKETS,
+    n_buckets: "int | None" = None,
     mode: str = "overwrite",
 ) -> None:
     """Day-partitioned, stream-bucketed LogsQL log table — the log
@@ -1290,7 +1315,9 @@ def write_logs_table(
     column first (pipes.set_stream_fields); otherwise the frame must
     already carry one. A ``tenant`` column (VictoriaLogs AccountID/
     ProjectID headers) becomes the leading partition directory, like
-    the samples table.
+    the samples table. Bucket counts as in :func:`write_samples_table`:
+    ``n_buckets``, else :func:`default_buckets`, for a new table; an
+    append keeps the table's.
     """
     from victoriametrics_spark.logsql import pipes as _pipes
 
