@@ -32,17 +32,20 @@ def default_parallelism() -> int:
 def get_spark(app_name: str = "victoriametrics-spark") -> SparkSession:
     """Build (or fetch) the session.
 
-    On a real cluster the master/deploy settings come from spark-submit;
-    everything configured here is cluster-size independent except
-    ``shuffle.partitions``, which AQE coalesces downward at runtime anyway.
-    It also sets the bucket count of a new samples or logs table, capped
-    at 32 (``storage.layout.default_buckets``).
+    On a real cluster the master/deploy settings come from spark-submit,
+    and everything configured for every session here is cluster-size
+    independent. The local session alone gets its parallelism pinned to
+    the core count: ``default.parallelism`` and ``shuffle.partitions``.
+    A cluster session keeps spark-submit's ``shuffle.partitions`` (Spark's
+    default is 200), which AQE coalesces downward at runtime. The shuffle
+    partitions, capped at 32, are also the bucket count of a new samples
+    or logs table (``storage.layout.default_buckets``): one per core on a
+    local session, 32 under Spark's default on a cluster.
     """
     n = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -88,9 +91,12 @@ def get_spark(app_name: str = "victoriametrics-spark") -> SparkSession:
         # defaults when blocks move between hosts. The default
         # parallelism is set here only: on a cluster it is the executors'
         # core total, which bucketed writes size their tasks by
-        # (storage/layout.py _by_bucket).
+        # (storage/layout.py _by_bucket). So are the shuffle partitions:
+        # the driver's core count says nothing of a cluster's, and they
+        # size a new table's buckets (storage/layout.py default_buckets).
         builder = (
             builder.config("spark.default.parallelism", str(n))
+            .config("spark.sql.shuffle.partitions", str(n))
             .config("spark.shuffle.compress", "false")
             .config("spark.shuffle.spill.compress", "false")
             .config("spark.locality.wait", "0s")

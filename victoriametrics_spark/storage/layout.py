@@ -25,10 +25,10 @@ bucket).
 A new table gets :func:`default_buckets` buckets unless the caller
 names a count: the session's shuffle parallelism, capped at 32. On a
 local session that is one bucket per core, so a bucketed read is one
-wave of tasks and each write task writes one bucket file; a session of
-32 or more shuffle partitions gets 32. The count is fixed when the
-table is created: appends, merges, compactions and partition rewrites
-keep it.
+wave of tasks and each write task writes one bucket file; a cluster
+session under Spark's default of 200 shuffle partitions gets 32. The
+count is fixed when the table is created: appends, merges, compactions
+and partition rewrites keep it.
 
 Compaction (the LSM merge analog, lib/storage/merge.go) rewrites a table
 back to one file per (date, bucket), optionally applying last-wins
@@ -60,9 +60,10 @@ def default_buckets(spark: SparkSession) -> int:
     """Bucket count of a new samples or logs table:
     ``min(32, spark.sql.shuffle.partitions)``. Shuffle partitions rather
     than executor cores: the setting stays put under dynamic allocation,
-    and every other exchange of the engine already fans out to it
-    (:func:`~victoriametrics_spark.session.get_spark` sets it to the
-    local core count)."""
+    and every other exchange of the engine already fans out to it.
+    :func:`~victoriametrics_spark.session.get_spark` sets it to the core
+    count on a local session only; a cluster session keeps
+    spark-submit's value, 200 by default."""
     return min(32, int(spark.conf.get("spark.sql.shuffle.partitions")))
 
 
@@ -410,9 +411,7 @@ def delete_series(
 def _table_num_buckets(spark: SparkSession, table: str) -> int | None:
     """The bucket count in ``table``'s catalog entry; None when no such
     table exists or it is not bucketed. Read from the session catalog's
-    metadata: about 2 ms warm on a 4-core host, where ``DESCRIBE
-    EXTENDED`` builds and collects a frame in 33-50 ms. The SQL parser
-    resolves a db-qualified or quoted name."""
+    metadata; the SQL parser resolves a db-qualified or quoted name."""
     state = spark._jsparkSession.sessionState()
     ident = state.sqlParser().parseTableIdentifier(table)
     catalog = state.catalog()
