@@ -3595,11 +3595,10 @@ GROUP BY 1, 2""",
 
 
 def _ingest_influx_escapes(spark, sf_dir):
-    """Influx line-protocol round-trip exercising BOTH parser paths:
-    escape-bearing lines (\\, and \\  in the tag value → the Arrow
-    slow path, influx/parser.go:322-353) and escape-free lines (the
-    Catalyst fast path), plus an i-suffixed integer field and skipped
-    poison lines."""
+    """Influx line-protocol round-trip through the one per-line decode:
+    escape-bearing lines (\\, and \\  in the tag value,
+    influx/parser.go:322-353) beside escape-free lines, plus an
+    i-suffixed integer field and skipped poison lines."""
     from victoriametrics_spark.sources.tables import load_table
     from victoriametrics_spark.streaming.parsers import parse_influx
 

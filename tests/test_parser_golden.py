@@ -21,7 +21,6 @@ from victoriametrics_spark.streaming.parsers import (
     parse_graphite,
     parse_influx,
     parse_opentsdb,
-    parse_prometheus_lines,
     parse_prometheus_text,
 )
 
@@ -127,9 +126,7 @@ _DIALECTS = {
     ),
     # the same corpus through the driver-side decode of an import body
     "prometheus-driver": (
-        lambda spark, text: parse_prometheus_lines(
-            spark, text.split("\n"), DEF_MS
-        ),
+        lambda spark, text: parse_prometheus_text(text.split("\n"), DEF_MS),
         _exp_prometheus,
     ),
     "graphite": (
@@ -139,6 +136,12 @@ _DIALECTS = {
     "influx": (
         lambda spark, text: parse_influx(
             _lines(spark, text), default_ts_ms=DEF_MS
+        ),
+        _exp_influx,
+    ),
+    "influx-driver": (
+        lambda spark, text: parse_influx(
+            text.split("\n"), default_ts_ms=DEF_MS
         ),
         _exp_influx,
     ),

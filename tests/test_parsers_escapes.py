@@ -16,6 +16,7 @@ import math
 import pytest
 
 from victoriametrics_spark.streaming.parsers import (
+    parse_csv_lines,
     parse_graphite,
     parse_influx,
     parse_opentsdb,
@@ -127,46 +128,6 @@ def test_prom_junk_after_timestamp_rejected(spark):
     )
     got = sorted((r["name"], r["value"]) for r in out)
     assert got == [("alsook", 9.0), ("ok", 7.0)]
-
-
-def test_prom_driver_decode_matches_executor_decode(spark, monkeypatch):
-    """An import body decoded on the driver parses exactly like the same
-    lines decoded on the executors, escapes and poison lines included;
-    a body above the line limit goes to the executors."""
-    from victoriametrics_spark.streaming import parsers as P
-
-    rows = [
-        'm{msg="a}b",path="/a,b"} 2 1000',
-        'm2{a="c\\"d",b="e\\\\f",c="g\\nh"} 9',
-        '{"metric name", "l b"="v,2"} 3 5',
-        'a{x="1"} +Inf 1',
-        "d nan 1",
-        "m   7.5",
-        " \tn{a=\"b\"}   8   1234\r",
-        'bad{x="y} oops',
-        "m notanumber 1000",
-        "{} 5 5",
-        'm{a="b"} 1 2 3',
-        "# HELP m help",
-        "",
-    ]
-
-    def got(df):
-        return sorted(
-            (r["name"], sorted(r["labels"].items()), r["ts"], repr(r["value"]))
-            for r in df.collect()
-        )
-
-    executors = parse_prometheus_text(_lines(spark, rows), 5000)
-    driver = P.parse_prometheus_lines(spark, rows, 5000)
-    assert driver.schema == executors.schema
-    want = got(executors)
-    assert len(want) == 7
-    assert got(driver) == want
-    monkeypatch.setattr(P, "DRIVER_DECODE_MAX_LINES", 0)
-    assert got(P.parse_prometheus_lines(spark, rows, 5000)) == want
-    monkeypatch.undo()
-    assert P.parse_prometheus_lines(spark, [""], 5000).collect() == []
 
 
 def test_prom_multiple_spaces_and_default_ts(spark):
@@ -286,7 +247,7 @@ def test_influx_ts_autodetect_magnitudes(spark):
     for raw, want in cases:
         by, _ = _influx(spark, [f"m f=1 {raw}"])
         assert by["m_f"]["ts"] == want, raw
-        # and through the escaped slow path too
+        # and with an escaped tag too
         by2, _ = _influx(spark, [f"m,h=a\\ b f=1 {raw}"])
         assert by2["m_f"]["ts"] == want, raw
 
@@ -316,7 +277,7 @@ def test_influx_poison_lines_do_not_kill_batch(spark):
 def test_influx_default_ts(spark):
     by, _ = _influx(spark, ["m f=1"], default_ts_ms=777)
     assert by["m_f"]["ts"] == 777
-    # escape-bearing line goes through the slow path; same default
+    # an escape-bearing line takes the same default
     by2, _ = _influx(spark, ["m,h=a\\ b f=1"], default_ts_ms=778)
     assert by2["m_f"]["ts"] == 778
 
@@ -396,6 +357,145 @@ def test_opentsdb_poison_lines_do_not_kill_batch(spark):
     assert set(by) == {"m", "ok2"}
     assert by["m"]["ts"] == 1700000000000
     assert by["ok2"]["labels"] == {"q": "a=b"}
+
+
+# ------------------------------------------- driver and executor decodes
+_DRIVER_CASES = {
+    "prometheus": (
+        lambda lines: parse_prometheus_text(lines, 5000),
+        [
+            'm{msg="a}b",path="/a,b"} 2 1000',
+            'm2{a="c\\"d",b="e\\\\f",c="g\\nh"} 9',
+            '{"metric name", "l b"="v,2"} 3 5',
+            'a{x="1"} +Inf 1',
+            "d nan 1",
+            "m   7.5",
+            " \tn{a=\"b\"}   8   1234\r",
+            'bad{x="y} oops',
+            "m notanumber 1000",
+            "{} 5 5",
+            'm{a="b"} 1 2 3',
+            "# HELP m help",
+            "",
+        ],
+        7,
+    ),
+    "influx": (
+        lambda lines: parse_influx(lines, 5000, keep_line_id=True),
+        [
+            "cpu,host=a\\,b usage=1.5 1000000000",
+            "mem,host=web\\ server used=2",
+            'm,h=a sval="12.5",msg="hello, world",n=3i 2000000000',
+            "m b1=t,b2=False,u=7u,i=-3i 1000000",
+            ",h=a f=1 1000000",
+            "m,q=a=b f=1",
+            "bad,h=a f=oops 1000000",
+            "tsbad,h=a f=2 notanumber",
+            "# comment",
+            "",
+        ],
+        11,
+    ),
+    "csv": (
+        lambda lines: parse_csv_lines(lines, 3),
+        [
+            '"h1,x",2.5,1704067200000',
+            "'h2''y',3.5,1704067260000",
+            '"unclosed,1.0,1704067200000',
+            "h4,notanum,1704067200000",
+            "h5,,1704067200000",
+            "short,1",
+            "a,b,c,d",
+            "",
+        ],
+        7,
+    ),
+}
+
+
+def _plain(df):
+    """Collected rows, order- and line-id-free: map values as sorted
+    items, floats by repr (NaN compares equal), plus the number of
+    distinct line ids."""
+    ids = (
+        df.select("__line_id").distinct().count()
+        if "__line_id" in df.columns
+        else None
+    )
+
+    def cell(v):
+        return sorted(v.items()) if isinstance(v, dict) else repr(v)
+
+    rows = df.drop("__line_id").collect()
+    return sorted(tuple(cell(v) for v in r) for r in rows), ids
+
+
+@pytest.mark.parametrize("dialect", sorted(_DRIVER_CASES))
+def test_driver_decode_matches_executor_decode(spark, monkeypatch, dialect):
+    """An import body decoded on the driver parses exactly like the same
+    lines decoded on the executors, escapes and poison lines included;
+    a body above the line limit goes to the executors."""
+    from victoriametrics_spark.streaming import parsers as P
+
+    parse, rows, n_rows = _DRIVER_CASES[dialect]
+    executors = parse(_lines(spark, rows))
+    driver = parse(rows)
+    assert driver.schema == executors.schema
+    want = _plain(executors)
+    assert len(want[0]) == n_rows
+    assert _plain(driver) == want
+    monkeypatch.setattr(P, "DRIVER_DECODE_MAX_LINES", 0)
+    assert _plain(parse(rows)) == want
+    monkeypatch.undo()
+    assert parse([""]).collect() == []
+
+
+def test_influx_value_typing_does_not_depend_on_escapes(spark):
+    """Each field value the reference's parseFieldValue rejects
+    (influx/parser.go:355-398: fastfloat ParseInt64/ParseUint64/Parse
+    take no sign on an unsigned value, no + on an integer, no ``_``, no
+    non-ASCII digit and no type suffix) rejects its line with and
+    without an escape in the tag. An empty tag section (``m, f=1``) is
+    rejected too, as the reference's failure case ``foo,bar=123, 123``
+    implies."""
+    rows = []
+    for v in ["-1u", "+1i", "1_000", "\u0661", "1d", "1f", "1"]:
+        rows += [
+            f"m,t=a f={v} 1700000000000",
+            f"m,t=a\\ b f={v} 1700000000000",
+        ]
+    rows.append("m, f=1 1")
+    want = [("m_f", {"t": "a"}, 1.0), ("m_f", {"t": "a b"}, 1.0)]
+    for lines in (rows, _lines(spark, rows)):
+        got = [
+            (r["name"], r["labels"], r["value"])
+            for r in parse_influx(lines, 0).collect()
+        ]
+        assert sorted(got, key=repr) == sorted(want, key=repr)
+
+
+@pytest.mark.parametrize("dialect", ["prometheus", "influx", "csv"])
+def test_java_type_suffix_is_not_a_number(spark, dialect):
+    """Spark's cast reads ``1d``/``1F`` as 1.0; Go's float parsers, and
+    so the reference, reject them. ``inf`` still parses, and so does
+    the hex float ``0x1p3``, which Go's strconv.ParseFloat also takes."""
+    values = ["1d", "1D", "1f", "1F", "inf", "0x1p3"]
+    want = {"inf": math.inf, "0x1p3": 8.0}
+    if dialect == "prometheus":
+        out = parse_prometheus_text(
+            [f'm{{v="{v}"}} {v} 1700000000' for v in values], 0
+        ).collect()
+    elif dialect == "influx":
+        out = parse_influx(
+            [f"m,v={v} f={v} 1700000000000" for v in values], 0
+        ).collect()
+    else:
+        ing, captured = _ingest(spark)
+        body = "\n".join(f"{v},{v},1704067200000" for v in values)
+        assert ing.import_csv(body, "1:label:v,2:metric:m,3:time:unix_ms") == 2
+        assert ing.rows_invalid_total["csvimport"] == 4
+        out = captured[-1].collect()
+    assert {r["labels"]["v"]: r["value"] for r in out} == want
 
 
 # ------------------------------------------------- ingest-path accounting

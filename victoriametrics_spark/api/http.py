@@ -3582,7 +3582,7 @@ class IngestAPI:
             return self._write_samples(
                 self._samples_df(samples), extra_labels=extra_labels
             )
-        docs = self.spark.createDataFrame([(body,)], ["value"])
+        docs = P.lines_frame(self.spark, [body])
         return self._write_samples(
             fns[dialect](docs), extra_labels=extra_labels
         )
@@ -3846,12 +3846,10 @@ class IngestAPI:
                 (ln for ln in body.splitlines() if ln.lstrip()[:1] == "#"),
                 tenant=self._metadata_tenant(),
             )
-            df = P.parse_prometheus_lines(
-                self.spark, self._lines(body), default_ts_ms
-            )
+            df = P.parse_prometheus_text(self._lines(body), default_ts_ms)
         elif fmt == "influx":
             df = P.parse_influx(
-                self._lines_df(body),
+                self._lines(body),
                 default_ts_ms=default_ts_ms or self._now_ms(),
                 keep_line_id=True,
                 precision=precision,
@@ -3957,7 +3955,7 @@ class IngestAPI:
             (ln for ln in body.splitlines() if ln.lstrip()[:1] == "#"),
             tenant=self._metadata_tenant(),
         )
-        df = P.parse_prometheus_lines(self.spark, self._lines(body), ts_ms)
+        df = P.parse_prometheus_text(self._lines(body), ts_ms)
         # a malformed exposition line in a scrape body drops that line
         # only — never the whole scrape (scrapework.go keeps the rest)
         df, n_rows = self._count_invalid_lines(
@@ -4060,15 +4058,14 @@ class IngestAPI:
             parse_csv_lines,
         )
 
-        lines = self._lines_df(body)
         # quote-aware split (csvimport/scanner.go: "-/'-quoted fields,
         # doubled-quote escapes); __bad marks scanner/column-count
         # failures, which skip-and-count the LINE (parser.go:172-198)
-        # checkpoint the raw parsed columns FIRST: try_to_timestamp
-        # fails to resolve over the fast/slow union plan (the same
-        # Spark analysis corner as the transform-struct field names),
-        # and the invalid-count below re-reads this frame anyway
-        df = parse_csv_lines(lines, max_pos).localCheckpoint(eager=True)
+        # checkpoint the parsed columns once: the invalid-line count
+        # and the write below both read this frame
+        df = parse_csv_lines(self._lines(body), max_pos).localCheckpoint(
+            eager=True
+        )
         tc = F.col(f"c{ts_col}") if ts_col is not None else None
         if ts_col is None:
             # no time column: rows take the ingest time, like the
