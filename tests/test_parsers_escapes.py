@@ -450,6 +450,28 @@ def test_driver_decode_matches_executor_decode(spark, monkeypatch, dialect):
     assert parse([""]).collect() == []
 
 
+def test_csv_body_stays_on_driver_past_line_limit(spark, monkeypatch):
+    """A CSV line costs the driver about a tenth of a Prometheus or
+    Influx line, so a CSV body four times the line limit is still
+    decoded on the driver, while a Prometheus or Influx body one line over the
+    limit goes to the executors."""
+    from victoriametrics_spark.streaming import parsers as P
+
+    monkeypatch.setattr(P, "DRIVER_DECODE_MAX_LINES", 2)
+
+    def on_executors(df):
+        return "MapInPandas" in df._jdf.queryExecution().analyzed().toString()
+
+    assert not on_executors(P.parse_csv_lines(["a,1"] * 8, 2))
+    assert on_executors(P.parse_csv_lines(["a,1"] * 9, 2))
+    for parse, line in (
+        (lambda ls: P.parse_prometheus_text(ls, 0), "m 1 1"),
+        (lambda ls: P.parse_influx(ls, 0), "m f=1 1"),
+    ):
+        assert not on_executors(parse([line] * 2))
+        assert on_executors(parse([line] * 3))
+
+
 def test_influx_value_typing_does_not_depend_on_escapes(spark):
     """Each field value the reference's parseFieldValue rejects
     (influx/parser.go:355-398: fastfloat ParseInt64/ParseUint64/Parse

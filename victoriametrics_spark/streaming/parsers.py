@@ -12,9 +12,9 @@ and streaming ingest. The Prometheus, Influx and CSV dialects split and
 unescape each line once in Python (:func:`_decode`, an Arrow
 ``mapInPandas``); Catalyst then types the values, builds the labels map
 and drops bad lines. Those three also take the lines of an HTTP import
-body as a list: a body of up to :data:`DRIVER_DECODE_MAX_LINES` lines is
-decoded on the driver, which already holds it, by the same per-line
-decode.
+body as a list: a body of up to :data:`DRIVER_DECODE_MAX_LINES` lines
+(four times that for CSV, whose lines cost a tenth) is decoded on the
+driver, which already holds it, by the same per-line decode.
 
 Robustness contract (round 11, mirroring
 lib/protoparser/prometheus/parser.go:21-49 errLogger-and-skip): a
@@ -61,11 +61,14 @@ def _try_double(c: Column) -> Column:
     (``1d``, ``1F``), which Spark's cast takes and Go's float parsers
     reject, are garbage too."""
     t = F.trim(c)
+    # the suffix test is an rlike because its generated code is small:
+    # callers inline this CASE up to ten times per row, and a substr/IN
+    # test there doubled the time to finish 48k Prometheus lines
     norm = (
         F.when(t.rlike(r"^(?i)\+?(inf|infinity)$"), F.lit("Infinity"))
         .when(t.rlike(r"^(?i)-(inf|infinity)$"), F.lit("-Infinity"))
         .when(t.rlike(r"^(?i)[+-]?nan$"), F.lit("NaN"))
-        .when(t.substr(-1, 1).isin("d", "D", "f", "F"), F.lit(None))
+        .when(t.rlike(r"[dDfF]$"), F.lit(None))
         .otherwise(t)
     )
     return norm.try_cast("double")
@@ -185,9 +188,12 @@ def parse_graphite(
 # already holds them, and reach Spark as Arrow batches: no Python worker
 # runs. On a 4-core host a 2000-line body then parses and counts in
 # about 0.15 s, against 0.5 s through four Python workers. The driver
-# decodes a line in about 17 us, so from some 25k lines on the
-# executors' parallel decode is faster.
-DRIVER_DECODE_MAX_LINES = 25_000
+# decodes an Influx line in 25-35 us (with escapes the more) and a
+# Prometheus line in 18 us; an HTTP import of either takes as long on
+# the driver as on the executors at some 8k-16k lines, so the limit
+# sits between. CSV lines cost the driver a tenth of that and take a
+# larger limit (:func:`parse_csv_lines`).
+DRIVER_DECODE_MAX_LINES = 12_000
 
 
 def lines_frame(spark, lines: list) -> DataFrame:
@@ -200,17 +206,27 @@ def lines_frame(spark, lines: list) -> DataFrame:
 
 
 def _decode(
-    lines: "DataFrame | list", decode, schema: str, line_id: bool = False
+    lines: "DataFrame | list",
+    decode,
+    schema: str,
+    line_id: bool = False,
+    max_lines: "int | None" = None,
 ) -> DataFrame:
     """Run a per-line ``decode`` (pandas frame with a ``value`` column,
     and ``__line_id`` when ``line_id`` is set → pandas frame of
     ``schema``) over ``lines``. A list the driver holds is decoded right
-    here when it has at most :data:`DRIVER_DECODE_MAX_LINES` lines and
-    reaches the active session as Arrow batches; a larger list, and a
-    DataFrame, decode on the executors in ``mapInPandas``."""
+    here when it has at most ``max_lines`` lines (by default
+    :data:`DRIVER_DECODE_MAX_LINES`) and reaches Spark as Arrow
+    batches; a larger list, and a DataFrame, decode on the executors in
+    ``mapInPandas``. A list becomes a frame of the session active on the
+    calling thread (``SparkSession.active()``); a caller that must pin
+    another session passes a DataFrame of that session, such as
+    :func:`lines_frame` builds."""
     if not isinstance(lines, DataFrame):
         spark = SparkSession.active()
-        if len(lines) <= DRIVER_DECODE_MAX_LINES:
+        if max_lines is None:
+            max_lines = DRIVER_DECODE_MAX_LINES
+        if len(lines) <= max_lines:
             import pandas as pd
 
             pdf = pd.DataFrame({"value": lines}, dtype="object")
@@ -812,7 +828,14 @@ def parse_csv_lines(lines: "DataFrame | list", max_pos: int) -> DataFrame:
     scanner's quoting rules (:func:`_csv_fields`). A line with a
     malformed quoted field or fewer than ``max_pos`` columns sets
     ``__bad`` (the reference skips-and-counts it, parser.go:172-198)."""
-    decoded = _decode(lines, _csv_decoded_frame, "fields array<string>")
+    # the driver splits a CSV line in 2-3 us, and a CSV import stays
+    # faster there than on the executors up to some 50k lines
+    decoded = _decode(
+        lines,
+        _csv_decoded_frame,
+        "fields array<string>",
+        max_lines=4 * DRIVER_DECODE_MAX_LINES,
+    )
     f = F.col("fields")
     return decoded.select(
         *[
